@@ -16,8 +16,7 @@ previous consecutive-N-samples-per-query layout let a host-load ramp
 land entirely on whichever query was in flight (r12's semantic_dedup
 swung 6.9->18.0 s across four same-code measurements); round-robin
 spreads any ramp across the whole suite, so host load biases the suite
-TOTAL but not individual per-query medians -- which is what the
-tools/ab_bench.py residual band assumes.  The cold/warm split itself
+TOTAL but not individual per-query medians.  The cold/warm split itself
 is older (VERDICT r4 item 5: at n=2 a single cold run dominated the
 median for every Arrow-path query).  The headline ``value`` is the
 warm-median suite total.  Key order is deliberate (VERDICT r5 item 3):
@@ -458,7 +457,7 @@ def main() -> None:
     # events/min, docs/performance_metrics.md:112); warm events/s is
     # the round-over-round-stable metric on this shared host (suite
     # totals swing +/-50% with host load -- adjudicate any total drift
-    # with tools/ab_bench.py, not by eye).
+    # with perfbench/compare.py, not by eye).
     ev = stream.get("streaming_events_per_sec")
     if ev:
         cold_ev = stream_cold.get("streaming_events_per_sec")
@@ -478,14 +477,13 @@ def main() -> None:
             # measured 4,972 / 1,052.8 / 1,123.8 ev/s within hours on
             # this shared host -- a 4x spread invisible to loadavg
             # (CPU steal).  Warm ev/s is therefore NOT comparable
-            # round-over-round by eye; adjudicate any drift with the
-            # control-cohort protocol (tools/ab_bench.py), which
-            # normalizes by a cohort of byte-identical queries.
+            # round-over-round by eye; adjudicate any drift with
+            # perfbench/compare.py's alternated parent/change pairs.
             "caveat": (
                 "warm ev/s swings up to 4x run-to-run on identical "
                 "code (shared-host CPU steal, invisible to loadavg); "
-                "compare rounds only via tools/ab_bench.py "
-                "control-cohort residuals, never by eye"
+                "compare commits only via perfbench/compare.py "
+                "alternated pairs, never by eye"
             ),
         }
     print(json.dumps(out))

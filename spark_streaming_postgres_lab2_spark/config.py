@@ -1,9 +1,12 @@
 """Environment-driven configuration (reference parity: config/settings.py).
 
 The reference drives every subsystem off env vars with validated
-dataclasses (reference config/settings.py:13-230).  Same surface here,
-with Spark-native additions (shuffle partitions, AQE) instead of
-Postgres connection pools.
+dataclasses (reference config/settings.py:13-230).  Same pattern here
+for every setting the engine applies, with Spark-native additions
+(shuffle partitions, AQE) instead of Postgres connection pools.  The
+reference's quality-threshold and retry sections have no env twin: the
+pipeline builds ``PipelineMonitor()`` and ``database_retry_policy()``,
+so those defaults are the one place their values live.
 """
 
 from __future__ import annotations
@@ -20,13 +23,6 @@ def _env(name: str, default: str) -> str:
 def _env_int(name: str, default: int) -> int:
     try:
         return int(os.environ.get(name, default))
-    except (TypeError, ValueError):
-        return default
-
-
-def _env_float(name: str, default: float) -> float:
-    try:
-        return float(os.environ.get(name, default))
     except (TypeError, ValueError):
         return default
 
@@ -106,40 +102,6 @@ class StreamingConfig:
 
 
 @dataclass
-class QualityConfig:
-    """Data-quality thresholds (reference settings.py quality section)."""
-
-    min_validity_rate: float = field(default_factory=lambda: _env_float("QUALITY_MIN_VALIDITY_RATE", 0.95))
-    max_latency_seconds: float = field(default_factory=lambda: _env_float("QUALITY_MAX_LATENCY_SECONDS", 10.0))
-    error_concentration_threshold: float = field(
-        default_factory=lambda: _env_float("QUALITY_ERROR_CONCENTRATION", 0.10)
-    )
-    consecutive_breaches_for_escalation: int = field(
-        default_factory=lambda: _env_int("QUALITY_ESCALATION_BREACHES", 3)
-    )
-    rolling_window_size: int = field(default_factory=lambda: _env_int("QUALITY_WINDOW_SIZE", 100))
-
-    def to_dict(self) -> dict[str, Any]:
-        return asdict(self)
-
-
-@dataclass
-class RetryConfig:
-    """Retry/backoff settings (reference settings.py retry section)."""
-
-    max_retries: int = field(default_factory=lambda: _env_int("RETRY_MAX_RETRIES", 3))
-    initial_delay: float = field(default_factory=lambda: _env_float("RETRY_INITIAL_DELAY", 1.0))
-    backoff_factor: float = field(default_factory=lambda: _env_float("RETRY_BACKOFF_FACTOR", 2.0))
-    max_delay: float = field(default_factory=lambda: _env_float("RETRY_MAX_DELAY", 60.0))
-    circuit_failure_threshold: int = field(default_factory=lambda: _env_int("CIRCUIT_FAILURE_THRESHOLD", 5))
-    circuit_recovery_seconds: float = field(default_factory=lambda: _env_float("CIRCUIT_RECOVERY_SECONDS", 30.0))
-    circuit_success_threshold: int = field(default_factory=lambda: _env_int("CIRCUIT_SUCCESS_THRESHOLD", 3))
-
-    def to_dict(self) -> dict[str, Any]:
-        return asdict(self)
-
-
-@dataclass
 class SparkConfig:
     """Spark session tuning. Sized for local[N]; at cluster scale the
     same knobs are what you would tune per-job (shuffle partitions ~
@@ -192,21 +154,11 @@ class EngineConfig:
 
     database: DatabaseConfig = field(default_factory=DatabaseConfig)
     streaming: StreamingConfig = field(default_factory=StreamingConfig)
-    quality: QualityConfig = field(default_factory=QualityConfig)
-    retry: RetryConfig = field(default_factory=RetryConfig)
     spark: SparkConfig = field(default_factory=SparkConfig)
 
     def validate(self) -> list[str]:
         """Return a list of config problems (empty == valid)."""
         problems: list[str] = []
-        if not (0.0 <= self.quality.min_validity_rate <= 1.0):
-            problems.append("quality.min_validity_rate must be in [0, 1]")
-        if self.quality.max_latency_seconds <= 0:
-            problems.append("quality.max_latency_seconds must be positive")
-        if self.retry.max_retries < 0:
-            problems.append("retry.max_retries must be >= 0")
-        if self.retry.backoff_factor < 1.0:
-            problems.append("retry.backoff_factor must be >= 1")
         if self.streaming.trigger_seconds <= 0:
             problems.append("streaming.trigger_seconds must be positive")
         if self.database.batch_size <= 0:
@@ -219,8 +171,6 @@ class EngineConfig:
         return {
             "database": self.database.to_dict(),
             "streaming": self.streaming.to_dict(),
-            "quality": self.quality.to_dict(),
-            "retry": self.retry.to_dict(),
             "spark": self.spark.to_dict(),
         }
 

@@ -535,29 +535,6 @@ def minhash_signature_from_hashes(hash_col: Column, num_hashes: int = 32) -> Col
     )
 
 
-def minhash_signature(text_col: Column | str, num_hashes: int = 32, shingle_n: int = 3) -> Column:
-    """MinHash signature straight from text.  NOTE: inside a single
-    projection Catalyst may recompute the shingle pass per hash --
-    prefer materializing ``shingle_hashes`` in its own column first
-    (as minhash_near_dupes does)."""
-    return minhash_signature_from_hashes(shingle_hashes(text_col, shingle_n), num_hashes)
-
-
-def lsh_band_keys(sig_col: Column, num_bands: int = 8, rows_per_band: int = 4) -> Column:
-    """Band the signature: array of (band_idx, xxhash64(band rows))."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.element_at(sig_col, b * rows_per_band + r + 1) for r in range(rows_per_band)]
-                ).alias("band_hash"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-
-
 def jaccard_tokens(a: Column, b: Column) -> Column:
     """Exact Jaccard over distinct token sets."""
     da, db = F.array_distinct(a), F.array_distinct(b)

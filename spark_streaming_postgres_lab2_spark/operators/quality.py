@@ -4,10 +4,10 @@ Parity target: reference ``calculate_quality_metrics``
 (spark_streaming_to_postgres.py:239-276), which issues ~10 separate
 actions per batch (count, per-column null counts, late count, groupBy
 collect, plus two more counts in the writer M:384-385).  Same observable
-metrics here, but computed as a single ``agg`` over ``sum(when(...))``
-expressions plus one small groupBy -- two jobs instead of ten, and the
-heavy one is a single scan with map-side partial aggregation.  At 100 TB
-that difference is 5x fewer full-table scans per batch.
+metrics here, but computed as ONE grouped aggregation of
+``sum(when(...))`` expressions -- one action instead of ten, a single
+scan with map-side partial aggregation whose output is one row per
+(event_type, validation_errors) pair.
 """
 
 from __future__ import annotations
@@ -52,65 +52,63 @@ def _count_if(cond) -> F.Column:  # type: ignore[name-defined]
     return F.sum(F.when(cond, 1).otherwise(0))
 
 
-def quality_metrics_agg(df: DataFrame, null_check_columns: list[str]) -> DataFrame:
-    """The single-pass aggregation: total / valid / invalid / late /
-    per-column nulls as one row. Usable in batch or inside foreachBatch."""
-    aggs = [
-        F.count(F.lit(1)).alias("total_rows"),
-        _count_if(F.col("is_valid")).alias("valid_rows"),
-        _count_if(~F.col("is_valid")).alias("invalid_rows"),
-    ]
-    if "is_late_arrival" in df.columns:
-        aggs.append(_count_if(F.col("is_late_arrival")).alias("late_arrival_count"))
-    else:
-        aggs.append(F.lit(0).cast("bigint").alias("late_arrival_count"))
-    for c in null_check_columns:
-        aggs.append(_count_if(F.col(c).isNull()).alias(f"null_{c}"))
-    return df.agg(*aggs)
-
-
 def calculate_quality_metrics(
     df: DataFrame,
     batch_id: int = 0,
     null_check_columns: list[str] | None = None,
 ) -> BatchQualityMetrics:
-    """Compute the full reference metric set in two jobs.
+    """Compute the full reference metric set in one action.
 
     ``df`` must already carry ``is_valid`` (and optionally
-    ``is_late_arrival`` / ``validation_errors``).
+    ``is_late_arrival`` / ``validation_errors``).  One grouped
+    aggregation per (event_type, validation_errors) carries every
+    count; the driver sums the few group rows into the totals and
+    reads both distributions off the group keys.
     """
     null_cols = [
         c
         for c in (null_check_columns or ["user_id", "session_id", "category", "quantity"])
         if c in df.columns
     ]
-    row = quality_metrics_agg(df, null_cols).first()
-    if row is None or row["total_rows"] in (None, 0):
+    keys = ["event_type"] + (["validation_errors"] if "validation_errors" in df.columns else [])
+    late = (
+        _count_if(F.col("is_late_arrival"))
+        if "is_late_arrival" in df.columns
+        else F.lit(0).cast("bigint")
+    )
+    groups = (
+        df.groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("total_rows"),
+            _count_if(F.col("is_valid")).alias("valid_rows"),
+            _count_if(~F.col("is_valid")).alias("invalid_rows"),
+            late.alias("late_arrival_count"),
+            *[_count_if(F.col(c).isNull()).alias(f"null_{c}") for c in null_cols],
+        )
+        .collect()
+    )
+    if not groups:
         return BatchQualityMetrics(batch_id, 0, 0, 0, 0)
 
-    dist_rows = (
-        df.groupBy("event_type", "validation_errors")
-        .count()
-        .collect()
-        if "validation_errors" in df.columns
-        else df.groupBy("event_type").count().withColumn("validation_errors", F.lit(None)).collect()
-    )
+    def total(col: str) -> int:
+        return sum(int(r[col]) for r in groups)
+
     event_dist: dict[str, int] = {}
     error_dist: dict[str, int] = {}
-    for r in dist_rows:
+    for r in groups:
         et = r["event_type"] if r["event_type"] is not None else "null"
-        event_dist[et] = event_dist.get(et, 0) + r["count"]
-        if r["validation_errors"] is not None:
-            tag = r["validation_errors"]
-            error_dist[tag] = error_dist.get(tag, 0) + r["count"]
+        event_dist[et] = event_dist.get(et, 0) + r["total_rows"]
+        tag = r["validation_errors"] if "validation_errors" in keys else None
+        if tag is not None:
+            error_dist[tag] = error_dist.get(tag, 0) + r["total_rows"]
 
     return BatchQualityMetrics(
         batch_id=batch_id,
-        total_rows=int(row["total_rows"]),
-        valid_rows=int(row["valid_rows"] or 0),
-        invalid_rows=int(row["invalid_rows"] or 0),
-        late_arrival_count=int(row["late_arrival_count"] or 0),
-        null_counts={c: int(row[f"null_{c}"] or 0) for c in null_cols},
+        total_rows=total("total_rows"),
+        valid_rows=total("valid_rows"),
+        invalid_rows=total("invalid_rows"),
+        late_arrival_count=total("late_arrival_count"),
+        null_counts={c: total(f"null_{c}") for c in null_cols},
         event_type_distribution=event_dist,
         error_distribution=error_dist,
     )

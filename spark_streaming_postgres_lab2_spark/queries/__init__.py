@@ -44,8 +44,7 @@ DRIVER_PRIORITY = [
     # ================= round 16 window =================
     # Tier 0 (slots 1-5): the five r15-born operators -- the ONLY
     # oracles with no driver CORRECTNESS row at all (locally green in
-    # PARITY_r15, listed as r16 tier-0 candidates in the r15 window
-    # note below).  quality_consensus_report ALSO re-stamps this round
+    # PARITY_r15).  quality_consensus_report ALSO re-stamps this round
     # (scale-gated lineage cut), so its slot does double duty.
     "doremi_domain_weights",
     "tokenizer_fertility_audit",
@@ -131,133 +130,6 @@ DRIVER_PRIORITY = [
     "intra_doc_dedup",
     "latest_event_per_user",
 ]
-_DRIVER_PRIORITY_R15 = [
-    # round 15, tier 0 (slots 1-3), exactly the r14 order sheet:
-    # slots 1-2 are the two r14-born operators -- the ONLY 2 of 173
-    # oracles with no driver CORRECTNESS row (VERDICT r14 item 1);
-    # both also re-stamp after their r15 NULL-hardening (ADVICE r14:
-    # unimax NULL-lang/zero-token fold divergence; the similarity
-    # helper's broadcast-candidate bound).  Slot 3 is
-    # quality_classifier_filter, whose inline _md5_bucket copy was
-    # folded into the shared helper THIS round (VERDICT r14 item 2,
-    # third listing) and therefore must re-certify under its new
-    # content stamp.
-    "semantic_decontaminate",
-    "unimax_mix_allocation",
-    "quality_classifier_filter",
-    # round 15 OPTIMIZATION re-stamps (slots 4-5): the LSH verify was
-    # restructured per guide §8 (per-bucket grouped scoring instead of
-    # per-pair vector joins -- ship each vector once per bucket row,
-    # form C(g,2) pairs in numpy); the restructure flips the content
-    # stamps of the two certified queries whose plans route through it,
-    # so they re-certify in-window before anything merely stale does
-    # (the quality_classifier_filter rule).  They displace the two
-    # lowest-ranked (blame-span 0, alphabetical tail) r11-cohort rows,
-    # which rotate in r16 with the rest.
-    "embedding_lsh_near_dup_portable",
-    "semantic_dedup",
-    # round 15, tier 1 (34, slots 4-37): the COMPLETE r11-last-green
-    # cohort -- after the r14 window retired the r10 cohort, these 34
-    # are the stalest driver evidence (last green 4 rounds ago).
-    # Greening all of them advances the minimum last-green round to
-    # r12 (VERDICT r14 item 4).  Ranked by MEASURED cross-module
-    # blame-span width at the r15 head (tools/parity_check.
-    # fn_blame_spans, sum of span lines outside the fn's own module):
-    # multimodal_frames 53, bfs_reachability 44,
-    # doc_rolling_fingerprint 42, doc_quality 35, doc_language 21,
-    # bpe_apply_compression 19, five revenue queries 4, remainder 0
-    # (alphabetical).
-    "multimodal_frames",
-    "bfs_reachability",
-    "doc_rolling_fingerprint",
-    "doc_quality",
-    "doc_language",
-    "bpe_apply_compression",
-    "disjunctive_revenue",
-    "nation_volume",
-    "promo_revenue",
-    "returned_revenue",
-    "small_quantity_revenue",
-    "above_avg_orders",
-    "boilerplate_dedup",
-    "kmeans_cluster_profile",
-    # round 15 OPTIMIZATION re-stamps, second batch (17): queries whose
-    # implementation changed during the optimization phase (single-split
-    # spread + repeated-subtree cuts + broadcast-hinted bounded joins +
-    # the kmeans builder / grouped-verify restructures -- see
-    # OPTIMIZATION_r15.md per-operator log) and which therefore must
-    # re-certify in-window before anything merely stale does (the
-    # quality_classifier_filter rule, same as slots 4-5).  They displace
-    # the 17 lowest-ranked r11-cohort rows (blame-span 0, alphabetical
-    # tail: bpe_merge_candidates, corpus_filter_chain,
-    # customers_without_orders, nation_pairs, order_count_distribution,
-    # order_priority, pii_redaction, quality_percentile_filter,
-    # regional_revenue, snapshot_diff, source_quota_sample,
-    # top_customers, top_parts_per_brand, tpch_q1, tpch_q6,
-    # user_activity, value_percentiles), which rotate in r16 with the
-    # rest of that cohort.
-    "ann_ivf_lossless_audit",
-    "ann_recall_audit",
-    "bm25_search",
-    "canonical_docs",
-    "decontaminate",
-    "duplicate_ngrams",
-    "exact_ngram_decontaminate",
-    "incremental_dedup",
-    "market_basket",
-    "minhash_near_dup",
-    "near_dup_clusters",
-    "simhash_near_dup",
-    "source_overlap_matrix",
-    "substring_dedup_cut",
-    "substring_dedup_cut_fast",
-    "table_profile_events",
-    "tfidf_top_terms",
-    "video_frame_stats",
-    # round 15, tier 2 (12, slots 38-49): the widest-blame-span 9 of
-    # the 37 remaining r12-last-green oracles (quality_classifier_
-    # filter already holds slot 3), same ranking protocol:
-    # doc_repetition 55, salted_nation_revenue 47, similarity_topk 41,
-    # session_path_mining/overlap_pairs/concurrency 19,
-    # multimodal_meta 18, embedding_near_dup/doc_token_stats 10.
-    # The last three slots go to the round's other stamp-flipped
-    # queries instead of more r12 rows -- a changed implementation
-    # re-certifies in-window before anything merely stale does (the
-    # quality_classifier_filter rule): lm_surprisal_filter (its
-    # bigram-LM scoring core was extracted into the
-    # _bigram_bits_scored helper now shared with the new
-    # doremi_domain_weights), dsir_importance_select (its stamp
-    # covers the _md5_bucket helper the fold touched -- the stamp
-    # guard caught this one), and hourly_event_summary_csv (its CSV
-    # scratch root became per-uid + ownership-checked, ADVICE r14).
-    # The other 28 r12 rows (incl. doc_fingerprints, bumped by the
-    # guard's catch) rotate in r16.
-    "doc_repetition",
-    "salted_nation_revenue",
-    "similarity_topk",
-    "session_concurrency",
-    "session_overlap_pairs",
-    "session_path_mining",
-    "multimodal_meta",
-    "doc_token_stats",
-    "embedding_near_dup",
-    "lm_surprisal_filter",
-    "dsir_importance_select",
-    "hourly_event_summary_csv",
-    # 50th slot: the historically NTZ-sensitive session-window oracle --
-    # the cheapest canary for another fixture timestamp drift (VERDICT
-    # r6 item 8 / r12 item 3: keep it pinned).
-    "user_session_window",
-]
-# r16 window tier-0 candidates: doremi_domain_weights,
-# tokenizer_fertility_audit, dedup_cluster_profile,
-# rrf_hybrid_search, and quality_consensus_report (born r15 --
-# locally oracle-green with randomized mirrors, parity rows merged
-# in-round into PARITY_r15, no driver row yet, same protocol as
-# every birth round).  Tier-1 candidates: the 28 r12-last-green oracles not
-# rotated this round (incl. fact_join_unbucketed, doc_hof_stats, and
-# doc_fingerprints, whose slots went to the lm_surprisal_filter /
-# dsir_importance_select / hourly_event_summary_csv re-stamps).
 
 
 def all_specs() -> list[QuerySpec]:

@@ -22,13 +22,18 @@ from .streaming.pipeline import build_pipeline
 
 
 def main(argv: list[str] | None = None) -> int:
+    # unset flags fall back to the STREAM_* environment, not to copies
+    # of its defaults
+    defaults = StreamingConfig()
     parser = argparse.ArgumentParser(description="Run the streaming event pipeline")
     parser.add_argument("--input", required=True, help="CSV input directory to watch")
     parser.add_argument("--output", required=True, help="output table root directory")
     parser.add_argument("--checkpoint", required=True, help="checkpoint directory")
-    parser.add_argument("--trigger-seconds", type=int, default=10)
-    parser.add_argument("--max-files-per-trigger", type=int, default=1)
-    parser.add_argument("--watermark", default="10 minutes")
+    parser.add_argument("--trigger-seconds", type=int, default=defaults.trigger_seconds)
+    parser.add_argument(
+        "--max-files-per-trigger", type=int, default=defaults.max_files_per_trigger
+    )
+    parser.add_argument("--watermark", default=defaults.watermark_delay)
     parser.add_argument("--no-dedup", action="store_true")
     parser.add_argument("--once", action="store_true", help="drain available input and exit")
     args = parser.parse_args(argv)

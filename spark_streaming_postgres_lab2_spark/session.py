@@ -44,11 +44,3 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_oracle_parity(spark: SparkSession) -> SparkSession:
-    """Settings required for bit-level agreement with the DuckDB oracle:
-    UTC session timezone (duckdb timestamps are UTC-naive) and ANSI off
-    (reference semantics are permissive)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

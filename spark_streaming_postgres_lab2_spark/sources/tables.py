@@ -165,11 +165,8 @@ def spread_input(df: DataFrame) -> DataFrame:
 # A/B on lm_surprisal_filter measured orig 1.36 s vs ckpt 1.52 s at
 # sf0.1's ~0.6 MB -- fixed checkpoint-job overhead dominates);  above
 # it, each extra consumer re-reads the whole input, which at 100 TB is
-# the difference between one corpus pass and N.  Parameterized so a
-# deployment can move the crossover without a code change.
-CUT_MIN_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CUT_MIN_INPUT_BYTES", str(4 * 1024 * 1024))
-)
+# the difference between one corpus pass and N.
+CUT_MIN_INPUT_BYTES = 4 * 1024 * 1024
 
 
 def cut_when_large(df: DataFrame, base: DataFrame) -> DataFrame:

@@ -13,12 +13,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import StreamingConfig
 from ..operators.enrich import transform_and_enrich
-from ..operators.validate import validate
+from ..operators.validate import split_valid_invalid, validate
 from ..operators.dedup import streaming_dedup
 from ..schema.registry import get_registry
 from ..sources.csv_stream import csv_stream
@@ -88,8 +87,7 @@ class StreamingPipeline:
             # Dedup applies to the VALID branch only (reference intent,
             # M:322-332): an invalid record must not consume the dedup
             # state for its event_id and drop a later corrected resend.
-            valid = enriched.filter(F.col("is_valid"))
-            invalid = enriched.filter(~F.col("is_valid"))
+            valid, invalid = split_valid_invalid(enriched)
             deduped_valid = streaming_dedup(
                 valid,
                 event_time_col="processed_at",

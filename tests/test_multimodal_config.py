@@ -90,10 +90,38 @@ def test_config_defaults_valid():
 
 def test_config_validation_catches_bad_values():
     cfg = EngineConfig()
-    cfg.quality.min_validity_rate = 2.0
-    cfg.retry.backoff_factor = 0.5
+    cfg.streaming.trigger_seconds = 0
+    cfg.database.batch_size = 0
     problems = cfg.validate()
     assert len(problems) == 2
+
+
+def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
+    """Unset CLI flags must not override the STREAM_* environment."""
+    from types import SimpleNamespace
+
+    from spark_streaming_postgres_lab2_spark import run_pipeline
+
+    monkeypatch.setenv("STREAM_TRIGGER_SECONDS", "3")
+    monkeypatch.setenv("STREAM_MAX_FILES_PER_TRIGGER", "7")
+    monkeypatch.setenv("STREAM_WATERMARK_DELAY", "2 minutes")
+    seen = {}
+
+    def fake_build_pipeline(spark, cfg):
+        seen["cfg"] = cfg
+        query = SimpleNamespace(awaitTermination=lambda: None)
+        monitor = SimpleNamespace(health_summary=lambda: {})
+        return SimpleNamespace(
+            start=lambda **_: query, router=SimpleNamespace(monitor=monitor)
+        )
+
+    monkeypatch.setattr(run_pipeline, "build_session", lambda: None)
+    monkeypatch.setattr(run_pipeline, "build_pipeline", fake_build_pipeline)
+    assert run_pipeline.main(["--input", "i", "--output", "o", "--checkpoint", "c"]) == 0
+    cfg = seen["cfg"]
+    assert cfg.trigger_seconds == 3
+    assert cfg.max_files_per_trigger == 7
+    assert cfg.watermark_delay == "2 minutes"
 
 
 def test_jdbc_url_shape():

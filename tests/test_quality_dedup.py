@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from spark_streaming_postgres_lab2_spark.operators.dedup import (
     dedup_counts,
@@ -31,18 +32,49 @@ def events_df(spark):
 
 
 def test_quality_metrics_single_pass(spark):
-    m = calculate_quality_metrics(validate(events_df(spark)), batch_id=7)
-    assert m.batch_id == 7
-    assert m.total_rows == 3
-    assert m.valid_rows == 1
-    assert m.invalid_rows == 2
-    assert m.null_counts["user_id"] == 1
-    assert m.event_type_distribution == {"view": 2, "purchase": 1}
-    assert m.error_distribution == {
-        "purchase_without_user": 1,
-        "negative_price": 1,
+    """Every field of the one-pass metrics, over a frame with late
+    arrivals (one NULL flag), NULLs in each null-checked column and a
+    NULL event_type (counted under the "null" key)."""
+    extra = [
+        Row(event_id="d", user_id=4, event_type=None, product_id=4, price=0.0,
+            quantity=None, session_id="s", category=None, user_segment="new",
+            search_query="", event_time="2024-01-01T00:03:00", source_system="web"),
+        Row(event_id="e", user_id=None, event_type="view", product_id=5, price=0.0,
+            quantity=None, session_id="s", category=None, user_segment="new",
+            search_query="", event_time="2024-01-01T00:04:00", source_system="web"),
+    ]
+    base = events_df(spark)
+    df = validate(base.unionByName(spark.createDataFrame(extra, base.schema))).withColumn(
+        "is_late_arrival",
+        F.when(F.col("event_id") == "d", F.lit(None)).otherwise(F.col("event_id").isin("a", "e")),
+    )
+    m = calculate_quality_metrics(df, batch_id=3)
+    assert m.to_dict() == {
+        "batch_id": 3,
+        "total_rows": 5,
+        "valid_rows": 2,
+        "invalid_rows": 3,
+        "validity_rate": 0.4,
+        "late_arrival_count": 2,
+        "null_counts": {"user_id": 2, "session_id": 1, "category": 3, "quantity": 2},
+        "event_type_distribution": {"view": 3, "purchase": 1, "null": 1},
+        "error_distribution": {
+            "purchase_without_user": 1,
+            "negative_price": 1,
+            "null_event_type": 1,
+        },
     }
-    assert abs(m.validity_rate - 1 / 3) < 1e-9
+
+
+def test_quality_metrics_without_optional_columns(spark):
+    """A frame with neither ``is_late_arrival`` nor ``validation_errors``:
+    late count 0, no error distribution."""
+    df = validate(events_df(spark)).drop("validation_errors")
+    m = calculate_quality_metrics(df, batch_id=2, null_check_columns=["category"])
+    assert (m.total_rows, m.valid_rows, m.invalid_rows, m.late_arrival_count) == (3, 1, 2, 0)
+    assert m.null_counts == {"category": 1}
+    assert m.event_type_distribution == {"view": 2, "purchase": 1}
+    assert m.error_distribution == {}
 
 
 def test_quality_metrics_empty(spark):

@@ -19,8 +19,11 @@ from spark_streaming_postgres_lab2_spark.operators.analytics import (
     user_sessions,
     verification_counts,
 )
+from spark_streaming_postgres_lab2_spark.operators.validate import validate
 from spark_streaming_postgres_lab2_spark.sources.datagen import EventGenerator
 from spark_streaming_postgres_lab2_spark.streaming.pipeline import build_pipeline
+from spark_streaming_postgres_lab2_spark.streaming.sinks import BatchRouter, SinkConfig
+from spark_streaming_postgres_lab2_spark.utils.retry import RetryPolicy
 
 NOW = datetime(2024, 3, 15, 12, 0, 0, tzinfo=timezone.utc)
 
@@ -268,3 +271,84 @@ def test_schema_drift_rejected_at_boundary(spark, tmp_path):
         .load(str(tmp_path / "in"))
     )
     assert pipe.transformed_stream(source=ok_source).columns
+
+
+def _epoch_frame(spark):
+    """A validated two-row epoch: one valid view, one dead letter."""
+    from pyspark.sql import Row
+
+    rows = [
+        Row(event_id="v", user_id=1, event_type="view", product_id=1, price=0.0,
+            quantity=0, session_id="s", category="books", event_time="2024-03-15T12:00:00"),
+        Row(event_id="x", user_id=2, event_type="view", product_id=2, price=-1.0,
+            quantity=0, session_id="s", category="books", event_time="2024-03-15T12:00:01"),
+    ]
+    return validate(spark.createDataFrame(rows))
+
+
+def _sink(root):
+    return SinkConfig(
+        events_path=f"{root}/ecommerce_events",
+        dead_letter_path=f"{root}/dead_letter_events",
+        metrics_path=f"{root}/data_quality_metrics",
+    )
+
+
+def _persisted_rdds(spark) -> set:
+    # compared against the set before each call: other tests sharing the
+    # session may leave their own blocks behind
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_router_releases_epoch_blocks(spark, tmp_path):
+    """The epoch is cached for its metrics collect and writes and is
+    unpersisted before the router returns."""
+    before = _persisted_rdds(spark)
+    router = BatchRouter(_sink(tmp_path))
+    router(_epoch_frame(spark), 4)
+    assert _persisted_rdds(spark) <= before
+    for table in ("ecommerce_events", "dead_letter_events", "data_quality_metrics"):
+        assert spark.read.parquet(f"{tmp_path}/{table}/epoch=4").count() == 1
+    assert [m.total_rows for m in router.monitor.window] == [2]
+
+
+def test_router_holds_the_epoch_cached_while_writing(spark, tmp_path):
+    before = _persisted_rdds(spark)
+    writes = []
+
+    def record(df, path, batch_id):
+        writes.append((path.rsplit("/", 1)[1], df.count(), bool(_persisted_rdds(spark) - before)))
+
+    BatchRouter(_sink(tmp_path), write_fn=record)(_epoch_frame(spark), 0)
+    assert writes == [
+        ("ecommerce_events", 1, True),
+        ("dead_letter_events", 1, True),
+        ("data_quality_metrics", 1, True),
+    ]
+    assert _persisted_rdds(spark) <= before
+
+
+def test_router_empty_epoch_writes_and_records_nothing(spark, tmp_path):
+    before = _persisted_rdds(spark)
+    router = BatchRouter(_sink(tmp_path / "out"))
+    router(_epoch_frame(spark).filter(F.lit(False)), 1)
+    assert _persisted_rdds(spark) <= before
+    assert not (tmp_path / "out").exists()
+    assert not router.monitor.window and not router.monitor.alerts
+
+
+def test_router_releases_epoch_blocks_when_a_write_fails(spark, tmp_path):
+    before = _persisted_rdds(spark)
+
+    def fail(df, path, batch_id):
+        raise OSError("sink down")
+
+    router = BatchRouter(
+        _sink(tmp_path),
+        retry=RetryPolicy(max_retries=0, sleep=lambda _: None),
+        write_fn=fail,
+    )
+    with pytest.raises(OSError, match="sink down"):
+        router(_epoch_frame(spark), 2)
+    assert _persisted_rdds(spark) <= before
+    assert not router.monitor.window
