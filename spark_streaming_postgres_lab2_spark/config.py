@@ -71,6 +71,22 @@ class DatabaseConfig:
         return d
 
 
+_STATE_STORE = "spark.sql.streaming.stateStore"
+_PROVIDERS = "org.apache.spark.sql.execution.streaming.state"
+
+# StreamingConfig.state_store_provider -> the session confs a stream
+# starts under to select that provider
+STATE_STORE_CONFS: dict[str, dict[str, str]] = {
+    "hdfs": {
+        f"{_STATE_STORE}.providerClass": f"{_PROVIDERS}.HDFSBackedStateStoreProvider",
+    },
+    "rocksdb": {
+        f"{_STATE_STORE}.providerClass": f"{_PROVIDERS}.RocksDBStateStoreProvider",
+        f"{_STATE_STORE}.rocksdb.changelogCheckpointing.enabled": "true",
+    },
+}
+
+
 @dataclass
 class StreamingConfig:
     """Structured Streaming knobs (reference settings.py streaming section)."""
@@ -90,9 +106,10 @@ class StreamingConfig:
     late_arrival_threshold_minutes: int = field(
         default_factory=lambda: _env_int("STREAM_LATE_THRESHOLD_MINUTES", 5)
     )
-    # "hdfs" (default in-memory+DFS provider) or "rocksdb": at large
-    # dedup/session state the RocksDB provider keeps state off-heap and
-    # incremental-checkpoints changelogs instead of full snapshots
+    # a key of STATE_STORE_CONFS: "hdfs" (default in-memory+DFS
+    # provider) or "rocksdb": at large dedup/session state the RocksDB
+    # provider keeps state off-heap and incremental-checkpoints
+    # changelogs instead of full snapshots
     state_store_provider: str = field(
         default_factory=lambda: _env("STREAM_STATE_STORE", "hdfs")
     )
@@ -161,6 +178,13 @@ class EngineConfig:
         problems: list[str] = []
         if self.streaming.trigger_seconds <= 0:
             problems.append("streaming.trigger_seconds must be positive")
+        if self.streaming.max_files_per_trigger <= 0:
+            problems.append("streaming.max_files_per_trigger must be positive")
+        if self.streaming.state_store_provider not in STATE_STORE_CONFS:
+            problems.append(
+                "streaming.state_store_provider must be one of "
+                f"{sorted(STATE_STORE_CONFS)}, got {self.streaming.state_store_provider!r}"
+            )
         if self.database.batch_size <= 0:
             problems.append("database.batch_size must be positive")
         if self.spark.shuffle_partitions <= 0:

@@ -6,16 +6,24 @@ and then *doesn't stream it* (dead code, M:324-329 vs :507), relying
 on the Postgres PK instead.  Here the dedup path is LIVE: the started
 query streams the deduplicated frame, and the parquet sink's
 per-epoch overwrite keeps replays idempotent without a PK backstop.
+
+The dedup keeps one state store per shuffle partition, and a
+checkpoint freezes that count when it is created; AQE does not apply
+to stateful plans, so nothing coalesces it later.  ``start`` therefore
+plans a new query at the engine's core count (``defaultParallelism``),
+not at the session's batch-sized ``spark.sql.shuffle.partitions``; a
+restart keeps the count its checkpoint recorded.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import StreamingConfig
+from ..config import STATE_STORE_CONFS, StreamingConfig
 from ..operators.enrich import transform_and_enrich
 from ..operators.validate import split_valid_invalid, validate
 from ..operators.dedup import streaming_dedup
@@ -41,6 +49,23 @@ class SchemaDriftError(ValueError):
             f"extra={report['extra_fields']} "
             f"type_mismatches={report['type_mismatches']}"
         )
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set ``settings`` on the session for the body only, then give
+    each key back its previous value (unset if it had none)."""
+    previous = {key: spark.conf.get(key, None) for key in settings}
+    try:
+        for key, value in settings.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in previous.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 @dataclass
@@ -109,27 +134,11 @@ class StreamingPipeline:
         source-agnostic past the registry boundary check, and the
         Python-DataSource path is executed end-to-end in
         tests/test_streamjoin_pysource.py."""
-        # session conf is sticky: set the provider explicitly on BOTH
-        # branches, or a rocksdb pipeline would silently reconfigure
-        # every later default-provider pipeline in the same session
-        if self.config.state_store_provider == "rocksdb":
-            # off-heap state + changelog checkpointing: the scale path
-            # for watermarked dedup state (millions of in-flight keys
-            # per partition would blow the default in-memory provider)
-            self.spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            self.spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-                "true",
-            )
-        else:
-            self.spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "HDFSBackedStateStoreProvider",
+        provider = self.config.state_store_provider
+        if provider not in STATE_STORE_CONFS:
+            raise ValueError(
+                f"unknown state_store_provider {provider!r}; "
+                f"expected one of {sorted(STATE_STORE_CONFS)}"
             )
         writer = (
             self.transformed_stream(dedup, source=source)
@@ -141,7 +150,16 @@ class StreamingPipeline:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=f"{self.config.trigger_seconds} seconds")
-        return writer.start()
+        # the query clones the session conf when it starts (and records
+        # the partition count and provider in its checkpoint), so these
+        # keys are set for the start only: the session's batch queries
+        # keep their own partition count, and a restart keeps the count
+        # its checkpoint recorded
+        with _session_conf(self.spark, {
+            "spark.sql.shuffle.partitions": str(self.spark.sparkContext.defaultParallelism),
+            **STATE_STORE_CONFS[provider],
+        }):
+            return writer.start()
 
 
 def build_pipeline(

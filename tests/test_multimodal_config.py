@@ -96,6 +96,16 @@ def test_config_validation_catches_bad_values():
     assert len(problems) == 2
 
 
+def test_config_validation_catches_bad_stream_values():
+    cfg = EngineConfig()
+    cfg.streaming.max_files_per_trigger = 0
+    cfg.streaming.state_store_provider = "rocks"
+    problems = cfg.validate()
+    assert len(problems) == 2
+    assert any("max_files_per_trigger" in p for p in problems)
+    assert any("'rocks'" in p for p in problems)
+
+
 def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
     """Unset CLI flags must not override the STREAM_* environment."""
     from types import SimpleNamespace

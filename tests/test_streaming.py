@@ -5,6 +5,7 @@ including replay idempotency and analytics views over the sink output
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timezone
 
 import pytest
@@ -26,6 +27,40 @@ from spark_streaming_postgres_lab2_spark.streaming.sinks import BatchRouter, Sin
 from spark_streaming_postgres_lab2_spark.utils.retry import RetryPolicy
 
 NOW = datetime(2024, 3, 15, 12, 0, 0, tzinfo=timezone.utc)
+PARTITIONS = "spark.sql.shuffle.partitions"
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def _checkpoint_conf(ckpt, batch: int = 0) -> dict:
+    """The session conf a stream recorded in ``offsets/<batch>``."""
+    lines = (ckpt / "offsets" / str(batch)).read_text().splitlines()
+    return json.loads(lines[1])["conf"]
+
+
+def _state_partitions(ckpt) -> int:
+    return sum(1 for d in (ckpt / "state" / "0").iterdir() if d.name.isdigit())
+
+
+@pytest.fixture
+def seven_partitions(spark):
+    """The session at 7 shuffle partitions, unlike the core count, so a
+    stream planned at the session's count shows in its checkpoint."""
+    if spark.sparkContext.defaultParallelism == 7:
+        pytest.skip("core count equals the probe's partition count")
+    before = spark.conf.get(PARTITIONS)
+    spark.conf.set(PARTITIONS, "7")
+    yield spark
+    spark.conf.set(PARTITIONS, before)
+
+
+def _dedup_config(tmp_path, **overrides) -> StreamingConfig:
+    return StreamingConfig(
+        input_path=str(tmp_path / "in"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        output_path=str(tmp_path / "out"),
+        max_files_per_trigger=10,
+        **overrides,
+    )
 
 
 @pytest.fixture(scope="module")
@@ -83,7 +118,7 @@ def test_monitor_recorded_batches(pipeline_output):
 
 
 def test_replay_is_idempotent(pipeline_output):
-    """Re-running an epoch overwrites its own batch_id subdir instead of
+    """Re-running an epoch overwrites its own epoch=N subdir instead of
     duplicating rows (the reference relied on the Postgres PK for this)."""
     spark, out_dir, pipe = pipeline_output
     events_before = spark.read.parquet(f"{out_dir}/ecommerce_events").count()
@@ -186,36 +221,82 @@ def test_invalid_copy_does_not_consume_dedup_state(spark, tmp_path):
 
 def test_rocksdb_state_store_dedup(spark, tmp_path):
     """The RocksDB state-store provider (the large-state scale path)
-    carries the same dedup semantics as the default provider."""
-    input_dir = tmp_path / "in"
+    carries the same dedup semantics as the default provider; the
+    query keeps the provider, the session does not."""
     gen = EventGenerator(seed=11, anomaly_rate=0.0, now=NOW)
     batch = gen.generate_batch(40)
-    gen.write_csv(batch, str(input_dir), "a.csv")
-    gen.write_csv(batch, str(input_dir), "b.csv")  # exact duplicate file
+    gen.write_csv(batch, str(tmp_path / "in"), "a.csv")
+    gen.write_csv(batch, str(tmp_path / "in"), "b.csv")  # exact duplicate file
 
-    cfg = StreamingConfig(
-        input_path=str(input_dir),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        output_path=str(tmp_path / "out"),
-        max_files_per_trigger=10,
-        state_store_provider="rocksdb",
+    session_provider = spark.conf.get(PROVIDER, None)
+    pipe = build_pipeline(spark, _dedup_config(tmp_path, state_store_provider="rocksdb"))
+    q = pipe.start(trigger_once=True)
+    assert spark.conf.get(PROVIDER, None) == session_provider
+    q.awaitTermination(120)
+    ckpt = tmp_path / "ckpt"
+    assert "RocksDB" in _checkpoint_conf(ckpt)[PROVIDER]
+    assert list((ckpt / "state" / "0").glob("*/*.changelog"))
+    events = spark.read.parquet(f"{tmp_path}/out/ecommerce_events")
+    assert events.count() == 40
+    assert events.select("event_id").distinct().count() == 40
+
+
+def test_start_rejects_unknown_state_store_provider(spark, tmp_path):
+    """No silent fallback to the default provider."""
+    (tmp_path / "in").mkdir()
+    pipe = build_pipeline(spark, _dedup_config(tmp_path, state_store_provider="rocks"))
+    with pytest.raises(ValueError, match="rocks"):
+        pipe.start(trigger_once=True)
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_new_stream_state_is_planned_at_the_core_count(seven_partitions, tmp_path):
+    spark = seven_partitions
+    cores = spark.sparkContext.defaultParallelism
+    gen = EventGenerator(seed=5, anomaly_rate=0.0, now=NOW)
+    gen.write_csv(gen.generate_batch(30), str(tmp_path / "in"), "a.csv")
+
+    pipe = build_pipeline(spark, _dedup_config(tmp_path))
+    q = pipe.start(trigger_once=True)
+    assert spark.conf.get(PARTITIONS) == "7"
+    q.awaitTermination(120)
+    ckpt = tmp_path / "ckpt"
+    assert _checkpoint_conf(ckpt)[PARTITIONS] == str(cores)
+    assert _state_partitions(ckpt) == cores
+    assert spark.read.parquet(f"{tmp_path}/out/ecommerce_events").count() == 30
+
+
+def test_restart_keeps_the_checkpoint_partition_count(seven_partitions, tmp_path):
+    """A checkpoint created at the session's 7 partitions keeps 7
+    through a restart by ``start``, and its dedup state still drops a
+    replayed file's event_ids."""
+    spark = seven_partitions
+    gen = EventGenerator(seed=13, anomaly_rate=0.0, now=NOW)
+    batch = gen.generate_batch(40)
+    gen.write_csv(batch, str(tmp_path / "in"), "a.csv")
+
+    cfg = _dedup_config(tmp_path)
+    pipe = build_pipeline(spark, cfg)
+    first = (
+        pipe.transformed_stream()
+        .writeStream.foreachBatch(pipe.router)
+        .option("checkpointLocation", cfg.checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        pipe = build_pipeline(spark, cfg)
-        q = pipe.start(trigger_once=True)
-        q.awaitTermination(120)
-        assert "RocksDB" in spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass"
-        )
-        events = spark.read.parquet(f"{tmp_path}/out/ecommerce_events")
-        assert events.count() == 40
-        assert events.select("event_id").distinct().count() == 40
-    finally:
-        # reset for other tests sharing the session fixture
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
+    first.awaitTermination(120)
+    ckpt = tmp_path / "ckpt"
+    assert _state_partitions(ckpt) == 7
+
+    gen.write_csv(batch, str(tmp_path / "in"), "b.csv")  # replayed file
+    q = pipe.start(trigger_once=True)
+    q.awaitTermination(120)
+    assert _checkpoint_conf(ckpt, 1)[PARTITIONS] == "7"
+    assert _state_partitions(ckpt) == 7
+    assert spark.conf.get(PARTITIONS) == "7"
+    events = spark.read.parquet(f"{tmp_path}/out/ecommerce_events")
+    assert events.count() == 40
+    assert events.select("event_id").distinct().count() == 40
 
 
 def test_schema_drift_rejected_at_boundary(spark, tmp_path):
