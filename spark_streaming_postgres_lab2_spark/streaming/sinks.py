@@ -12,8 +12,12 @@ JDBC appends (S3-S5).  Differences by design:
   overwrite mode -- a replayed epoch overwrites its own output
   (idempotent), never duplicates it;
 - metrics in ONE aggregation pass (operators/quality.py) instead of
-  ~10 actions per batch; with the epoch persisted once, a non-empty
-  epoch runs four actions: the metrics collect and the three writes;
+  ~10 actions per batch.  With the epoch persisted once, a non-empty
+  epoch runs the metrics collect alone (it materialises the epoch and
+  commits the dedup state), then the events and dead-letter writes at
+  the same time on the cached blocks, then the one-row metrics write
+  last, as the epoch's commit marker: an epoch with a metrics row had
+  both data writes succeed;
 - the database retry policy is actually wired around the writes
   (the reference defines C1-C3 but never uses them, SURVEY §2.8).
 """
@@ -21,10 +25,12 @@ JDBC appends (S3-S5).  Differences by design:
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.util import inheritable_thread_target
 
 from ..operators.enrich import DEAD_LETTER_COLUMNS, ENRICHED_EVENT_COLUMNS
 from ..operators.quality import calculate_quality_metrics, metrics_row_df
@@ -68,7 +74,8 @@ def write_partitioned_events(df: DataFrame, path: str, mode: str = "overwrite") 
 
 @dataclass
 class BatchRouter:
-    """The foreachBatch callback: metrics -> alerts -> three writes."""
+    """The foreachBatch callback: metrics -> data writes -> metrics row
+    -> alerts."""
 
     sink: SinkConfig
     monitor: PipelineMonitor = field(default_factory=PipelineMonitor)
@@ -85,7 +92,7 @@ class BatchRouter:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         # the foreachBatch idiom: the epoch feeds the metrics collect and
-        # up to three writes, so cache it once, and release it on every
+        # the data writes, so cache it once, and release it on every
         # exit -- only unpersist drops a cached plan, so a long-running
         # stream would otherwise keep every epoch it has seen
         batch_df.persist()
@@ -96,15 +103,39 @@ class BatchRouter:
 
     def _route(self, batch_df: DataFrame, batch_id: int) -> None:
         with BatchTracker(batch_id) as tracker:
+            # the one action that materialises the epoch (and commits the
+            # dedup state): it runs alone, as two first actions at once
+            # would both run the stateful plan
             q = calculate_quality_metrics(batch_df, batch_id)
             if q.total_rows == 0:
                 return
             valid, dead = split_valid_invalid(batch_df)
             valid = valid.select(*[c for c in ENRICHED_EVENT_COLUMNS if c in batch_df.columns])
             dead = dead.select(*[c for c in DEAD_LETTER_COLUMNS if c in batch_df.columns])
-            self.retry.execute(self._write, valid, self.sink.events_path, batch_id)
+            writes = [(valid, self.sink.events_path)]
             if q.invalid_rows:
-                self.retry.execute(self._write, dead, self.sink.dead_letter_path, batch_id)
+                writes.append((dead, self.sink.dead_letter_path))
+            # the data writes run at the same time, each in a thread that
+            # carries the caller's job group, description and tags (so
+            # stopping the query cancels them); leaving the pool waits for
+            # every write, as the epoch's cache is released after this;
+            # the first error in submission order is raised, any other
+            # is logged
+            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(batch_df.sparkSession)(self.retry.execute),
+                        self._write, df, path, batch_id,
+                    )
+                    for df, path in writes
+                ]
+            errors = [e for e in (f.exception() for f in futures) if e is not None]
+            for later in errors[1:]:
+                log.error("batch %s: another data write failed too", batch_id, exc_info=later)
+            if errors:
+                raise errors[0]
+            # last, and only after every data write succeeded: the
+            # metrics row marks the epoch as committed
             metrics_df = metrics_row_df(batch_df.sparkSession, q)
             self.retry.execute(self._write, metrics_df, self.sink.metrics_path, batch_id)
 

@@ -12,7 +12,10 @@ reproduced:
   failures; OPEN rejects immediately with
   ``CircuitBreakerOpenError(time_until_retry)``; OPEN -> HALF_OPEN
   after the recovery timeout; HALF_OPEN -> CLOSED after M successes,
-  -> OPEN again on any failure; stats counters throughout;
+  -> OPEN again on any failure; stats counters throughout; one
+  breaker may be shared by threads (the sink's concurrent writes): its
+  state and counters change under a lock that is not held while the
+  guarded call runs;
 - ``RetryPolicy`` composes both, with database/network/file presets.
 
 Unlike the reference -- where these are defined and tested but never
@@ -21,6 +24,7 @@ router actually wraps its writes with the database policy."""
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass, field
 from enum import Enum
@@ -96,6 +100,9 @@ class CircuitBreaker:
     total_failures: int = field(default=0, init=False)
     total_successes: int = field(default=0, init=False)
     times_opened: int = field(default=0, init=False)
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def _maybe_half_open(self) -> None:
         if (
@@ -106,17 +113,20 @@ class CircuitBreaker:
             self._half_open_successes = 0
 
     def call(self, fn: Callable, *args: Any, **kwargs: Any) -> Any:
-        self._maybe_half_open()
-        if self.state is CircuitState.OPEN:
-            remaining = self.recovery_timeout - (self.clock() - self._opened_at)
-            raise CircuitBreakerOpenError(max(0.0, remaining))
-        self.total_calls += 1
+        with self._lock:
+            self._maybe_half_open()
+            if self.state is CircuitState.OPEN:
+                remaining = self.recovery_timeout - (self.clock() - self._opened_at)
+                raise CircuitBreakerOpenError(max(0.0, remaining))
+            self.total_calls += 1
         try:
             result = fn(*args, **kwargs)
         except Exception:
-            self._on_failure()
+            with self._lock:
+                self._on_failure()
             raise
-        self._on_success()
+        with self._lock:
+            self._on_success()
         return result
 
     def _on_success(self) -> None:
@@ -145,13 +155,14 @@ class CircuitBreaker:
         self._consecutive_failures = 0
 
     def stats(self) -> dict[str, Any]:
-        return {
-            "state": self.state.value,
-            "total_calls": self.total_calls,
-            "total_successes": self.total_successes,
-            "total_failures": self.total_failures,
-            "times_opened": self.times_opened,
-        }
+        with self._lock:
+            return {
+                "state": self.state.value,
+                "total_calls": self.total_calls,
+                "total_successes": self.total_successes,
+                "total_failures": self.total_failures,
+                "times_opened": self.times_opened,
+            }
 
 
 @dataclass

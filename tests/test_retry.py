@@ -3,6 +3,9 @@ tests/test_retry.py tier-2)."""
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 
 from spark_streaming_postgres_lab2_spark.utils.retry import (
@@ -131,6 +134,41 @@ def test_breaker_half_open_failure_reopens():
         cb.call(boom)
     assert cb.state is CircuitState.OPEN
     assert cb.times_opened == 2
+
+
+def test_breaker_counters_exact_under_threads():
+    """One breaker shared by more threads than cores (the sink's
+    concurrent writes share one): no counter update is lost."""
+    threads_n, calls_n = 8, 2000
+    cb = CircuitBreaker(failure_threshold=threads_n * calls_n + 1)
+    start = threading.Barrier(threads_n, timeout=30)
+
+    def worker(k):
+        start.wait()
+        for i in range(calls_n):
+            if (i + k) % 3 == 0:
+                with pytest.raises(ValueError):
+                    cb.call(boom)
+            else:
+                cb.call(lambda: None)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(threads_n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    failures = sum((i + k) % 3 == 0 for k in range(threads_n) for i in range(calls_n))
+    stats = cb.stats()
+    assert stats["total_calls"] == threads_n * calls_n
+    assert stats["total_failures"] == failures
+    assert stats["total_successes"] == threads_n * calls_n - failures
+    assert cb.state is CircuitState.CLOSED
 
 
 def test_policy_composes_breaker_and_retry():

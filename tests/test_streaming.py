@@ -6,6 +6,7 @@ including replay idempotency and analytics views over the sink output
 from __future__ import annotations
 
 import json
+import threading
 from datetime import datetime, timezone
 
 import pytest
@@ -381,6 +382,10 @@ def _persisted_rdds(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
+def _no_retry():
+    return RetryPolicy(max_retries=0, sleep=lambda _: None)
+
+
 def test_router_releases_epoch_blocks(spark, tmp_path):
     """The epoch is cached for its metrics collect and writes and is
     unpersisted before the router returns."""
@@ -401,12 +406,97 @@ def test_router_holds_the_epoch_cached_while_writing(spark, tmp_path):
         writes.append((path.rsplit("/", 1)[1], df.count(), bool(_persisted_rdds(spark) - before)))
 
     BatchRouter(_sink(tmp_path), write_fn=record)(_epoch_frame(spark), 0)
-    assert writes == [
-        ("ecommerce_events", 1, True),
-        ("dead_letter_events", 1, True),
-        ("data_quality_metrics", 1, True),
-    ]
+    # the two data writes run at the same time, in either order
+    assert set(writes[:2]) == {("ecommerce_events", 1, True), ("dead_letter_events", 1, True)}
+    assert writes[2:] == [("data_quality_metrics", 1, True)]
     assert _persisted_rdds(spark) <= before
+
+
+def test_router_overlaps_the_data_writes_and_writes_metrics_last(spark, tmp_path):
+    """Each data write waits for the other to start, so run one after the
+    other they break the barrier; the metrics row, the epoch's commit
+    marker, starts only after both have returned.  No write thread
+    outlives the call."""
+    both_running = threading.Barrier(2, timeout=10)
+    steps, threads = [], set()
+
+    def record(df, path, batch_id):
+        table = path.rsplit("/", 1)[1]
+        steps.append(("start", table))
+        if table != "data_quality_metrics":
+            threads.add(threading.current_thread())
+            both_running.wait()
+        steps.append(("end", table))
+
+    BatchRouter(_sink(tmp_path), retry=_no_retry(), write_fn=record)(_epoch_frame(spark), 0)
+    assert len(threads) == 2 and not any(t.is_alive() for t in threads)
+    assert sorted(steps[:4]) == [
+        ("end", "dead_letter_events"), ("end", "ecommerce_events"),
+        ("start", "dead_letter_events"), ("start", "ecommerce_events"),
+    ]
+    assert steps[4:] == [("start", "data_quality_metrics"), ("end", "data_quality_metrics")]
+
+
+def test_router_writes_carry_the_callers_job_group(spark, tmp_path):
+    """The stream runs each epoch under its job group: the write threads
+    keep it, so stopping the query cancels their jobs."""
+    sc = spark.sparkContext
+    seen = set()
+
+    def record(df, path, batch_id):
+        seen.add((
+            path.rsplit("/", 1)[1],
+            sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"),
+        ))
+
+    sc.setJobGroup("stream-query", "batch = 6")
+    try:
+        BatchRouter(_sink(tmp_path), write_fn=record)(_epoch_frame(spark), 6)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert seen == {
+        (table, "stream-query", "batch = 6")
+        for table in ("ecommerce_events", "dead_letter_events", "data_quality_metrics")
+    }
+
+
+def test_router_failed_data_write_lets_the_other_finish(spark, tmp_path):
+    """The dead-letter write finishes, on the cached epoch, before the
+    events write's error propagates; the epoch gets no metrics row and
+    the monitor records nothing."""
+    before = _persisted_rdds(spark)
+    finished = []
+
+    def write(df, path, batch_id):
+        table = path.rsplit("/", 1)[1]
+        if table == "ecommerce_events":
+            raise OSError("events sink down")
+        finished.append((table, df.count(), bool(_persisted_rdds(spark) - before)))
+
+    router = BatchRouter(_sink(tmp_path), retry=_no_retry(), write_fn=write)
+    with pytest.raises(OSError, match="events sink down"):
+        router(_epoch_frame(spark), 3)
+    assert finished == [("dead_letter_events", 1, True)]
+    assert _persisted_rdds(spark) <= before
+    assert not router.monitor.window and not router.monitor.alerts
+
+
+def test_router_metrics_row_is_one_file_with_the_reference_schema(spark, tmp_path):
+    BatchRouter(_sink(tmp_path))(_epoch_frame(spark), 5)
+    epoch_dir = tmp_path / "data_quality_metrics" / "epoch=5"
+    assert len(list(epoch_dir.glob("*.parquet"))) == 1
+    row = spark.read.parquet(str(epoch_dir))
+    assert row.dtypes == [
+        ("batch_id", "bigint"), ("total_rows", "bigint"), ("valid_rows", "bigint"),
+        ("invalid_rows", "bigint"), ("validity_rate", "double"),
+        ("late_arrival_count", "bigint"), ("recorded_at", "timestamp"),
+    ]
+    assert row.drop("recorded_at").collect()[0].asDict() == {
+        "batch_id": 5, "total_rows": 2, "valid_rows": 1, "invalid_rows": 1,
+        "validity_rate": 0.5, "late_arrival_count": 0,
+    }
 
 
 def test_router_empty_epoch_writes_and_records_nothing(spark, tmp_path):
@@ -418,18 +508,18 @@ def test_router_empty_epoch_writes_and_records_nothing(spark, tmp_path):
     assert not router.monitor.window and not router.monitor.alerts
 
 
-def test_router_releases_epoch_blocks_when_a_write_fails(spark, tmp_path):
+def test_router_releases_epoch_blocks_when_a_write_fails(spark, tmp_path, caplog):
     before = _persisted_rdds(spark)
 
     def fail(df, path, batch_id):
-        raise OSError("sink down")
+        raise OSError(f"sink down: {path.rsplit('/', 1)[1]}")
 
-    router = BatchRouter(
-        _sink(tmp_path),
-        retry=RetryPolicy(max_retries=0, sleep=lambda _: None),
-        write_fn=fail,
-    )
-    with pytest.raises(OSError, match="sink down"):
+    router = BatchRouter(_sink(tmp_path), retry=_no_retry(), write_fn=fail)
+    with pytest.raises(OSError, match="sink down: ecommerce_events"):
         router(_epoch_frame(spark), 2)
     assert _persisted_rdds(spark) <= before
     assert not router.monitor.window
+    # the first error (in submission order) propagates; the other is logged
+    assert [str(r.exc_info[1]) for r in caplog.records if r.exc_info] == [
+        "sink down: dead_letter_events"
+    ]
