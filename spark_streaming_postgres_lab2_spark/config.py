@@ -21,17 +21,25 @@ def _env(name: str, default: str) -> str:
 
 
 def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, default))
-    except (TypeError, ValueError):
+    raw = os.environ.get(name)
+    if raw is None:
         return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
 
 
 def _env_bool(name: str, default: bool) -> bool:
     raw = os.environ.get(name)
     if raw is None:
         return default
-    return raw.strip().lower() in ("1", "true", "yes", "on")
+    value = raw.strip().lower()
+    if value in ("1", "true", "yes", "on"):
+        return True
+    if value in ("0", "false", "no", "off"):
+        return False
+    raise ValueError(f"{name}={raw!r} is not a boolean (1/true/yes/on or 0/false/no/off)")
 
 
 @dataclass
@@ -114,6 +122,20 @@ class StreamingConfig:
         default_factory=lambda: _env("STREAM_STATE_STORE", "hdfs")
     )
 
+    def validate(self) -> list[str]:
+        """Return a list of config problems (empty == valid)."""
+        problems: list[str] = []
+        if self.trigger_seconds <= 0:
+            problems.append("trigger_seconds must be positive")
+        if self.max_files_per_trigger <= 0:
+            problems.append("max_files_per_trigger must be positive")
+        if self.state_store_provider not in STATE_STORE_CONFS:
+            problems.append(
+                f"state_store_provider must be one of {sorted(STATE_STORE_CONFS)}, "
+                f"got {self.state_store_provider!r}"
+            )
+        return problems
+
     def to_dict(self) -> dict[str, Any]:
         return asdict(self)
 
@@ -175,16 +197,7 @@ class EngineConfig:
 
     def validate(self) -> list[str]:
         """Return a list of config problems (empty == valid)."""
-        problems: list[str] = []
-        if self.streaming.trigger_seconds <= 0:
-            problems.append("streaming.trigger_seconds must be positive")
-        if self.streaming.max_files_per_trigger <= 0:
-            problems.append("streaming.max_files_per_trigger must be positive")
-        if self.streaming.state_store_provider not in STATE_STORE_CONFS:
-            problems.append(
-                "streaming.state_store_provider must be one of "
-                f"{sorted(STATE_STORE_CONFS)}, got {self.streaming.state_store_provider!r}"
-            )
+        problems = [f"streaming.{p}" for p in self.streaming.validate()]
         if self.database.batch_size <= 0:
             problems.append("database.batch_size must be positive")
         if self.spark.shuffle_partitions <= 0:

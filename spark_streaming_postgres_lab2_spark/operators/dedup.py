@@ -1,11 +1,11 @@
-"""Deduplication operators: exact (batch + streaming) and scale paths.
+"""Deduplication operators: exact batch dedup and its deterministic flavors.
 
 Parity target: reference watermark + ``dropDuplicates(["event_id"])``
 (spark_streaming_to_postgres.py:324-329).  NOTE the reference's
 streaming dedup is dead code -- the started query streams the
 un-deduped frame (M:507) and relies on the Postgres primary key.  Here
-the dedup path is LIVE (see streaming/pipeline.py) and batch dedup is a
-first-class operator.
+the streaming dedup is LIVE (``StreamingPipeline.transformed_stream`` in
+streaming/pipeline.py) and batch dedup is a first-class operator.
 
 Scale notes: ``dropDuplicates(keys)`` shuffles on the keys with
 map-side partial dedup -- the right plan at any scale.  For
@@ -39,26 +39,6 @@ def dedup_keep_first(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-    )
-
-
-def streaming_dedup(
-    df: DataFrame,
-    event_time_col: str = "event_time",
-    watermark_delay: str = "10 minutes",
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Watermark-bounded streaming dedup.
-
-    Uses ``dropDuplicatesWithinWatermark`` (Spark 3.5+): with plain
-    ``dropDuplicates(keys)`` the watermark does NOT evict state unless
-    the event-time column is part of the keys, so state would grow with
-    total stream history.  The WithinWatermark variant evicts each key
-    once the watermark passes its event time -- state is bounded by
-    delay x arrival rate."""
-    keys = keys or ["event_id"]
-    return df.withWatermark(event_time_col, watermark_delay).dropDuplicatesWithinWatermark(
-        keys
     )
 
 

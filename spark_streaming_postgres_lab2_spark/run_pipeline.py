@@ -34,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
         "--max-files-per-trigger", type=int, default=defaults.max_files_per_trigger
     )
     parser.add_argument("--watermark", default=defaults.watermark_delay)
-    parser.add_argument("--no-dedup", action="store_true")
     parser.add_argument("--once", action="store_true", help="drain available input and exit")
     args = parser.parse_args(argv)
 
@@ -49,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
         watermark_delay=args.watermark,
     )
     pipe = build_pipeline(spark, cfg)
-    query = pipe.start(dedup=not args.no_dedup, trigger_once=args.once)
+    query = pipe.start(trigger_once=args.once)
     query.awaitTermination()
     health = pipe.router.monitor.health_summary()
     logging.info("pipeline finished: %s", health)

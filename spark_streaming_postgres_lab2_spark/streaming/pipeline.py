@@ -7,12 +7,23 @@ on the Postgres PK instead.  Here the dedup path is LIVE: the started
 query streams the deduplicated frame, and the parquet sink's
 per-epoch overwrite keeps replays idempotent without a PK backstop.
 
+The query is one linear chain over one source, so each input file is
+parsed once per epoch: one watermarked dedup runs over the whole
+validated frame, and the router then splits it into valid rows and
+dead letters.  The dedup key is the event_id of a valid row and a fresh
+uuid for an invalid one (reference intent, M:322-332): an invalid row
+never takes a valid row's state, so a corrected resend of a rejected
+event still lands, and never matches another row, so every dead letter
+lands.  Invalid rows do sit in the state until the watermark evicts
+them.
+
 The dedup keeps one state store per shuffle partition, and a
 checkpoint freezes that count when it is created; AQE does not apply
 to stateful plans, so nothing coalesces it later.  ``start`` therefore
 plans a new query at the engine's core count (``defaultParallelism``),
 not at the session's batch-sized ``spark.sql.shuffle.partitions``; a
-restart keeps the count its checkpoint recorded.
+restart keeps the count its checkpoint recorded.  Spark refuses a
+checkpoint written by the earlier two-source plan.
 """
 
 from __future__ import annotations
@@ -21,12 +32,12 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import STATE_STORE_CONFS, StreamingConfig
 from ..operators.enrich import transform_and_enrich
-from ..operators.validate import split_valid_invalid, validate
-from ..operators.dedup import streaming_dedup
+from ..operators.validate import validate
 from ..schema.registry import get_registry
 from ..sources.csv_stream import csv_stream
 from .sinks import BatchRouter, SinkConfig
@@ -74,9 +85,7 @@ class StreamingPipeline:
     config: StreamingConfig
     router: BatchRouter
 
-    def transformed_stream(
-        self, dedup: bool = True, source: DataFrame | None = None
-    ) -> DataFrame:
+    def transformed_stream(self, source: DataFrame | None = None) -> DataFrame:
         """The full logical plan: explicit-schema CSV stream ->
         registry boundary check -> validation rule chain -> enrichment
         -> watermarked dedup.  ``source`` injects an alternative
@@ -97,51 +106,44 @@ class StreamingPipeline:
         enriched = transform_and_enrich(
             validated, late_threshold=f"{self.config.late_arrival_threshold_minutes} minutes"
         )
-        if dedup:
-            # Dedup state is watermarked on PROCESSING time, not event
-            # time: the dedup guarantee is "drop redeliveries arriving
-            # within the watermark horizon", which is a property of
-            # arrival, not of the data's own timeline.  Watermarking on
-            # event_time is poisonable -- one future-timestamped anomaly
-            # (or replaying backdated data) advances the watermark past
-            # the rest of the stream and silently drops every subsequent
-            # valid row.  processed_at always moves with the wall clock,
-            # so state is evicted exactly `watermark_delay` after
-            # arrival and no data pathology can starve the pipeline.
-            #
-            # Dedup applies to the VALID branch only (reference intent,
-            # M:322-332): an invalid record must not consume the dedup
-            # state for its event_id and drop a later corrected resend.
-            valid, invalid = split_valid_invalid(enriched)
-            deduped_valid = streaming_dedup(
-                valid,
-                event_time_col="processed_at",
-                watermark_delay=self.config.watermark_delay,
-                keys=["event_id"],
-            )
-            enriched = deduped_valid.unionByName(invalid)
-        return enriched
+        # Dedup state is watermarked on PROCESSING time, not event
+        # time: the dedup guarantee is "drop redeliveries arriving
+        # within the watermark horizon", which is a property of
+        # arrival, not of the data's own timeline.  Watermarking on
+        # event_time is poisonable -- one future-timestamped anomaly
+        # (or replaying backdated data) advances the watermark past
+        # the rest of the stream and silently drops every subsequent
+        # valid row.  processed_at always moves with the wall clock,
+        # so state is evicted exactly `watermark_delay` after arrival
+        # and no data pathology can starve the pipeline.  The
+        # WithinWatermark variant is what evicts: plain
+        # dropDuplicates(keys) keeps a key forever unless the
+        # watermarked column is one of the keys, so its state would
+        # grow with the whole stream's history.  The key is the
+        # event_id of a valid row only (see the module docstring).
+        key = F.when(F.col("is_valid"), F.col("event_id")).otherwise(F.uuid())
+        return (
+            enriched.withColumn("__dedup_key", key)
+            .withWatermark("processed_at", self.config.watermark_delay)
+            .dropDuplicatesWithinWatermark(["__dedup_key"])
+            .drop("__dedup_key")
+        )
 
     def start(
-        self,
-        dedup: bool = True,
-        trigger_once: bool = False,
-        source: DataFrame | None = None,
+        self, trigger_once: bool = False, source: DataFrame | None = None
     ) -> StreamingQuery:
         """Start the pipeline.  ``source`` injects an alternative
         streaming frame (Python DataSource, kafka, memory, rate) in
         place of the CSV directory watch -- the pipeline is
         source-agnostic past the registry boundary check, and the
         Python-DataSource path is executed end-to-end in
-        tests/test_streamjoin_pysource.py."""
-        provider = self.config.state_store_provider
-        if provider not in STATE_STORE_CONFS:
-            raise ValueError(
-                f"unknown state_store_provider {provider!r}; "
-                f"expected one of {sorted(STATE_STORE_CONFS)}"
-            )
+        tests/test_streamjoin_pysource.py.  A bad config raises one
+        ValueError listing every problem, before the checkpoint exists."""
+        problems = self.config.validate()
+        if problems:
+            raise ValueError("invalid streaming config: " + "; ".join(problems))
         writer = (
-            self.transformed_stream(dedup, source=source)
+            self.transformed_stream(source=source)
             .writeStream.foreachBatch(self.router)
             .outputMode("append")
             .option("checkpointLocation", self.config.checkpoint_path)
@@ -157,7 +159,7 @@ class StreamingPipeline:
         # its checkpoint recorded
         with _session_conf(self.spark, {
             "spark.sql.shuffle.partitions": str(self.spark.sparkContext.defaultParallelism),
-            **STATE_STORE_CONFS[provider],
+            **STATE_STORE_CONFS[self.config.state_store_provider],
         }):
             return writer.start()
 

@@ -6,7 +6,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from spark_streaming_postgres_lab2_spark.config import EngineConfig, load_config
+from spark_streaming_postgres_lab2_spark.config import (
+    DatabaseConfig,
+    EngineConfig,
+    SparkConfig,
+    StreamingConfig,
+    load_config,
+)
 from spark_streaming_postgres_lab2_spark.functions.multimodal import (
     decode_features,
     decode_real,
@@ -104,6 +110,26 @@ def test_config_validation_catches_bad_stream_values():
     assert len(problems) == 2
     assert any("max_files_per_trigger" in p for p in problems)
     assert any("'rocks'" in p for p in problems)
+
+
+def test_env_int_rejects_a_malformed_value(monkeypatch):
+    """No silent fallback to the default."""
+    monkeypatch.setenv("STREAM_TRIGGER_SECONDS", "ten")
+    with pytest.raises(ValueError, match="STREAM_TRIGGER_SECONDS='ten'"):
+        StreamingConfig()
+    monkeypatch.setenv("DB_PORT", "abc")
+    with pytest.raises(ValueError, match="DB_PORT='abc'"):
+        DatabaseConfig()
+
+
+def test_env_bool_reads_both_spellings_and_rejects_others(monkeypatch):
+    monkeypatch.setenv("SPARK_AQE", " OFF ")
+    monkeypatch.setenv("SPARK_UI", "Yes")
+    cfg = SparkConfig()
+    assert cfg.adaptive_enabled is False and cfg.ui_enabled is True
+    monkeypatch.setenv("SPARK_AQE", "ture")
+    with pytest.raises(ValueError, match="SPARK_AQE='ture'"):
+        SparkConfig()
 
 
 def test_run_pipeline_flags_default_to_stream_env(monkeypatch):

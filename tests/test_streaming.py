@@ -11,6 +11,7 @@ from datetime import datetime, timezone
 
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from spark_streaming_postgres_lab2_spark.config import StreamingConfig
@@ -21,7 +22,10 @@ from spark_streaming_postgres_lab2_spark.operators.analytics import (
     user_sessions,
     verification_counts,
 )
-from spark_streaming_postgres_lab2_spark.operators.validate import validate
+from spark_streaming_postgres_lab2_spark.operators.enrich import transform_and_enrich
+from spark_streaming_postgres_lab2_spark.operators.validate import split_valid_invalid, validate
+from spark_streaming_postgres_lab2_spark.schema.registry import get_registry
+from spark_streaming_postgres_lab2_spark.sources.csv_stream import csv_stream
 from spark_streaming_postgres_lab2_spark.sources.datagen import EventGenerator
 from spark_streaming_postgres_lab2_spark.streaming.pipeline import build_pipeline
 from spark_streaming_postgres_lab2_spark.streaming.sinks import BatchRouter, SinkConfig
@@ -36,6 +40,16 @@ def _checkpoint_conf(ckpt, batch: int = 0) -> dict:
     """The session conf a stream recorded in ``offsets/<batch>``."""
     lines = (ckpt / "offsets" / str(batch)).read_text().splitlines()
     return json.loads(lines[1])["conf"]
+
+
+def _checkpoint_sources(ckpt, batch: int = 0) -> int:
+    """Source offsets in ``offsets/<batch>``: the lines after the
+    version and metadata lines, one per source."""
+    return len((ckpt / "offsets" / str(batch)).read_text().splitlines()) - 2
+
+
+def _epoch_dirs(root) -> set:
+    return {str(d.relative_to(root)) for d in root.glob("*/epoch=*")}
 
 
 def _state_partitions(ckpt) -> int:
@@ -220,6 +234,89 @@ def test_invalid_copy_does_not_consume_dedup_state(spark, tmp_path):
     assert dlq.count() == 1     # corrupted copy dead-lettered
 
 
+@pytest.fixture(scope="module")
+def three_file_run(spark, tmp_path_factory):
+    """One availableNow run over three files, one file per epoch.  Each
+    file holds valid rows, two identical invalid rows and one invalid
+    row of its own; the identical pair repeats in every file."""
+    root = tmp_path_factory.mktemp("three_files")
+    gen = EventGenerator(seed=17, anomaly_rate=0.0, now=NOW)
+    file_rows = []
+    for i in range(3):
+        events = gen.generate_batch(20 + 10 * i)
+        bad = dict(events[0], event_id="bad-dup", price=-5.0)
+        events += [bad, dict(bad), dict(bad, event_id=f"bad-{i}")]
+        gen.write_csv(events, str(root / "in"), f"batch_{i}.csv")
+        file_rows.append(len(events))
+    cfg = StreamingConfig(
+        input_path=str(root / "in"),
+        checkpoint_path=str(root / "ckpt"),
+        output_path=str(root / "out"),
+        max_files_per_trigger=1,
+    )
+    q = build_pipeline(spark, cfg).start(trigger_once=True)
+    q.awaitTermination(120)
+    return root, file_rows, q.recentProgress
+
+
+def test_each_epoch_reads_its_files_once(three_file_run):
+    """One source: an epoch's numInputRows is the rows of the file it
+    read, and the checkpoint records one source offset."""
+    root, file_rows, progress = three_file_run
+    read = [p["numInputRows"] for p in progress if p["numInputRows"]]
+    assert sorted(read) == sorted(file_rows)
+    assert _checkpoint_sources(root / "ckpt") == 1
+
+
+def test_every_invalid_row_lands_across_epochs(spark, three_file_run):
+    """Invalid rows take a fresh dedup key each: identical invalid rows
+    in one epoch and the same invalid row in later epochs all land."""
+    root, file_rows, _ = three_file_run
+    dlq_root = root / "out" / "dead_letter_events"
+    assert len(list(dlq_root.glob("epoch=*"))) >= 3
+    dlq = spark.read.parquet(str(dlq_root))
+    assert dlq.count() == 9
+    assert dlq.filter(F.col("event_id") == "bad-dup").count() == 6
+    events = spark.read.parquet(str(root / "out" / "ecommerce_events"))
+    assert events.count() == sum(file_rows) - 9
+
+
+def test_checkpoint_of_the_two_branch_plan_fails_loudly(spark, tmp_path):
+    """A checkpoint written by the earlier plan (split -> dedup the valid
+    rows -> union the invalid ones: two sources over one directory) does
+    not restart under the one-source plan, and the failed restart
+    writes no epoch."""
+    gen = EventGenerator(seed=19, anomaly_rate=0.1, now=NOW)
+    gen.write_csv(gen.generate_batch(30), str(tmp_path / "in"), "a.csv")
+    cfg = _dedup_config(tmp_path)
+    pipe = build_pipeline(spark, cfg)
+    enriched = transform_and_enrich(validate(csv_stream(
+        spark, cfg.input_path, get_registry().get_schema(), cfg.max_files_per_trigger
+    )))
+    valid, invalid = split_valid_invalid(enriched)
+    old_plan = (
+        valid.withWatermark("processed_at", cfg.watermark_delay)
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .unionByName(invalid)
+    )
+    first = (
+        old_plan.writeStream.foreachBatch(pipe.router)
+        .option("checkpointLocation", cfg.checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    first.awaitTermination(120)
+    ckpt, out = tmp_path / "ckpt", tmp_path / "out"
+    assert _checkpoint_sources(ckpt) == 2
+    written = _epoch_dirs(out)
+    assert "data_quality_metrics/epoch=0" in written
+
+    gen.write_csv(gen.generate_batch(30), str(tmp_path / "in"), "b.csv")
+    with pytest.raises(StreamingQueryException, match=r"\[2\] sources"):
+        pipe.start(trigger_once=True).awaitTermination(120)
+    assert _epoch_dirs(out) == written
+
+
 def test_rocksdb_state_store_dedup(spark, tmp_path):
     """The RocksDB state-store provider (the large-state scale path)
     carries the same dedup semantics as the default provider; the
@@ -248,6 +345,19 @@ def test_start_rejects_unknown_state_store_provider(spark, tmp_path):
     pipe = build_pipeline(spark, _dedup_config(tmp_path, state_store_provider="rocks"))
     with pytest.raises(ValueError, match="rocks"):
         pipe.start(trigger_once=True)
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_start_lists_every_config_problem(spark, tmp_path):
+    """A zero trigger interval is refused, not started back to back,
+    and one error names every problem."""
+    (tmp_path / "in").mkdir()
+    pipe = build_pipeline(
+        spark, _dedup_config(tmp_path, trigger_seconds=0, state_store_provider="rocks")
+    )
+    with pytest.raises(ValueError, match="trigger_seconds") as exc:
+        pipe.start()
+    assert "'rocks'" in str(exc.value)
     assert not (tmp_path / "ckpt").exists()
 
 
