@@ -12,7 +12,9 @@
   deterministic).
 - SimHash: 64-bit bit-vote fingerprint; hamming-distance candidates.
 
-No Python in any hot path: arrays + higher-order functions throughout.
+String hashing stays in JVM expressions; dense-vector math (top-k
+scoring, k-means assignment, hyperplane bucketing, cosine verify) runs
+as numpy over Arrow batches.
 """
 
 from __future__ import annotations
@@ -517,24 +519,6 @@ def shingle_hashes(text_col: Column | str, shingle_n: int = 3) -> Column:
     return F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s))
 
 
-def minhash_signature_from_hashes(hash_col: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<bigint>: min over affine re-hashes of
-    the precomputed shingle hashes (multiplication wraps in the JVM --
-    standard universal-hash MinHash)."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hash_col,
-                    lambda h: h * F.lit(_MINHASH_A[i]).cast("long")
-                    + F.lit(_MINHASH_B[i]).cast("long"),
-                )
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def jaccard_tokens(a: Column, b: Column) -> Column:
     """Exact Jaccard over distinct token sets."""
     da, db = F.array_distinct(a), F.array_distinct(b)
@@ -683,9 +667,8 @@ def minhash_near_dupes(
 
 # --- embedding-cosine near-dup ----------------------------------------------
 
-# 256-dim planes, sliced to the vector's dimensionality at plan time
-# (zip_with would null-pad a dimension mismatch and silently collapse
-# every vector into one bucket -- see embedding_near_dupes_lsh guard).
+# 256-dim planes, truncated to each vector's dimensionality by the
+# bucketers; a vector longer than the planes is rejected, never padded.
 _HYPERPLANE_DIM = 256
 # 96 planes support up to n_tables * n_planes = 96 (e.g. 16 tables x 6
 # planes).  The first 16 are bit-identical to the r2 constants: _rng's
@@ -694,50 +677,6 @@ _HYPERPLANE_DIM = 256
 _HYPERPLANES = [
     [_rng.gauss(0.0, 1.0) for _ in range(_HYPERPLANE_DIM)] for _ in range(96)
 ]
-
-
-def _plane_lit(plane: list[float]) -> Column:
-    # one F.expr per plane, not one F.lit per component: 96 planes x
-    # 64 dims as individual lits is ~6k py4j round trips and ~5 s of
-    # driver-side plan construction per query composition (measured);
-    # a single parsed array literal is ~100x fewer crossings
-    return F.expr(f"array({','.join(repr(x) + 'D' for x in plane)})")
-
-
-def random_hyperplane_bucket(
-    vec_col: Column, n_planes: int = 8, table: int = 0, dim: int | None = None
-) -> Column:
-    """LSH bucket key for cosine similarity: sign bits of ``n_planes``
-    fixed random projections packed into one long.  Vectors with high
-    cosine land in the same bucket with high probability.  ``table``
-    selects a disjoint plane slice and offsets the key space, so
-    buckets from different hash tables never collide.
-
-    ``dim``: when the corpus dimensionality is known statically, the
-    plane literals are truncated in Python at plan-build time instead
-    of F.slice at runtime -- with 96 x 256-float literal arrays the
-    dynamic-slice plan is ~25k literals and a megabyte-class codegen
-    unit; static truncation at dim=64 cuts both 4x.  Without ``dim``,
-    planes are sliced to the vector's own length at runtime (dims
-    above _HYPERPLANE_DIM are rejected by embedding_near_dupes_lsh)."""
-    base = table * n_planes
-    if base + n_planes > len(_HYPERPLANES):
-        raise ValueError(
-            f"table {table} x n_planes {n_planes} needs plane "
-            f"{base + n_planes}; only {len(_HYPERPLANES)} available"
-        )
-    bits = []
-    for i in range(n_planes):
-        if dim is not None:
-            plane = _plane_lit(_HYPERPLANES[base + i][:dim])
-        else:
-            plane = F.slice(_plane_lit(_HYPERPLANES[base + i]), 1, F.size(vec_col))
-        d = dot(vec_col, plane)
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    key = bits[0]
-    for b in bits[1:]:
-        key = key + b
-    return (key + F.lit(table * (1 << n_planes))).cast("long")
 
 
 def _hyperplane_buckets_arrow(
@@ -752,18 +691,17 @@ def _hyperplane_buckets_arrow(
     (batch x dim) @ (dim x L*k) replaces L*k interpreted aggregate-HOF
     folds per row.  Higher-order functions evaluate their lambda per
     array element outside whole-stage codegen, so at L=16, k=6, dim=64
-    the expression path burns ~6k lambda evaluations per row -- the
+    an expression bucketer burns ~6k lambda evaluations per row -- the
     measured dominant cost of the adaptive LSH query (15.6 s at sf0.1,
     VERDICT r3).  A dense sign-projection is exactly the case the
     PySpark guide reserves Arrow-batched Python for: BLAS does the 96
     dots in one vectorized pass, and only (vid, bucket) longs cross
-    back.  Same input contract as the expression path's raise_error
-    guard: with static ``dim`` every row must match exactly; with
-    dim=None, MIXED dims are allowed (each row dots against planes
-    truncated to its own length -- rows are grouped by length inside
-    the batch so each group is still one matmul) and only rows longer
-    than the plane table raise.  NULL embeddings raise a descriptive
-    error either way."""
+    back.  Input contract: with static ``dim`` every row must match
+    exactly; with dim=None, MIXED dims are allowed (each row dots
+    against planes truncated to its own length -- rows are grouped by
+    length inside the batch so each group is still one matmul) and
+    only rows longer than the plane table raise.  NULL embeddings raise
+    a descriptive error either way."""
     import numpy as np
     import pandas as pd
 
@@ -802,8 +740,7 @@ def _hyperplane_buckets_arrow(
                     f"{max_dim}; extend _HYPERPLANES"
                 )
             # group rows by length: each group is one matmul, and a row
-            # dots against planes truncated to its own length -- the
-            # same per-row semantics as the expression path
+            # dots against planes truncated to its own length
             for d_eff in np.unique(lens):
                 idx = np.nonzero(lens == d_eff)[0]
                 m = np.stack(vecs[idx]).astype(np.float64)  # (g, d_eff)
@@ -844,7 +781,7 @@ def _bucket_allpairs_float(with_vec: DataFrame, threshold: float) -> DataFrame:
     (einsum + half-away-from-zero round + threshold keep), so each
     pair's value is bit-identical; cross-table multiplicity is deduped
     by the caller AFTER scoring (deterministic: duplicate rows carry
-    identical values).  Mixed dims follow the per-pair flavor: pairs
+    identical values).  Mixed dims follow the per-pair verify: pairs
     of unequal length are dropped.  Groups are bounded by the caller's
     ``max_bucket_size`` cap, so per-group memory is O(cap^2) pairs."""
     import numpy as np
@@ -910,8 +847,9 @@ def _pair_verify_fold_portable(
     accumulate dot/norms with one vectorized add per dimension --
     bit-identical to the F.aggregate fold / DuckDB list_aggregate.
     Emits (vec_id_1, vec_id_2, __raw_cos); zero-norm pairs dropped.
-    Used for the (tiny) spanning-chain pair set; bucket-bounded
-    candidates go through ``_bucket_allpairs_fold``."""
+    Scores uncapped candidate sets and the (tiny) spanning-chain pair
+    set; bucket-bounded candidates go through
+    ``_bucket_allpairs_fold``."""
     import numpy as np
     import pandas as pd
 
@@ -962,8 +900,9 @@ def _bucket_allpairs_fold(with_vec: DataFrame) -> DataFrame:
     see the verify note in ``embedding_near_dupes_lsh_portable``.
     Emits the UNROUNDED ratio; the engine-sensitive final steps
     (round HALF_UP + threshold) stay in Spark, exactly like the
-    per-pair Arrow verify this replaces.  Zero-norm pairs are dropped
-    here (den == 0), matching the expr flavor's NULL-division drop."""
+    per-pair verify.  Zero-norm pairs are dropped here (den == 0):
+    their cosine is undefined (NULL in the oracle), so they never
+    appear."""
     import numpy as np
     import pandas as pd
 
@@ -1064,7 +1003,7 @@ def _pair_verify_arrow_float(
                 )
                 # HALF-AWAY-FROM-ZERO to match F.round / DuckDB
                 # (np.round is banker's half-to-even: 0.44995 would
-                # round differently across the two verify flavors)
+                # round differently from the oracle)
                 cos = np.sign(cos) * np.floor(np.abs(cos) * 1e4 + 0.5) / 1e4
                 keep = cos >= threshold
                 return pd.DataFrame(
@@ -1085,10 +1024,9 @@ def _pair_verify_arrow_float(
             # np.stack over a batch mixing vector lengths raises,
             # so group rows by length first (same trick as
             # _hyperplane_buckets_arrow).  Cross-dim pairs are
-            # DROPPED, matching the expr flavor exactly (zip_with
-            # null-pads the shorter side and the null propagates
-            # through the fold, so those pairs never pass the
-            # threshold filter there either).
+            # DROPPED: their cosine is undefined (the oracle's
+            # zip_with null-pads the shorter side and the NULL fails
+            # the threshold filter).
             l1 = np.fromiter((len(x) for x in a1), dtype=np.int64, count=n)
             l2 = np.fromiter((len(x) for x in a2), dtype=np.int64, count=n)
             if l1.min() == l1.max() == l2.min() == l2.max():
@@ -1115,8 +1053,6 @@ def embedding_near_dupes_lsh(
     n_tables: int = 1,
     max_bucket_size: int | None = None,
     dim: int | None = None,
-    bucket_impl: str = "arrow",
-    verify_impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup at scale: random-hyperplane buckets ->
     within-bucket self-join -> exact cosine verify.
@@ -1132,65 +1068,17 @@ def embedding_near_dupes_lsh(
     Shuffle stays slim: only (vid, bucket) rows are exploded L times
     and self-joined; the float vectors are joined back by id for the
     surviving candidates only (same survivors-only pattern as
-    minhash_near_dupes).  ``bucket_impl`` picks the projection engine:
-    'arrow' (default) computes all L*k sign bits in one numpy matmul
-    per Arrow batch; 'expr' keeps the plan 100% JVM Column expressions
-    (interpreted HOF folds -- measured ~5x slower at L*k=96, see
-    _hyperplane_buckets_arrow).  ``max_bucket_size`` degrades degenerate
-    buckets -- e.g. every copy of a mass-duplicated embedding lands in
-    one bucket -- to a spanning chain of adjacent-id pairs
-    (_cap_buckets), keeping the copies connected while the self-join
-    stays linear."""
-    if bucket_impl == "arrow":
-        # default: one BLAS matmul per Arrow batch (see
-        # _hyperplane_buckets_arrow for the measurement that motivated
-        # it); only slim (vid, bucket) longs return to the JVM.
-        slim = _hyperplane_buckets_arrow(
-            emb, id_col, vec_col, n_planes, n_tables, dim
-        )
-    elif bucket_impl == "expr":
-        # pure-Column flavor (no Python anywhere): keeps the whole plan
-        # JVM-side at the cost of interpreted per-element HOF lambdas --
-        # the right trade only when Arrow/pandas is unavailable.
-        # dim guard INSIDE the plan (raise_error fires on the executor
-        # at evaluation time): composing the plan stays job-free, and
-        # unlike a driver-side first() probe it checks EVERY row, not
-        # just one.  With a static ``dim`` the guard is exact equality:
-        # a shorter vector would dot against truncated planes and
-        # bucket silently.
-        buckets = F.array(
-            *[
-                random_hyperplane_bucket(F.col(vec_col), n_planes, table=t, dim=dim)
-                for t in range(n_tables)
-            ]
-        )
-        size_ok = (
-            F.size(F.col(vec_col)) == dim
-            if dim is not None
-            else F.size(F.col(vec_col)) <= _HYPERPLANE_DIM
-        )
-        guarded_buckets = F.when(size_ok, buckets).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("embedding dim "),
-                    F.size(F.col(vec_col)).cast("string"),
-                    F.lit(
-                        f" != static dim {dim}"
-                        if dim is not None
-                        else f" exceeds hyperplane dim {_HYPERPLANE_DIM}; extend _HYPERPLANES"
-                    ),
-                )
-            )
-        )
-        slim = emb.select(
-            F.col(id_col).alias("vid"), F.explode(guarded_buckets).alias("bucket")
-        )
-    else:
-        raise ValueError(f"unknown bucket_impl {bucket_impl!r}; use 'arrow' or 'expr'")
-    chain = None
+    minhash_near_dupes).  All L*k sign bits come from one numpy matmul
+    per Arrow batch (_hyperplane_buckets_arrow), which also enforces
+    the dim contract: with a static ``dim`` every row must match it;
+    without, rows longer than the plane table raise.
+    ``max_bucket_size`` degrades degenerate buckets -- e.g. every copy
+    of a mass-duplicated embedding lands in one bucket -- to a spanning
+    chain of adjacent-id pairs (_cap_buckets), keeping the copies
+    connected while the self-join stays linear."""
+    slim = _hyperplane_buckets_arrow(emb, id_col, vec_col, n_planes, n_tables, dim)
     if max_bucket_size is not None:
         slim, chain = _cap_buckets(slim, ["bucket"], "vid", max_bucket_size)
-    if verify_impl == "arrow" and max_bucket_size is not None:
         # Per-BUCKET grouped verify (r15 guide-§8 restructure): the
         # payload-free bucket self-join + per-pair vector joins shipped
         # two 64-float arrays per CANDIDATE pair; on the measured
@@ -1204,24 +1092,20 @@ def embedding_near_dupes_lsh(
         # half-away round as the per-pair verify); cross-table
         # multiplicity (~1.3x) is deduped after scoring, where rows are
         # three slim columns instead of pairs-plus-vectors.  Gated on
-        # max_bucket_size: the cap both bounds per-group memory
-        # (O(cap^2) pairs) and guarantees the _cap_buckets window has
-        # already dropped singleton buckets from ``slim``.
+        # max_bucket_size: the cap bounds per-group memory (O(cap^2)
+        # pairs).
         vecs = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("__vec"))
         scored = _bucket_allpairs_float(
             slim.join(vecs, "vid").select("bucket", "vid", "__vec"), threshold
         )
-        if chain is not None:
-            chain_pairs = chain.select(
-                F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
-            )
-            scored = scored.unionByName(
-                _pair_verify_arrow_float(emb, id_col, vec_col, chain_pairs,
-                                         threshold, dim)
-            )
-        if n_tables > 1 or chain is not None:
-            scored = scored.dropDuplicates(["vec_id_1", "vec_id_2"])
-        return scored
+        chain_pairs = chain.select(
+            F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
+        )
+        scored = scored.unionByName(
+            _pair_verify_arrow_float(emb, id_col, vec_col, chain_pairs,
+                                     threshold, dim)
+        )
+        return scored.dropDuplicates(["vec_id_1", "vec_id_2"])
     left = slim.select("bucket", F.col("vid").alias("vec_id_1"))
     right = slim.select("bucket", F.col("vid").alias("vec_id_2"))
     candidates = (
@@ -1229,13 +1113,7 @@ def embedding_near_dupes_lsh(
         .filter(F.col("vec_id_1") < F.col("vec_id_2"))
         .select("vec_id_1", "vec_id_2")
     )
-    if chain is not None:
-        candidates = candidates.unionByName(
-            chain.select(
-                F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
-            )
-        )
-    if n_tables > 1 or chain is not None:
+    if n_tables > 1:
         # a pair can collide in several tables; dedup the slim id pairs
         # BEFORE the vector join so each candidate is scored once.
         # (r5 note: moving this distinct AFTER the cosine filter -- the
@@ -1245,60 +1123,11 @@ def embedding_near_dupes_lsh(
         # barrier that lets the two vector joins run broadcast over a
         # compact, evenly-partitioned pair set.  Keep the barrier.)
         candidates = candidates.dropDuplicates(["vec_id_1", "vec_id_2"])
-    # Verify the survivors.  Both flavors join the vector table back by
-    # id (distributed -- the vectors are never a driver structure, so
-    # the shape survives a 100 TB corpus); they differ only in where
-    # the per-pair dot product runs:
-    #  - 'arrow' (default): one numpy einsum per Arrow batch -- the
-    #    same dense-math-in-Arrow trade as the bucketer; measured 1.5x
-    #    faster than the expression path on 810k candidates at sf0.1.
-    #  - 'expr': pure JVM Column path with the norm folds HOISTED out
-    #    of the per-pair verify (norm once per vector as a scalar
-    #    column carried through the join -- the join exchange is a real
-    #    evaluation barrier), leaving one interpreted dot fold per
-    #    pair.  NOT done by pre-normalizing the array: dividing inside
-    #    a transform lambda re-evaluates the referenced norm() subtree
-    #    per ELEMENT (O(d^2), the r4 shingle trap).
-    if verify_impl == "arrow":
-        return _pair_verify_arrow_float(
-            emb, id_col, vec_col, candidates, threshold, dim
-        )
-    if verify_impl != "expr":
-        raise ValueError(f"unknown verify_impl {verify_impl!r}; use 'arrow' or 'expr'")
-    vecs = emb.select(
-        F.col(id_col).alias("__vid"),
-        F.col(vec_col).alias("__vec"),
-        norm(F.col(vec_col)).alias("__nrm"),
-    )
-    scored = (
-        candidates.join(
-            vecs.select(
-                F.col("__vid").alias("vec_id_1"),
-                F.col("__vec").alias("__v1"),
-                F.col("__nrm").alias("__n1"),
-            ),
-            "vec_id_1",
-        )
-        .join(
-            vecs.select(
-                F.col("__vid").alias("vec_id_2"),
-                F.col("__vec").alias("__v2"),
-                F.col("__nrm").alias("__n2"),
-            ),
-            "vec_id_2",
-        )
-        .select("vec_id_1", "vec_id_2", "__v1", "__v2", "__n1", "__n2")
-    )
-    return (
-        scored.withColumn(
-            "cosine_sim",
-            F.round(
-                dot(F.col("__v1"), F.col("__v2")) / (F.col("__n1") * F.col("__n2")), 4
-            ),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("vec_id_1", "vec_id_2", "cosine_sim")
-    )
+    # Verify the survivors: join the vector table back by id
+    # (distributed -- the vectors are never a driver structure, so the
+    # shape survives a 100 TB corpus) and score with one numpy einsum
+    # per Arrow batch.
+    return _pair_verify_arrow_float(emb, id_col, vec_col, candidates, threshold, dim)
 
 
 def adaptive_lsh_pairs(
@@ -2419,8 +2248,6 @@ def embedding_near_dupes_lsh_portable(
     n_planes: int = 4,
     n_tables: int = 16,
     dim: int = 64,
-    bucket_impl: str = "arrow",
-    verify_impl: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Engine-agnostic twin of embedding_near_dupes_lsh: random-
@@ -2436,65 +2263,21 @@ def embedding_near_dupes_lsh_portable(
     loss.  Use the float/adaptive path at scale; use this one to verify
     the algorithm end-to-end.
 
-    ``bucket_impl='arrow'`` (default) computes the SAME integer buckets
-    via one exact int64 numpy matmul per Arrow batch
-    (_int_hyperplane_buckets_arrow); ``verify_impl='arrow'`` (default)
-    scores candidates with sequential-order vectorized accumulation
-    (bit-identical to the fold -- see the inline note).  ``'expr'``
-    keeps the pure-Column formulations that mirror the oracle SQL
-    expression-for-expression; tests pin that both pairs of flavors
-    produce identical output."""
-    if bucket_impl == "arrow":
-        slim = _int_hyperplane_buckets_arrow(
-            emb, id_col, vec_col, n_planes, n_tables, dim
-        )
-    elif bucket_impl == "expr":
-        qv = F.transform(
-            F.col(vec_col),
-            lambda v: F.floor(v.cast("double") * _QUANT_SCALE).cast("long"),
-        )
-        size_ok = F.size(F.col(vec_col)) == dim
-        base = emb.select(
-            F.col(id_col).alias("vid"),
-            F.when(size_ok, qv)
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("embedding dim "),
-                        F.size(F.col(vec_col)).cast("string"),
-                        F.lit(f" != static dim {dim}"),
-                    )
-                )
-            )
-            .alias("__qv"),
-        )
-        buckets = []
-        for t in range(n_tables):
-            key = None
-            for j in range(n_planes):
-                ints = _int_plane(t * n_planes + j, dim)
-                plane = F.expr("array(" + ",".join(f"{p}L" for p in ints) + ")")
-                d = F.aggregate(
-                    F.zip_with(F.col("__qv"), plane, lambda a, b: a * b),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                )
-                bit = F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-                key = bit if key is None else key + bit
-            buckets.append((key + F.lit(t * (1 << n_planes))).cast("long"))
-        slim = base.select("vid", F.explode(F.array(*buckets)).alias("bucket"))
-    else:
-        raise ValueError(
-            f"unknown bucket_impl {bucket_impl!r}; use 'arrow' or 'expr'"
-        )
-    chain = None
+    Buckets come from one exact int64 numpy matmul per Arrow batch
+    (_int_hyperplane_buckets_arrow).  Candidates are scored with a
+    sequential per-dimension accumulation that is bit-identical to the
+    oracle's list_aggregate fold (_pair_verify_fold_portable /
+    _bucket_allpairs_fold); round HALF_UP to 4 places and the threshold
+    filter run in Spark.  A pair whose cosine is undefined -- a
+    zero-norm vector, or a NULL element -- never appears, as in the
+    oracle, where the NULL cosine fails the threshold."""
+    slim = _int_hyperplane_buckets_arrow(emb, id_col, vec_col, n_planes, n_tables, dim)
     if max_bucket_size is not None:
         # deterministic (vid-ordered) cap: the chain pairs are exact
         # SQL-window arithmetic, so the DuckDB oracle replays them
         # (sql_emb_lsh_adaptive_pair_ctes) -- capping does NOT cost
         # oracle-checkability, unlike the float family's cap.
         slim, chain = _cap_buckets(slim, ["bucket"], "vid", max_bucket_size)
-    if verify_impl == "arrow" and max_bucket_size is not None:
         # Per-BUCKET grouped verify (r15 guide-§8 restructure, same as
         # the float family): ship each vector once per (vid, bucket)
         # row through ONE bucket exchange and form the C(g,2) pairs
@@ -2502,24 +2285,22 @@ def embedding_near_dupes_lsh_portable(
         # candidate pair (~64% of all pairs collide on the measured
         # sf0.1 worst case).  Per-pair float64 op sequence is the SAME
         # sequential per-dimension accumulation as the per-pair verify
-        # below -- bit-identical to the expr fold and the DuckDB
-        # oracle -- and round HALF_UP + threshold stay in Spark.
+        # below -- bit-identical to the DuckDB oracle's fold -- and
+        # round HALF_UP + threshold stay in Spark.
         # Cross-table multiplicity is deduped AFTER scoring on slim
         # (id, id, double) rows; duplicate rows are value-identical so
         # the result set is unchanged.  Gated on max_bucket_size: the
-        # cap bounds per-group memory and _cap_buckets has already
-        # dropped singleton buckets from ``slim``.
+        # cap bounds per-group memory (O(cap^2) pairs).
         vkey = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("__vec"))
         scored = _bucket_allpairs_fold(
             slim.join(vkey, "vid").select("bucket", "vid", "__vec")
         )
-        if chain is not None:
-            chain_pairs = chain.select(
-                F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
-            )
-            scored = scored.unionByName(
-                _pair_verify_fold_portable(emb, id_col, vec_col, chain_pairs)
-            )
+        chain_pairs = chain.select(
+            F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
+        )
+        scored = scored.unionByName(
+            _pair_verify_fold_portable(emb, id_col, vec_col, chain_pairs)
+        )
         # r15 (guide §2.3): threshold BEFORE the cross-table dedup --
         # every duplicate copy of a pair carries the identical
         # bit-exact __raw_cos (both scorers run the same sequential
@@ -2539,84 +2320,15 @@ def embedding_near_dupes_lsh_portable(
         left.join(right, "bucket")
         .filter(F.col("vec_id_1") < F.col("vec_id_2"))
         .select("vec_id_1", "vec_id_2")
+        .dropDuplicates(["vec_id_1", "vec_id_2"])
     )
-    if chain is not None:
-        candidates = candidates.unionByName(
-            chain.select(
-                F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
-            )
-        )
-    candidates = candidates.dropDuplicates(["vec_id_1", "vec_id_2"])
-    vecs = emb.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec"))
-    joined = candidates.join(
-        vecs.select(F.col("__vid").alias("vec_id_1"), F.col("__vec").alias("__v1")),
-        "vec_id_1",
-    ).join(
-        vecs.select(F.col("__vid").alias("vec_id_2"), F.col("__vec").alias("__v2")),
-        "vec_id_2",
-    )
-    if verify_impl == "arrow":
-        # Vectorized verify with BIT-exact parity to the expr fold and
-        # the DuckDB oracle: the dot and the two squared norms are
-        # accumulated with ONE vectorized add per dimension, so every
-        # pair sees the identical left-to-right float64 op sequence as
-        # F.aggregate / list_aggregate (numpy ufuncs don't fuse or
-        # reorder; einsum/np.dot would pairwise-sum and could differ in
-        # the last ulp).  The engine-sensitive final steps -- round
-        # HALF_UP to 4 and the threshold filter -- stay in Spark, so
-        # they are the SAME JVM ops the expr flavor runs.  On the
-        # fixture's near-random vectors the 16-table bucketing is
-        # non-discriminative (~64% of all pairs become candidates --
-        # the documented worst case), which made the per-pair
-        # interpreted HOF fold the dominant cost of the portable family
-        # (~6 s of the sf0.1 run); this path cuts it to ~192 vectorized
-        # ops per Arrow batch.
-        import numpy as np
-        import pandas as pd
-
-        def _verify(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                v1 = np.stack(pdf["__v1"].to_numpy()).astype(np.float64)
-                v2 = np.stack(pdf["__v2"].to_numpy()).astype(np.float64)
-                n = len(pdf)
-                accd = np.zeros(n)
-                acc1 = np.zeros(n)
-                acc2 = np.zeros(n)
-                for d in range(v1.shape[1]):
-                    x, y = v1[:, d], v2[:, d]
-                    accd = accd + x * y
-                    acc1 = acc1 + x * x
-                    acc2 = acc2 + y * y
-                den = np.sqrt(acc1) * np.sqrt(acc2)
-                # zero-norm guard (review finding): the expr flavor
-                # computes 0.0/0.0 -> NULL (Spark division), and the
-                # threshold filter drops the NULL; numpy would yield
-                # NaN, and Spark orders NaN ABOVE every double, so the
-                # pair would be wrongly EMITTED.  Dropping the rows
-                # here is exactly the expr behavior: a zero-norm pair
-                # never appears.
-                keep = den != 0.0
-                yield pd.DataFrame(
-                    {
-                        "vec_id_1": pdf["vec_id_1"].to_numpy()[keep],
-                        "vec_id_2": pdf["vec_id_2"].to_numpy()[keep],
-                        "__raw_cos": accd[keep] / den[keep],
-                    }
-                )
-
-        scored = joined.mapInPandas(
-            _verify, "vec_id_1 long, vec_id_2 long, __raw_cos double"
-        ).withColumn("cosine_sim", F.round(F.col("__raw_cos"), 4))
-    elif verify_impl == "expr":
-        scored = joined.withColumn(
-            "cosine_sim", F.round(cosine(F.col("__v1"), F.col("__v2")), 4)
-        )
-    else:
-        raise ValueError(
-            f"unknown verify_impl {verify_impl!r}; use 'arrow' or 'expr'"
-        )
-    return scored.filter(F.col("cosine_sim") >= threshold).select(
-        "vec_id_1", "vec_id_2", "cosine_sim"
+    # On the fixture's near-random vectors the 16-table bucketing is
+    # non-discriminative (~64% of all pairs become candidates -- the
+    # documented worst case), so this verify is the family's dominant
+    # cost: ~192 vectorized ops per Arrow batch.
+    return (
+        _pair_verify_fold_portable(emb, id_col, vec_col, candidates)
+        .withColumn("cosine_sim", F.round(F.col("__raw_cos"), 4))
+        .filter(F.col("cosine_sim") >= threshold)
+        .select("vec_id_1", "vec_id_2", "cosine_sim")
     )

@@ -104,18 +104,19 @@ DRIVER_PRIORITY = [
     "similarity_topk",
     "ann_recall_audit",
     "ann_ivf_lossless_audit",
-    # Tier 2 (13, slots 38-50): the r12-last-green cohort (27 rows;
+    # Tier 2 (11, slots 38-48): the r12-last-green cohort (27 rows;
     # ann_ivfpq_adc_audit and term_pmi_cooccurrence already hold
     # re-stamp slots above), ranked by MEASURED cross-module blame-span
     # width at the r16 head (tools/parity_check.fn_blame_spans, sum of
     # span lines outside the fn's own module): doc_fingerprints 7,
     # doc_hof_stats / fact_join_unbucketed / nation_profit /
     # sorted_neighborhood_dedup 4, remainder 0 (alphabetical).  The
-    # 12 lowest-ranked (mad_anomaly_hours, order_first_last_nth,
-    # order_window_suite, revenue_concentration, rolling_7d_revenue,
-    # shard_manifest, top_spenders_lateral, train_eval_split,
-    # training_mix_upsample, url_canonical_dedup, user_event_paths,
-    # value_histogram) rotate in r17 with the r13 cohort.
+    # 14 lowest-ranked (intra_doc_dedup, latest_event_per_user,
+    # mad_anomaly_hours, order_first_last_nth, order_window_suite,
+    # revenue_concentration, rolling_7d_revenue, shard_manifest,
+    # top_spenders_lateral, train_eval_split, training_mix_upsample,
+    # url_canonical_dedup, user_event_paths, value_histogram) rotate in
+    # r17 with the r13 cohort.
     "doc_fingerprints",
     "doc_hof_stats",
     "fact_join_unbucketed",
@@ -127,8 +128,13 @@ DRIVER_PRIORITY = [
     "gapfill_interpolate",
     "hourly_gapfill",
     "html_text_extract",
-    "intra_doc_dedup",
-    "latest_event_per_user",
+    # Cross-module re-certifications (2, slots 49-50): the portable
+    # embedding-LSH family in functions/similarity.py lost its
+    # expression bucketer and verify, and its uncapped tail now scores
+    # through _pair_verify_fold_portable.  These are the two queries
+    # whose blame spans reach the edited lines (the blame guard's list).
+    "embedding_lsh_near_dup_portable",
+    "semantic_dedup",
 ]
 
 

@@ -9,6 +9,7 @@ prunes columns and pushes filters into the parquet scan.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,6 +170,19 @@ def spread_input(df: DataFrame) -> DataFrame:
 CUT_MIN_INPUT_BYTES = 4 * 1024 * 1024
 
 
+def _local_file_size(uri: str) -> int | None:
+    """Size of the file behind a ``file:`` URI in any spelling Spark or
+    Hadoop produce (``file:/p``, ``file:///p``, percent-encoded), or
+    None when the URI is not a statable local file."""
+    parsed = urlparse(uri)
+    if parsed.scheme != "file":
+        return None
+    try:
+        return os.path.getsize(unquote(parsed.path))
+    except OSError:
+        return None
+
+
 def cut_when_large(df: DataFrame, base: DataFrame) -> DataFrame:
     """Scale-gated multi-consumer lineage cut (VERDICT r15 item 5):
     ``df`` (a slim derived frame consumed from >1 side of the plan) is
@@ -180,13 +194,12 @@ def cut_when_large(df: DataFrame, base: DataFrame) -> DataFrame:
     scan's file index (driver-side metadata, no job)."""
     total = 0
     for uri in base.inputFiles():
-        path = uri[7:] if uri.startswith("file://") else uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
+        size = _local_file_size(uri)
+        if size is None:
             # non-local / unstatable input: assume large (the cut is
             # the safe side at unknown scale)
             return df.localCheckpoint(eager=False)
+        total += size
     if total >= CUT_MIN_INPUT_BYTES:
         return df.localCheckpoint(eager=False)
     return df

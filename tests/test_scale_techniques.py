@@ -117,3 +117,23 @@ def test_salted_join_guards(spark, sf_dir):
         salted_join(renamed, t["part"], "p_partkey", big_unique_col="l_orderkey", how="full")
     with pytest.raises(ValueError, match="differ from the join key"):
         salted_join(renamed, t["part"], "p_partkey", big_unique_col="p_partkey")
+
+
+def test_cut_when_large_stats_percent_encoded_local_uris(spark, tmp_path):
+    """A small local input under a directory whose name needs
+    percent-encoding stays un-cut: Spark lists it as
+    ``file:///...a%20b...``, and the gate must decode the URI to stat
+    the file instead of treating it as unknown (and so large) input.
+    Non-local schemes still count as unknown."""
+    from spark_streaming_postgres_lab2_spark.sources.tables import (
+        _local_file_size,
+        cut_when_large,
+    )
+
+    path = str(tmp_path / "a b%c" / "t.parquet")
+    spark.range(10).write.parquet(path)
+    base = spark.read.parquet(path)
+    assert any("%20" in uri for uri in base.inputFiles())
+    slim = base.select("id")
+    assert cut_when_large(slim, base) is slim
+    assert _local_file_size("hdfs://nn/warehouse/t.parquet") is None

@@ -400,8 +400,8 @@ def test_embedding_lsh_finds_planted_near_dups(spark):
 
 
 def test_arrow_buckets_mixed_dims_and_nulls(spark):
-    """The arrow bucketing path matches the expression path's input
-    contract: dim=None accepts mixed dims (per-row plane truncation),
+    """The float-family bucketer's input contract: dim=None accepts
+    mixed dims (per-row plane truncation),
     NULL embeddings raise a descriptive error, and a static-dim
     mismatch names the offending dims."""
     import pytest
@@ -429,36 +429,34 @@ def test_arrow_buckets_mixed_dims_and_nulls(spark):
         _hyperplane_buckets_arrow(mixed, "vec_id", "embedding", 4, 2, 8).collect()
 
 
-def test_portable_lsh_arrow_flavors_match_expr(spark, sf_dir):
-    """The portable family's Arrow bucketer (exact int64 matmul) and
-    Arrow verifier (sequential-order vectorized accumulation) produce
-    BIT-identical output -- ids AND rounded cosines -- to the pure
-    expr formulation that mirrors the DuckDB oracle."""
-    from spark_streaming_postgres_lab2_spark.functions.similarity import (
-        embedding_near_dupes_lsh_portable,
-    )
-    from spark_streaming_postgres_lab2_spark.sources.tables import load_tables
+def test_portable_lsh_queries_match_oracle_rows(spark, sf_dir):
+    """The portable family's integer bucketer and fold-order verifiers
+    reproduce the DuckDB oracle's rows exactly -- ids AND rounded
+    cosines -- on the uncapped fixed-(k, L) query (per-pair verify) and
+    the adaptive capped semantic_dedup (per-bucket verify)."""
+    import os
+    import sys
 
-    emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
-    arrow = sorted(
-        map(tuple, embedding_near_dupes_lsh_portable(emb, threshold=0.4).collect())
-    )
-    expr = sorted(
-        map(
-            tuple,
-            embedding_near_dupes_lsh_portable(
-                emb, threshold=0.4, bucket_impl="expr", verify_impl="expr"
-            ).collect(),
-        )
-    )
-    assert arrow == expr
-    assert len(arrow) > 0
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from parity_check import register_fixture_views
+
+    con = duckdb.connect()
+    register_fixture_views(con, sf_dir)
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    for name in ("embedding_lsh_near_dup_portable", "semantic_dedup"):
+        got = sorted(map(tuple, qs[name](spark, sf_dir).collect()))
+        want = sorted(con.sql(oracles[name]).fetchall())
+        assert got, name
+        assert got == want, name
 
 
 def test_int_bucketer_rejects_bad_dims(spark):
-    """The portable Arrow bucketer enforces the static-dim contract the
-    expr raise_error guard enforces: mismatched dims raise naming the
-    offending sizes."""
+    """The portable bucketer enforces the family's static-dim contract:
+    mismatched dims raise naming the offending sizes."""
     import pytest
 
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
@@ -472,39 +470,42 @@ def test_int_bucketer_rejects_bad_dims(spark):
         _int_hyperplane_buckets_arrow(bad, "vec_id", "embedding", 4, 16, 64).collect()
 
 
-def test_portable_verify_drops_zero_norm_pairs(spark):
-    """Two all-zero vectors share every LSH bucket (all sign bits set)
-    but have undefined cosine: the expr flavor's 0.0/0.0 -> NULL is
-    dropped by the threshold filter, and the Arrow flavor must do the
-    same instead of emitting NaN (Spark orders NaN above every double,
-    so an unguarded NaN would pass the filter -- review finding)."""
-    from pyspark.sql import Row
-
+def test_lsh_verify_drops_undefined_cosines(spark):
+    """A pair whose cosine is undefined never appears, in either LSH
+    family, capped or not: two all-zero vectors share every bucket
+    (all sign bits set) but have a zero norm, and a vector with a NULL
+    element has no cosine at all.  numpy would yield NaN for both, and
+    Spark orders NaN above every double, so an unguarded NaN would pass
+    the threshold filter."""
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
+        embedding_near_dupes_lsh,
         embedding_near_dupes_lsh_portable,
     )
 
     emb = spark.createDataFrame(
         [
-            Row(vec_id=1, embedding=[0.0] * 64),
-            Row(vec_id=2, embedding=[0.0] * 64),
-            Row(vec_id=3, embedding=[0.5] * 64),
-            Row(vec_id=4, embedding=[0.5] * 64),
-        ]
+            (1, [0.5] * 64),
+            (2, [0.5] * 63 + [None]),
+            (3, [0.5] * 64),
+            (4, [0.0] * 64),
+            (5, [0.0] * 64),
+        ],
+        "vec_id long, embedding array<double>",
     )
-    arrow = sorted(map(tuple, embedding_near_dupes_lsh_portable(emb).collect()))
-    expr = sorted(
-        map(
-            tuple,
-            embedding_near_dupes_lsh_portable(
-                emb, bucket_impl="expr", verify_impl="expr"
-            ).collect(),
-        )
-    )
-    assert arrow == expr
-    pair_ids = {(a, b) for a, b, _ in arrow}
-    assert (1, 2) not in pair_ids  # zero-norm pair dropped
-    assert (3, 4) in pair_ids      # true duplicates still found
+    for cap in (None, 2):
+        for out in (
+            embedding_near_dupes_lsh(
+                emb, threshold=0.4, n_planes=4, n_tables=16, dim=64,
+                max_bucket_size=cap,
+            ),
+            embedding_near_dupes_lsh_portable(emb, max_bucket_size=cap),
+        ):
+            rows = out.collect()
+            assert not any(math.isnan(r.cosine_sim) for r in rows), rows
+            pairs = {(r.vec_id_1, r.vec_id_2) for r in rows}
+            assert (4, 5) not in pairs  # zero-norm pair
+            assert (1, 2) not in pairs and (2, 3) not in pairs  # NULL element
+            assert (1, 3) in pairs  # the true duplicate
 
 
 def test_snm_dedup_passes_and_threshold(spark, tmp_path):
