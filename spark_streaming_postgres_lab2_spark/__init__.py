@@ -17,5 +17,4 @@ __version__ = "0.1.0"
 
 # NOTE: do not define names here that shadow submodules (the driver
 # imports `spark_streaming_postgres_lab2_spark.queries` directly).
-from .config import EngineConfig, load_config  # noqa: E402,F401
 from .session import build_session  # noqa: E402,F401

@@ -1,12 +1,23 @@
 """Environment-driven configuration (reference parity: config/settings.py).
 
 The reference drives every subsystem off env vars with validated
-dataclasses (reference config/settings.py:13-230).  Same pattern here
-for every setting the engine applies, with Spark-native additions
-(shuffle partitions, AQE) instead of Postgres connection pools.  The
+dataclasses (reference config/settings.py:13-230).  Same pattern here,
+one dataclass per consumer: ``DatabaseConfig`` for the JDBC sink,
+``StreamingConfig`` for the stream (``StreamingPipeline.start`` runs
+its ``validate``), ``SparkConfig`` for ``build_session``.  The
 reference's quality-threshold and retry sections have no env twin: the
 pipeline builds ``PipelineMonitor()`` and ``database_retry_policy()``,
 so those defaults are the one place their values live.
+
+``SparkConfig`` carries only what differs per deployment (master, app
+name, shuffle partitions, the sort-merge escape hatch, driver memory,
+UI).  Session settings the engine's results or plans rely on are
+constants in ``build_session``: AQE and Arrow on, and the UTC session
+time zone that timestamp parity needs (``load_tables`` sets it again
+for every batch read).  The scan split size is Spark's own 128 MiB
+default.  Spark checks the values it is handed where it uses them
+(``spark.sql.shuffle.partitions`` must be positive, the JDBC
+``batchsize`` at least 1), so no dataclass repeats those checks.
 """
 
 from __future__ import annotations
@@ -136,26 +147,16 @@ class StreamingConfig:
             )
         return problems
 
-    def to_dict(self) -> dict[str, Any]:
-        return asdict(self)
-
 
 @dataclass
 class SparkConfig:
-    """Spark session tuning. Sized for local[N]; at cluster scale the
-    same knobs are what you would tune per-job (shuffle partitions ~
-    2-3x total cores, AQE on for skew/coalesce)."""
+    """Spark session deployment settings. Sized for local[N]; at cluster
+    scale these are what you would set per job (shuffle partitions ~
+    2-3x total cores)."""
 
     master: str = field(default_factory=lambda: _env("SPARK_MASTER", "local[*]"))
     app_name: str = field(default_factory=lambda: _env("SPARK_APP_NAME", "lab2_spark_engine"))
     shuffle_partitions: int = field(default_factory=lambda: _env_int("SPARK_SHUFFLE_PARTITIONS", 32))
-    # scan granularity: partitions this size must fit executor memory
-    # comfortably; at 100 TB this knob (with shuffle_partitions) decides
-    # spill behaviour
-    max_partition_bytes: int = field(
-        default_factory=lambda: _env_int("SPARK_MAX_PARTITION_BYTES", 128 * 1024 * 1024)
-    )
-    adaptive_enabled: bool = field(default_factory=lambda: _env_bool("SPARK_AQE", True))
     # r15 (guide §3.1/§9): let the planner pick shuffled-hash over
     # sort-merge when one side fits a per-partition hash map (skips
     # both sort passes; measured 0.74-0.94x on every SMJ-site query).
@@ -175,43 +176,8 @@ class SparkConfig:
     prefer_sort_merge_join: bool = field(
         default_factory=lambda: _env_bool("SPARK_PREFER_SMJ", False)
     )
-    session_timezone: str = field(default_factory=lambda: _env("SPARK_SESSION_TZ", "UTC"))
-    arrow_enabled: bool = field(default_factory=lambda: _env_bool("SPARK_ARROW", True))
     # in local[*] mode the executors run INSIDE the driver JVM, so this
     # is the entire engine's heap -- Spark's 1g default starves any
     # broadcast build or wide aggregation once data passes ~sf0.1
     driver_memory: str = field(default_factory=lambda: _env("SPARK_DRIVER_MEMORY", "16g"))
     ui_enabled: bool = field(default_factory=lambda: _env_bool("SPARK_UI", False))
-
-    def to_dict(self) -> dict[str, Any]:
-        return asdict(self)
-
-
-@dataclass
-class EngineConfig:
-    """Top-level config composing every subsystem."""
-
-    database: DatabaseConfig = field(default_factory=DatabaseConfig)
-    streaming: StreamingConfig = field(default_factory=StreamingConfig)
-    spark: SparkConfig = field(default_factory=SparkConfig)
-
-    def validate(self) -> list[str]:
-        """Return a list of config problems (empty == valid)."""
-        problems = [f"streaming.{p}" for p in self.streaming.validate()]
-        if self.database.batch_size <= 0:
-            problems.append("database.batch_size must be positive")
-        if self.spark.shuffle_partitions <= 0:
-            problems.append("spark.shuffle_partitions must be positive")
-        return problems
-
-    def to_dict(self) -> dict[str, Any]:
-        return {
-            "database": self.database.to_dict(),
-            "streaming": self.streaming.to_dict(),
-            "spark": self.spark.to_dict(),
-        }
-
-
-def load_config() -> EngineConfig:
-    """Build config from the current environment."""
-    return EngineConfig()

@@ -29,6 +29,9 @@ class BatchQualityMetrics:
     null_counts: dict[str, int] = field(default_factory=dict)
     event_type_distribution: dict[str, int] = field(default_factory=dict)
     error_distribution: dict[str, int] = field(default_factory=dict)
+    # the sink's time for the epoch, from the metrics collect through
+    # the metrics-row write; 0.0 until the sink sets it
+    processing_seconds: float = 0.0
 
     @property
     def validity_rate(self) -> float:
@@ -45,6 +48,7 @@ class BatchQualityMetrics:
             "null_counts": dict(self.null_counts),
             "event_type_distribution": dict(self.event_type_distribution),
             "error_distribution": dict(self.error_distribution),
+            "processing_seconds": self.processing_seconds,
         }
 
 

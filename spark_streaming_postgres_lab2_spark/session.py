@@ -23,21 +23,21 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
         SparkSession.builder.master(master)
         .appName(cfg.app_name)
         .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", str(cfg.adaptive_enabled).lower())
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", cfg.session_timezone)
+        # timestamp parity with the oracle is defined in UTC
+        .config("spark.sql.session.timeZone", "UTC")
         # Reference semantics are Spark 3.5 (permissive); ANSI also breaks
         # wrapping-multiply hash mixing (MinHash universal hashing).
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", str(cfg.arrow_enabled).lower())
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", str(cfg.ui_enabled).lower())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config(
             "spark.sql.join.preferSortMergeJoin",
             str(cfg.prefer_sort_merge_join).lower(),
         )
-        .config("spark.sql.files.maxPartitionBytes", str(cfg.max_partition_bytes))
     )
     if cfg.driver_memory:
         builder = builder.config("spark.driver.memory", cfg.driver_memory)

@@ -25,6 +25,7 @@ JDBC appends (S3-S5).  Differences by design:
 from __future__ import annotations
 
 import logging
+import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
@@ -35,7 +36,7 @@ from pyspark.util import inheritable_thread_target
 from ..operators.enrich import DEAD_LETTER_COLUMNS, ENRICHED_EVENT_COLUMNS
 from ..operators.quality import calculate_quality_metrics, metrics_row_df
 from ..operators.validate import split_valid_invalid
-from ..utils.monitoring import BatchMetrics, BatchTracker, PipelineMonitor
+from ..utils.monitoring import PipelineMonitor
 from ..utils.retry import RetryPolicy, database_retry_policy
 
 log = logging.getLogger(__name__)
@@ -102,55 +103,45 @@ class BatchRouter:
             batch_df.unpersist()
 
     def _route(self, batch_df: DataFrame, batch_id: int) -> None:
-        with BatchTracker(batch_id) as tracker:
-            # the one action that materialises the epoch (and commits the
-            # dedup state): it runs alone, as two first actions at once
-            # would both run the stateful plan
-            q = calculate_quality_metrics(batch_df, batch_id)
-            if q.total_rows == 0:
-                return
-            valid, dead = split_valid_invalid(batch_df)
-            valid = valid.select(*[c for c in ENRICHED_EVENT_COLUMNS if c in batch_df.columns])
-            dead = dead.select(*[c for c in DEAD_LETTER_COLUMNS if c in batch_df.columns])
-            writes = [(valid, self.sink.events_path)]
-            if q.invalid_rows:
-                writes.append((dead, self.sink.dead_letter_path))
-            # the data writes run at the same time, each in a thread that
-            # carries the caller's job group, description and tags (so
-            # stopping the query cancels them); leaving the pool waits for
-            # every write, as the epoch's cache is released after this;
-            # the first error in submission order is raised, any other
-            # is logged
-            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                futures = [
-                    pool.submit(
-                        inheritable_thread_target(batch_df.sparkSession)(self.retry.execute),
-                        self._write, df, path, batch_id,
-                    )
-                    for df, path in writes
-                ]
-            errors = [e for e in (f.exception() for f in futures) if e is not None]
-            for later in errors[1:]:
-                log.error("batch %s: another data write failed too", batch_id, exc_info=later)
-            if errors:
-                raise errors[0]
-            # last, and only after every data write succeeded: the
-            # metrics row marks the epoch as committed
-            metrics_df = metrics_row_df(batch_df.sparkSession, q)
-            self.retry.execute(self._write, metrics_df, self.sink.metrics_path, batch_id)
+        started = time.monotonic()
+        # the one action that materialises the epoch (and commits the
+        # dedup state): it runs alone, as two first actions at once
+        # would both run the stateful plan
+        q = calculate_quality_metrics(batch_df, batch_id)
+        if q.total_rows == 0:
+            return
+        valid, dead = split_valid_invalid(batch_df)
+        valid = valid.select(*[c for c in ENRICHED_EVENT_COLUMNS if c in batch_df.columns])
+        dead = dead.select(*[c for c in DEAD_LETTER_COLUMNS if c in batch_df.columns])
+        writes = [(valid, self.sink.events_path)]
+        if q.invalid_rows:
+            writes.append((dead, self.sink.dead_letter_path))
+        # the data writes run at the same time, each in a thread that
+        # carries the caller's job group, description and tags (so
+        # stopping the query cancels them); leaving the pool waits for
+        # every write, as the epoch's cache is released after this;
+        # the first error in submission order is raised, any other
+        # is logged
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(batch_df.sparkSession)(self.retry.execute),
+                    self._write, df, path, batch_id,
+                )
+                for df, path in writes
+            ]
+        errors = [e for e in (f.exception() for f in futures) if e is not None]
+        for later in errors[1:]:
+            log.error("batch %s: another data write failed too", batch_id, exc_info=later)
+        if errors:
+            raise errors[0]
+        # last, and only after every data write succeeded: the
+        # metrics row marks the epoch as committed
+        metrics_df = metrics_row_df(batch_df.sparkSession, q)
+        self.retry.execute(self._write, metrics_df, self.sink.metrics_path, batch_id)
+        q.processing_seconds = time.monotonic() - started
 
-        alerts = self.monitor.record(
-            BatchMetrics(
-                batch_id=batch_id,
-                total_rows=q.total_rows,
-                valid_rows=q.valid_rows,
-                invalid_rows=q.invalid_rows,
-                processing_seconds=tracker.elapsed,
-                late_arrival_count=q.late_arrival_count,
-                error_distribution=q.error_distribution,
-            )
-        )
-        for alert in alerts:
+        for alert in self.monitor.record(q):
             log.log(
                 logging.ERROR if alert.level == "ERROR" else logging.WARNING,
                 "batch %s alert [%s]: %s", batch_id, alert.kind, alert.message,

@@ -2,7 +2,12 @@
 escalation, health summary.
 
 Parity target: reference spark/monitoring/metrics.py
-(BatchMetrics/BatchTracker :24-82,344-369; PipelineMonitor :131-341).
+(batch record and batch timer :24-82,344-369; PipelineMonitor
+:131-341).  The batch record here is
+``operators.quality.BatchQualityMetrics``, and there is no timer
+object: the sink computes the record, writes its metrics row, stores
+the epoch's elapsed time in its ``processing_seconds`` and records
+that same object.
 Semantics reproduced: rolling window (deque, default 100); validity
 (<95%) and latency (>10 s) thresholds; WARNING -> ERROR escalation
 after 3 consecutive breaches; error-concentration alert when one error
@@ -11,62 +16,11 @@ type is >= 10% of a batch; health summary HEALTHY/DEGRADED/NO_DATA.
 
 from __future__ import annotations
 
-import time
 from collections import deque
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
-
-@dataclass
-class BatchMetrics:
-    batch_id: int
-    total_rows: int
-    valid_rows: int
-    invalid_rows: int
-    processing_seconds: float
-    late_arrival_count: int = 0
-    error_distribution: dict[str, int] = field(default_factory=dict)
-
-    @property
-    def validity_rate(self) -> float:
-        return self.valid_rows / self.total_rows if self.total_rows else 1.0
-
-    @property
-    def error_rate(self) -> float:
-        return self.invalid_rows / self.total_rows if self.total_rows else 0.0
-
-    @property
-    def throughput(self) -> float:
-        return self.total_rows / self.processing_seconds if self.processing_seconds > 0 else 0.0
-
-    def to_dict(self) -> dict[str, Any]:
-        return {
-            "batch_id": self.batch_id,
-            "total_rows": self.total_rows,
-            "valid_rows": self.valid_rows,
-            "invalid_rows": self.invalid_rows,
-            "validity_rate": self.validity_rate,
-            "error_rate": self.error_rate,
-            "throughput_rps": self.throughput,
-            "processing_seconds": self.processing_seconds,
-            "late_arrival_count": self.late_arrival_count,
-        }
-
-
-class BatchTracker:
-    """Context manager timing a batch (reference metrics.py:344-369)."""
-
-    def __init__(self, batch_id: int):
-        self.batch_id = batch_id
-        self.started = 0.0
-        self.elapsed = 0.0
-
-    def __enter__(self) -> "BatchTracker":
-        self.started = time.monotonic()
-        return self
-
-    def __exit__(self, *exc: Any) -> None:
-        self.elapsed = time.monotonic() - self.started
+from ..operators.quality import BatchQualityMetrics
 
 
 @dataclass
@@ -90,12 +44,12 @@ class PipelineMonitor:
         self.max_latency_seconds = max_latency_seconds
         self.error_concentration_threshold = error_concentration_threshold
         self.escalation_breaches = escalation_breaches
-        self.window: deque[BatchMetrics] = deque(maxlen=window_size)
+        self.window: deque[BatchQualityMetrics] = deque(maxlen=window_size)
         self.alerts: list[Alert] = []
         self._consecutive_validity_breaches = 0
         self._consecutive_latency_breaches = 0
 
-    def record(self, metrics: BatchMetrics) -> list[Alert]:
+    def record(self, metrics: BatchQualityMetrics) -> list[Alert]:
         """Record one batch; return alerts raised by it."""
         self.window.append(metrics)
         raised: list[Alert] = []

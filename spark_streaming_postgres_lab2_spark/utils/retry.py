@@ -16,7 +16,8 @@ reproduced:
   breaker may be shared by threads (the sink's concurrent writes): its
   state and counters change under a lock that is not held while the
   guarded call runs;
-- ``RetryPolicy`` composes both, with database/network/file presets.
+- ``RetryPolicy`` composes both, with the database preset
+  (``database_retry_policy``).
 
 Unlike the reference -- where these are defined and tested but never
 wired into the Spark job (SURVEY §2.8 note) -- the streaming sink
@@ -196,17 +197,5 @@ class RetryPolicy:
 
 def database_retry_policy(**overrides: Any) -> RetryPolicy:
     kw: dict[str, Any] = dict(max_retries=3, initial_delay=1.0, backoff_factor=2.0, max_delay=30.0)
-    kw.update(overrides)
-    return RetryPolicy(**kw)
-
-
-def network_retry_policy(**overrides: Any) -> RetryPolicy:
-    kw: dict[str, Any] = dict(max_retries=5, initial_delay=0.5, backoff_factor=2.0, max_delay=60.0)
-    kw.update(overrides)
-    return RetryPolicy(**kw)
-
-
-def file_retry_policy(**overrides: Any) -> RetryPolicy:
-    kw: dict[str, Any] = dict(max_retries=2, initial_delay=0.2, backoff_factor=2.0, max_delay=5.0)
     kw.update(overrides)
     return RetryPolicy(**kw)

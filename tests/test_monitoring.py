@@ -3,21 +3,19 @@ tests/test_monitoring.py tier-2)."""
 
 from __future__ import annotations
 
-from spark_streaming_postgres_lab2_spark.utils.monitoring import (
-    BatchMetrics,
-    BatchTracker,
-    PipelineMonitor,
-)
+from spark_streaming_postgres_lab2_spark.operators.quality import BatchQualityMetrics
+from spark_streaming_postgres_lab2_spark.utils.monitoring import PipelineMonitor
 
 
 def metrics(batch_id=1, total=100, valid=100, seconds=1.0, errors=None):
-    return BatchMetrics(
+    return BatchQualityMetrics(
         batch_id=batch_id,
         total_rows=total,
         valid_rows=valid,
         invalid_rows=total - valid,
-        processing_seconds=seconds,
+        late_arrival_count=0,
         error_distribution=errors or {},
+        processing_seconds=seconds,
     )
 
 
@@ -72,15 +70,3 @@ def test_degraded_health():
         mon.record(metrics(i, valid=10))
     assert mon.health_summary()["status"] == "DEGRADED"
 
-
-def test_batch_tracker_times():
-    with BatchTracker(7) as t:
-        pass
-    assert t.elapsed >= 0.0 and t.batch_id == 7
-
-
-def test_throughput_and_rates():
-    m = metrics(total=200, valid=150, seconds=2.0)
-    assert m.throughput == 100.0
-    assert m.validity_rate == 0.75
-    assert m.error_rate == 0.25

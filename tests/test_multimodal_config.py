@@ -8,10 +8,8 @@ from pyspark.sql import functions as F
 
 from spark_streaming_postgres_lab2_spark.config import (
     DatabaseConfig,
-    EngineConfig,
     SparkConfig,
     StreamingConfig,
-    load_config,
 )
 from spark_streaming_postgres_lab2_spark.functions.multimodal import (
     decode_features,
@@ -88,24 +86,20 @@ def test_decode_real_unknown_codec(media):
 
 
 def test_config_defaults_valid():
-    cfg = load_config()
-    assert cfg.validate() == []
-    d = cfg.to_dict()
-    assert "password" not in d["database"]  # secret-free serialization
+    assert StreamingConfig().validate() == []
+    assert "password" not in DatabaseConfig().to_dict()  # secret-free serialization
 
 
 def test_config_validation_catches_bad_values():
-    cfg = EngineConfig()
-    cfg.streaming.trigger_seconds = 0
-    cfg.database.batch_size = 0
-    problems = cfg.validate()
-    assert len(problems) == 2
+    cfg = StreamingConfig()
+    cfg.trigger_seconds = 0
+    assert cfg.validate() == ["trigger_seconds must be positive"]
 
 
 def test_config_validation_catches_bad_stream_values():
-    cfg = EngineConfig()
-    cfg.streaming.max_files_per_trigger = 0
-    cfg.streaming.state_store_provider = "rocks"
+    cfg = StreamingConfig()
+    cfg.max_files_per_trigger = 0
+    cfg.state_store_provider = "rocks"
     problems = cfg.validate()
     assert len(problems) == 2
     assert any("max_files_per_trigger" in p for p in problems)
@@ -123,13 +117,45 @@ def test_env_int_rejects_a_malformed_value(monkeypatch):
 
 
 def test_env_bool_reads_both_spellings_and_rejects_others(monkeypatch):
-    monkeypatch.setenv("SPARK_AQE", " OFF ")
+    monkeypatch.setenv("SPARK_UI", " OFF ")
+    assert SparkConfig().ui_enabled is False
     monkeypatch.setenv("SPARK_UI", "Yes")
-    cfg = SparkConfig()
-    assert cfg.adaptive_enabled is False and cfg.ui_enabled is True
-    monkeypatch.setenv("SPARK_AQE", "ture")
-    with pytest.raises(ValueError, match="SPARK_AQE='ture'"):
+    assert SparkConfig().ui_enabled is True
+    monkeypatch.setenv("SPARK_UI", "ture")
+    with pytest.raises(ValueError, match="SPARK_UI='ture'"):
         SparkConfig()
+
+
+def test_session_constants_ignore_the_retired_env_knobs(spark, monkeypatch):
+    """AQE, Arrow and the UTC time zone are constants of build_session,
+    and the scan split size is Spark's 128 MiB default: the variables
+    that once set them have no effect."""
+    from spark_streaming_postgres_lab2_spark.session import build_session
+
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.execution.arrow.pyspark.enabled",
+        "spark.sql.session.timeZone",
+        "spark.sql.files.maxPartitionBytes",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    monkeypatch.setenv("SPARK_AQE", "0")
+    monkeypatch.setenv("SPARK_ARROW", "0")
+    monkeypatch.setenv("SPARK_SESSION_TZ", "America/New_York")
+    monkeypatch.setenv("SPARK_MAX_PARTITION_BYTES", "1048576")
+    try:
+        # conftest's config, so the shared session keeps its 4 partitions
+        s = build_session(SparkConfig(master="local[4]", shuffle_partitions=4, app_name="tests"))
+        assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert s.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+        assert s.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert s._jsparkSession.sessionState().conf().filesMaxPartitionBytes() == 128 * 1024 * 1024
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
@@ -161,9 +187,9 @@ def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
 
 
 def test_jdbc_url_shape():
-    cfg = EngineConfig()
-    assert cfg.database.jdbc_url.startswith("jdbc:postgresql://")
-    assert cfg.database.jdbc_properties()["batchsize"] == "5000"
+    cfg = DatabaseConfig()
+    assert cfg.jdbc_url.startswith("jdbc:postgresql://")
+    assert cfg.jdbc_properties()["batchsize"] == "5000"
 
 
 def test_resize_stub_shapes(spark, media):

@@ -63,6 +63,7 @@ def test_quality_metrics_single_pass(spark):
             "negative_price": 1,
             "null_event_type": 1,
         },
+        "processing_seconds": 0.0,
     }
 
 

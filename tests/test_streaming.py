@@ -505,7 +505,13 @@ def test_router_releases_epoch_blocks(spark, tmp_path):
     assert _persisted_rdds(spark) <= before
     for table in ("ecommerce_events", "dead_letter_events", "data_quality_metrics"):
         assert spark.read.parquet(f"{tmp_path}/{table}/epoch=4").count() == 1
-    assert [m.total_rows for m in router.monitor.window] == [2]
+    # the monitor holds the record the metrics row was built from, timed
+    [m] = router.monitor.window
+    row = spark.read.parquet(f"{tmp_path}/data_quality_metrics/epoch=4").first()
+    counts = ("batch_id", "total_rows", "valid_rows", "invalid_rows", "late_arrival_count")
+    assert tuple(getattr(m, c) for c in counts) == tuple(row[c] for c in counts) == (4, 2, 1, 1, 0)
+    assert m.error_distribution == {"negative_price": 1}
+    assert m.processing_seconds > 0
 
 
 def test_router_holds_the_epoch_cached_while_writing(spark, tmp_path):
