@@ -7,17 +7,21 @@ one dataclass per consumer: ``DatabaseConfig`` for the JDBC sink,
 its ``validate``), ``SparkConfig`` for ``build_session``.  The
 reference's quality-threshold and retry sections have no env twin: the
 pipeline builds ``PipelineMonitor()`` and ``database_retry_policy()``,
-so those defaults are the one place their values live.
+so those defaults are the one place their values live.  The stream's
+input, output and checkpoint paths have no default: every caller names
+its own directories.
 
-``SparkConfig`` carries only what differs per deployment (master, app
-name, shuffle partitions, the sort-merge escape hatch, driver memory,
-UI).  Session settings the engine's results or plans rely on are
-constants in ``build_session``: AQE and Arrow on, and the UTC session
-time zone that timestamp parity needs (``load_tables`` sets it again
-for every batch read).  The scan split size is Spark's own 128 MiB
-default.  Spark checks the values it is handed where it uses them
-(``spark.sql.shuffle.partitions`` must be positive, the JDBC
-``batchsize`` at least 1), so no dataclass repeats those checks.
+``SparkConfig`` carries only what differs per deployment: the master,
+the sort-merge escape hatch and the driver memory.  Session values the
+engine's results or plans rely on, or that no deployment changes, are
+constants in ``build_session``: AQE and Arrow on, the UTC session time
+zone that timestamp parity needs (``load_tables`` sets it again for
+every batch read), 32 shuffle partitions for batch queries (AQE
+coalesces them to the data; the stream plans its own count in
+``StreamingPipeline.start``), the UI off and the app name.  The scan
+split size is Spark's own 128 MiB default.  Spark checks the values it
+is handed where it uses them (the JDBC ``batchsize`` must be at least
+1), so no dataclass repeats those checks.
 """
 
 from __future__ import annotations
@@ -110,20 +114,15 @@ STATE_STORE_CONFS: dict[str, dict[str, str]] = {
 class StreamingConfig:
     """Structured Streaming knobs (reference settings.py streaming section)."""
 
-    input_path: str = field(default_factory=lambda: _env("STREAM_INPUT_PATH", "/tmp/stream_input"))
-    checkpoint_path: str = field(
-        default_factory=lambda: _env("STREAM_CHECKPOINT_PATH", "/tmp/stream_checkpoint")
-    )
-    output_path: str = field(default_factory=lambda: _env("STREAM_OUTPUT_PATH", "/tmp/stream_output"))
+    input_path: str
+    checkpoint_path: str
+    output_path: str
     trigger_seconds: int = field(default_factory=lambda: _env_int("STREAM_TRIGGER_SECONDS", 10))
     max_files_per_trigger: int = field(
         default_factory=lambda: _env_int("STREAM_MAX_FILES_PER_TRIGGER", 1)
     )
     watermark_delay: str = field(
         default_factory=lambda: _env("STREAM_WATERMARK_DELAY", "10 minutes")
-    )
-    late_arrival_threshold_minutes: int = field(
-        default_factory=lambda: _env_int("STREAM_LATE_THRESHOLD_MINUTES", 5)
     )
     # a key of STATE_STORE_CONFS: "hdfs" (default in-memory+DFS
     # provider) or "rocksdb": at large dedup/session state the RocksDB
@@ -148,15 +147,18 @@ class StreamingConfig:
         return problems
 
 
+def _default_master() -> str:
+    cpus = _env("SPARK_GRAFT_CPUS", "")
+    return f"local[{cpus}]" if cpus else _env("SPARK_MASTER", "local[*]")
+
+
 @dataclass
 class SparkConfig:
-    """Spark session deployment settings. Sized for local[N]; at cluster
-    scale these are what you would set per job (shuffle partitions ~
-    2-3x total cores)."""
+    """Spark session deployment settings."""
 
-    master: str = field(default_factory=lambda: _env("SPARK_MASTER", "local[*]"))
-    app_name: str = field(default_factory=lambda: _env("SPARK_APP_NAME", "lab2_spark_engine"))
-    shuffle_partitions: int = field(default_factory=lambda: _env_int("SPARK_SHUFFLE_PARTITIONS", 32))
+    # local[$SPARK_GRAFT_CPUS] pins a local run's core count (the tests
+    # and the benchmarks set it); otherwise SPARK_MASTER, else every core
+    master: str = field(default_factory=_default_master)
     # r15 (guide §3.1/§9): let the planner pick shuffled-hash over
     # sort-merge when one side fits a per-partition hash map (skips
     # both sort passes; measured 0.74-0.94x on every SMJ-site query).
@@ -180,4 +182,3 @@ class SparkConfig:
     # is the entire engine's heap -- Spark's 1g default starves any
     # broadcast build or wide aggregation once data passes ~sf0.1
     driver_memory: str = field(default_factory=lambda: _env("SPARK_DRIVER_MEMORY", "16g"))
-    ui_enabled: bool = field(default_factory=lambda: _env_bool("SPARK_UI", False))

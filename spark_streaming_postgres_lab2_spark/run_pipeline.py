@@ -22,33 +22,30 @@ from .streaming.pipeline import build_pipeline
 
 
 def main(argv: list[str] | None = None) -> int:
-    # unset flags fall back to the STREAM_* environment, not to copies
-    # of its defaults
-    defaults = StreamingConfig()
     parser = argparse.ArgumentParser(description="Run the streaming event pipeline")
-    parser.add_argument("--input", required=True, help="CSV input directory to watch")
-    parser.add_argument("--output", required=True, help="output table root directory")
-    parser.add_argument("--checkpoint", required=True, help="checkpoint directory")
-    parser.add_argument("--trigger-seconds", type=int, default=defaults.trigger_seconds)
     parser.add_argument(
-        "--max-files-per-trigger", type=int, default=defaults.max_files_per_trigger
+        "--input", dest="input_path", required=True, help="CSV input directory to watch"
     )
-    parser.add_argument("--watermark", default=defaults.watermark_delay)
+    parser.add_argument(
+        "--output", dest="output_path", required=True, help="output table root directory"
+    )
+    parser.add_argument(
+        "--checkpoint", dest="checkpoint_path", required=True, help="checkpoint directory"
+    )
+    # an unset flag is left out of the config, so the STREAM_* environment
+    # default of its StreamingConfig field applies
+    parser.add_argument("--trigger-seconds", type=int, default=argparse.SUPPRESS)
+    parser.add_argument("--max-files-per-trigger", type=int, default=argparse.SUPPRESS)
+    parser.add_argument("--watermark", dest="watermark_delay", default=argparse.SUPPRESS)
     parser.add_argument("--once", action="store_true", help="drain available input and exit")
-    args = parser.parse_args(argv)
+    args = vars(parser.parse_args(argv))
+    once = args.pop("once")
 
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(levelname)s %(message)s")
     spark = build_session()
-    cfg = StreamingConfig(
-        input_path=args.input,
-        checkpoint_path=args.checkpoint,
-        output_path=args.output,
-        trigger_seconds=args.trigger_seconds,
-        max_files_per_trigger=args.max_files_per_trigger,
-        watermark_delay=args.watermark,
-    )
+    cfg = StreamingConfig(**args)
     pipe = build_pipeline(spark, cfg)
-    query = pipe.start(trigger_once=args.once)
+    query = pipe.start(trigger_once=once)
     query.awaitTermination()
     health = pipe.router.monitor.health_summary()
     logging.info("pipeline finished: %s", health)

@@ -1,14 +1,13 @@
 """SparkSession factory with scale-aware defaults.
 
 Local mode for tests; the same conf block is what a cluster submit
-would carry.  AQE handles runtime coalesce + skew-join; shuffle
-partitions default to ~cores locally (the 200 default is wrong at both
-ends of the scale spectrum).
+would carry.  AQE handles runtime coalesce + skew-join.  Batch queries
+run at a constant 32 shuffle partitions (the 200 default is wrong at
+both ends of the scale spectrum), which AQE coalesces to the data; the
+stream is planned at the core count in ``StreamingPipeline.start``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import SparkSession
 
@@ -16,13 +15,17 @@ from .config import SparkConfig
 
 
 def build_session(cfg: SparkConfig | None = None) -> SparkSession:
+    """Build the process's session, or return the active one as it is:
+    a builder would otherwise apply its confs to the live session,
+    under the code already using it."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cfg = cfg or SparkConfig()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    master = f"local[{cpus}]" if cpus else cfg.master
     builder = (
-        SparkSession.builder.master(master)
-        .appName(cfg.app_name)
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
+        SparkSession.builder.master(cfg.master)
+        .appName("lab2_spark_engine")
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -32,7 +35,7 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
         # wrapping-multiply hash mixing (MinHash universal hashing).
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", str(cfg.ui_enabled).lower())
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config(
             "spark.sql.join.preferSortMergeJoin",

@@ -103,9 +103,7 @@ class StreamingPipeline:
         if not report["is_valid"]:
             raise SchemaDriftError(report)
         validated = validate(raw)
-        enriched = transform_and_enrich(
-            validated, late_threshold=f"{self.config.late_arrival_threshold_minutes} minutes"
-        )
+        enriched = transform_and_enrich(validated)
         # Dedup state is watermarked on PROCESSING time, not event
         # time: the dedup guarantee is "drop redeliveries arriving
         # within the watermark horizon", which is a property of
@@ -164,10 +162,7 @@ class StreamingPipeline:
             return writer.start()
 
 
-def build_pipeline(
-    spark: SparkSession, config: StreamingConfig | None = None
-) -> StreamingPipeline:
-    config = config or StreamingConfig()
+def build_pipeline(spark: SparkSession, config: StreamingConfig) -> StreamingPipeline:
     router = BatchRouter(
         SinkConfig(
             events_path=f"{config.output_path}/ecommerce_events",

@@ -7,7 +7,6 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from spark_streaming_postgres_lab2_spark.config import SparkConfig
 from spark_streaming_postgres_lab2_spark.session import build_session
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -18,8 +17,10 @@ SF01_DIR = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    cfg = SparkConfig(master="local[4]", shuffle_partitions=4, app_name="tests")
-    s = build_session(cfg)
+    # the cores come from SPARK_GRAFT_CPUS; 4 partitions keep the
+    # fixture-sized shuffles small
+    s = build_session()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     yield s
 
 

@@ -85,19 +85,28 @@ def test_decode_real_unknown_codec(media):
         decode_real(media, codec="h264")
 
 
+def _stream_config() -> StreamingConfig:
+    return StreamingConfig(input_path="in", checkpoint_path="ckpt", output_path="out")
+
+
 def test_config_defaults_valid():
-    assert StreamingConfig().validate() == []
+    assert _stream_config().validate() == []
     assert "password" not in DatabaseConfig().to_dict()  # secret-free serialization
 
 
+def test_stream_paths_are_required():
+    with pytest.raises(TypeError, match="input_path"):
+        StreamingConfig()
+
+
 def test_config_validation_catches_bad_values():
-    cfg = StreamingConfig()
+    cfg = _stream_config()
     cfg.trigger_seconds = 0
     assert cfg.validate() == ["trigger_seconds must be positive"]
 
 
 def test_config_validation_catches_bad_stream_values():
-    cfg = StreamingConfig()
+    cfg = _stream_config()
     cfg.max_files_per_trigger = 0
     cfg.state_store_provider = "rocks"
     problems = cfg.validate()
@@ -110,52 +119,78 @@ def test_env_int_rejects_a_malformed_value(monkeypatch):
     """No silent fallback to the default."""
     monkeypatch.setenv("STREAM_TRIGGER_SECONDS", "ten")
     with pytest.raises(ValueError, match="STREAM_TRIGGER_SECONDS='ten'"):
-        StreamingConfig()
+        _stream_config()
     monkeypatch.setenv("DB_PORT", "abc")
     with pytest.raises(ValueError, match="DB_PORT='abc'"):
         DatabaseConfig()
 
 
 def test_env_bool_reads_both_spellings_and_rejects_others(monkeypatch):
-    monkeypatch.setenv("SPARK_UI", " OFF ")
-    assert SparkConfig().ui_enabled is False
-    monkeypatch.setenv("SPARK_UI", "Yes")
-    assert SparkConfig().ui_enabled is True
-    monkeypatch.setenv("SPARK_UI", "ture")
-    with pytest.raises(ValueError, match="SPARK_UI='ture'"):
+    monkeypatch.setenv("SPARK_PREFER_SMJ", " OFF ")
+    assert SparkConfig().prefer_sort_merge_join is False
+    monkeypatch.setenv("SPARK_PREFER_SMJ", "Yes")
+    assert SparkConfig().prefer_sort_merge_join is True
+    monkeypatch.setenv("SPARK_PREFER_SMJ", "ture")
+    with pytest.raises(ValueError, match="SPARK_PREFER_SMJ='ture'"):
         SparkConfig()
 
 
-def test_session_constants_ignore_the_retired_env_knobs(spark, monkeypatch):
-    """AQE, Arrow and the UTC time zone are constants of build_session,
-    and the scan split size is Spark's 128 MiB default: the variables
-    that once set them have no effect."""
-    from spark_streaming_postgres_lab2_spark.session import build_session
+def test_master_prefers_an_explicit_value_then_the_cpu_count(monkeypatch):
+    """``SparkConfig`` is the master's one owner: SPARK_GRAFT_CPUS sets
+    its default and never overrides an explicit value."""
+    from pathlib import Path
 
-    keys = (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.sql.session.timeZone",
-        "spark.sql.files.maxPartitionBytes",
-    )
-    saved = {k: spark.conf.get(k, None) for k in keys}
+    from spark_streaming_postgres_lab2_spark import session
+
+    monkeypatch.setenv("SPARK_MASTER", "local[5]")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert SparkConfig().master == "local[2]"
+    assert SparkConfig(master="local[3]").master == "local[3]"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert SparkConfig().master == "local[5]"
+    assert "environ" not in Path(session.__file__).read_text()
+
+
+def test_session_constants_ignore_the_retired_env_knobs(spark, monkeypatch):
+    """AQE, Arrow, the UTC time zone, the UI off and the app name are
+    constants of build_session, and the scan split size is Spark's 128
+    MiB default: the variables that once set them, or a stream path or
+    the late threshold, have no reader left in the package."""
+    from pathlib import Path
+
+    from spark_streaming_postgres_lab2_spark import session
+
     monkeypatch.setenv("SPARK_AQE", "0")
     monkeypatch.setenv("SPARK_ARROW", "0")
     monkeypatch.setenv("SPARK_SESSION_TZ", "America/New_York")
     monkeypatch.setenv("SPARK_MAX_PARTITION_BYTES", "1048576")
+    s = session.build_session()
+    assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert s.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+    assert s.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert s._jsparkSession.sessionState().conf().filesMaxPartitionBytes() == 128 * 1024 * 1024
+    assert s.sparkContext.getConf().get("spark.ui.enabled") == "false"
+    assert s.sparkContext.appName == "lab2_spark_engine"
+    retired = (
+        "SPARK_AQE", "SPARK_ARROW", "SPARK_SESSION_TZ", "SPARK_MAX_PARTITION_BYTES",
+        "SPARK_APP_NAME", "SPARK_SHUFFLE_PARTITIONS", "SPARK_UI",
+        "STREAM_INPUT_PATH", "STREAM_OUTPUT_PATH", "STREAM_CHECKPOINT_PATH",
+        "STREAM_LATE_THRESHOLD_MINUTES",
+    )
+    src = "".join(p.read_text() for p in Path(session.__file__).parent.rglob("*.py"))
+    assert [name for name in retired if name in src] == []
+
+
+def test_build_session_leaves_a_live_session_as_it_is(spark):
+    """A second ``build_session`` returns the active session without
+    applying its builder confs to it."""
+    from spark_streaming_postgres_lab2_spark.session import build_session
+
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
-        # conftest's config, so the shared session keeps its 4 partitions
-        s = build_session(SparkConfig(master="local[4]", shuffle_partitions=4, app_name="tests"))
-        assert s.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert s.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
-        assert s.conf.get("spark.sql.session.timeZone") == "UTC"
-        assert s._jsparkSession.sessionState().conf().filesMaxPartitionBytes() == 128 * 1024 * 1024
+        assert build_session().conf.get("spark.sql.shuffle.partitions") == "7"
     finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
 
 
 def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
@@ -184,6 +219,7 @@ def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
     assert cfg.trigger_seconds == 3
     assert cfg.max_files_per_trigger == 7
     assert cfg.watermark_delay == "2 minutes"
+    assert (cfg.input_path, cfg.output_path, cfg.checkpoint_path) == ("i", "o", "c")
 
 
 def test_jdbc_url_shape():
