@@ -11,7 +11,10 @@ from spark_streaming_postgres_lab2_spark.operators.dedup import (
     dedup_keep_first,
 )
 from spark_streaming_postgres_lab2_spark.operators.quality import (
+    BatchQualityMetrics,
     calculate_quality_metrics,
+    metrics_row_df,
+    metrics_row_table,
 )
 from spark_streaming_postgres_lab2_spark.operators.validate import validate
 
@@ -82,6 +85,21 @@ def test_quality_metrics_empty(spark):
     df = validate(events_df(spark)).filter("event_id = 'zzz'")
     m = calculate_quality_metrics(df, batch_id=1)
     assert m.total_rows == 0 and m.validity_rate == 1.0
+
+
+def test_metrics_row_forms_agree(spark):
+    """The Arrow table the sink writes and the frame a write_fn gets
+    carry the same required columns and values."""
+    m = BatchQualityMetrics(5, 4, 3, 1, 2)
+    df = metrics_row_df(spark, m)
+    table = spark.createDataFrame(metrics_row_table(m))
+    assert df.schema == table.schema
+    assert all(not f.nullable for f in df.schema.fields)
+    assert df.drop("recorded_at").collect() == table.drop("recorded_at").collect()
+    assert df.drop("recorded_at").first().asDict() == {
+        "batch_id": 5, "total_rows": 4, "valid_rows": 3, "invalid_rows": 1,
+        "validity_rate": 0.75, "late_arrival_count": 2,
+    }
 
 
 def test_dedup_exact_by_key(spark):

@@ -515,16 +515,24 @@ def test_router_releases_epoch_blocks(spark, tmp_path):
 
 
 def test_router_holds_the_epoch_cached_while_writing(spark, tmp_path):
+    """Every data write reads the persisted epoch: its frame's optimized
+    plan scans the cached relation, not the epoch's lineage."""
     before = _persisted_rdds(spark)
     writes = []
 
     def record(df, path, batch_id):
-        writes.append((path.rsplit("/", 1)[1], df.count(), bool(_persisted_rdds(spark) - before)))
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        writes.append((
+            path.rsplit("/", 1)[1], df.count(), bool(_persisted_rdds(spark) - before),
+            "InMemoryRelation" in plan,
+        ))
 
     BatchRouter(_sink(tmp_path), write_fn=record)(_epoch_frame(spark), 0)
     # the two data writes run at the same time, in either order
-    assert set(writes[:2]) == {("ecommerce_events", 1, True), ("dead_letter_events", 1, True)}
-    assert writes[2:] == [("data_quality_metrics", 1, True)]
+    assert set(writes[:2]) == {
+        ("ecommerce_events", 1, True, True), ("dead_letter_events", 1, True, True),
+    }
+    assert writes[2:] == [("data_quality_metrics", 1, True, False)]
     assert _persisted_rdds(spark) <= before
 
 
@@ -600,9 +608,23 @@ def test_router_failed_data_write_lets_the_other_finish(spark, tmp_path):
 
 
 def test_router_metrics_row_is_one_file_with_the_reference_schema(spark, tmp_path):
+    """The metrics row is one parquet file typed as a Spark-written row
+    of literals: every field required, the timestamp INT96."""
+    import pyarrow.parquet as pq
+
     BatchRouter(_sink(tmp_path))(_epoch_frame(spark), 5)
     epoch_dir = tmp_path / "data_quality_metrics" / "epoch=5"
-    assert len(list(epoch_dir.glob("*.parquet"))) == 1
+    [path] = epoch_dir.glob("*.parquet")
+    columns = pq.ParquetFile(path).schema
+    assert [
+        (columns.column(i).name, columns.column(i).physical_type,
+         columns.column(i).max_definition_level)
+        for i in range(len(columns))
+    ] == [
+        ("batch_id", "INT64", 0), ("total_rows", "INT64", 0), ("valid_rows", "INT64", 0),
+        ("invalid_rows", "INT64", 0), ("validity_rate", "DOUBLE", 0),
+        ("late_arrival_count", "INT64", 0), ("recorded_at", "INT96", 0),
+    ]
     row = spark.read.parquet(str(epoch_dir))
     assert row.dtypes == [
         ("batch_id", "bigint"), ("total_rows", "bigint"), ("valid_rows", "bigint"),
@@ -613,6 +635,109 @@ def test_router_metrics_row_is_one_file_with_the_reference_schema(spark, tmp_pat
         "batch_id": 5, "total_rows": 2, "valid_rows": 1, "invalid_rows": 1,
         "validity_rate": 0.5, "late_arrival_count": 0,
     }
+
+
+def test_router_writes_the_metrics_row_without_a_spark_job(spark, tmp_path):
+    """The driver holds the counts, so the metrics row is written with
+    no Spark job: its write runs under a job group that gets none."""
+    sc = spark.sparkContext
+    router = BatchRouter(_sink(tmp_path))
+    execute = router.retry.execute
+
+    def grouped(fn, payload, path, batch_id):
+        if path != router.sink.metrics_path:
+            return execute(fn, payload, path, batch_id)
+        sc.setJobGroup("metrics-row-write", "the metrics row")
+        try:
+            return execute(fn, payload, path, batch_id)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    router.retry.execute = grouped
+    router(_epoch_frame(spark), 8)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("metrics-row-write")) == []
+    assert len(list((tmp_path / "data_quality_metrics" / "epoch=8").glob("*.parquet"))) == 1
+
+
+def test_router_replayed_epoch_replaces_its_metrics_row(spark, tmp_path):
+    """A replay of epoch N overwrites its own marker: one file, holding
+    the second write's counts, and no hidden file left behind."""
+    router = BatchRouter(_sink(tmp_path))
+    router(_epoch_frame(spark), 7)
+    router(_epoch_frame(spark).filter("is_valid"), 7)
+    metrics = tmp_path / "data_quality_metrics"
+    assert sorted(p.name for p in metrics.iterdir()) == ["epoch=7"]
+    assert len(list((metrics / "epoch=7").glob("*.parquet"))) == 1
+    row = spark.read.parquet(str(metrics / "epoch=7")).collect()
+    assert [(r.batch_id, r.total_rows, r.valid_rows, r.invalid_rows) for r in row] == [(7, 1, 1, 0)]
+
+
+def test_router_writes_one_file_per_table_for_a_small_epoch(spark, tmp_path):
+    """An epoch of at most ROWS_PER_WRITE_PARTITION rows per table,
+    spread over 4 partitions, writes one parquet file per data table."""
+    from pyspark.sql import Row
+
+    rows = [
+        Row(event_id=f"e{i}", user_id=i, event_type="view", product_id=i,
+            price=-1.0 if i % 2 else 0.0, quantity=0, session_id="s", category="books",
+            event_time="2024-03-15T12:00:00")
+        for i in range(40)
+    ]
+    epoch = validate(spark.createDataFrame(rows)).repartition(4)
+    BatchRouter(_sink(tmp_path))(epoch, 9)
+    for table in ("ecommerce_events", "dead_letter_events"):
+        epoch_dir = tmp_path / table / "epoch=9"
+        assert len(list(epoch_dir.glob("*.parquet"))) == 1, table
+        assert spark.read.parquet(str(epoch_dir)).count() == 20
+
+
+def test_router_all_invalid_epoch_writes_no_events_file(spark, tmp_path):
+    """A table whose count is 0 gets no write: an all-invalid epoch
+    writes its dead letters and its metrics row, and no events."""
+    router = BatchRouter(_sink(tmp_path))
+    router(_epoch_frame(spark).filter(~F.col("is_valid")), 3)
+    assert not (tmp_path / "ecommerce_events" / "epoch=3").exists()
+    assert spark.read.parquet(f"{tmp_path}/dead_letter_events/epoch=3").count() == 1
+    row = spark.read.parquet(f"{tmp_path}/data_quality_metrics/epoch=3").first()
+    assert (row.total_rows, row.valid_rows, row.invalid_rows) == (1, 0, 1)
+
+
+def test_router_rebuilds_its_columns_when_the_epoch_columns_change(spark, tmp_path):
+    """The router's Columns are built once per set of epoch columns:
+    reused while the columns hold, rebuilt when they change."""
+    router = BatchRouter(_sink(tmp_path))
+    router(_epoch_frame(spark), 1)
+    built = router._columns
+    router(_epoch_frame(spark), 2)
+    assert router._columns is built
+    router(_epoch_frame(spark).drop("category"), 3)
+    assert router._columns is not built
+    assert [m.null_counts for m in router.monitor.window] == [
+        {"user_id": 0, "session_id": 0, "category": 0, "quantity": 0},
+    ] * 2 + [{"user_id": 0, "session_id": 0, "quantity": 0}]
+    assert spark.read.parquet(f"{tmp_path}/ecommerce_events/epoch=3").columns == [
+        c for c in spark.read.parquet(f"{tmp_path}/ecommerce_events/epoch=1").columns
+        if c != "category"
+    ]
+
+
+def test_stream_router_with_a_write_fn_leaves_the_active_session(spark, tmp_path):
+    """A write_fn sink gets its metrics row as a frame of the stream's
+    session, built without making that session (AQE off) the process's
+    active one: build_session() still returns the session it built."""
+    from spark_streaming_postgres_lab2_spark.session import build_session
+
+    gen = EventGenerator(seed=3, anomaly_rate=0.5, now=NOW)
+    gen.write_csv(gen.generate_batch(20), str(tmp_path / "in"), "batch_0000.csv")
+    pipe = build_pipeline(spark, _dedup_config(tmp_path))
+    tables = []
+    pipe.router.write_fn = lambda df, path, batch_id: tables.append(path.rsplit("/", 1)[1])
+    pipe.start(trigger_once=True).awaitTermination(120)
+    assert tables[-1] == "data_quality_metrics"
+    assert build_session().conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_router_empty_epoch_writes_and_records_nothing(spark, tmp_path):
