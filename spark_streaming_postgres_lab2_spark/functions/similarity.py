@@ -51,6 +51,61 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# --- the oracle-parity cosine fold -------------------------------------------
+
+
+def _fold_dot(a, b, ia=slice(None), ib=slice(None)):
+    """Dot products of rows of ``a`` (n, dim) with rows of ``b`` (m,
+    dim), summed left to right one dimension at a time, from 0.0, in
+    float64 -- the one numerics rule every oracle-checked cosine scorer
+    shares.  It is the op sequence of the ``dot``/``norm`` expression
+    fold above and of DuckDB's ``list_aggregate(..., 'sum')``, so a
+    cosine built from it is bit-identical to both.  A vectorized add
+    per dimension does not fuse or reorder the per-element sums;
+    ``np.einsum`` and ``@`` may, so only the float family's
+    rows-only scorers use them.
+
+    ``ia``/``ib`` pick and shape the rows of each side:
+    - index arrays: the pair form, ``a[ia[p]] . b[ib[p]]``;
+    - the defaults: row i against row i (``_fold_dot(a, a)`` is the
+      per-row squared norm);
+    - ``_fold_dot_all``: every row of ``a`` against every row of ``b``.
+
+    A pair's squared norm touches only that one vector's elements, so a
+    norm folded once per vector and gathered by index is the same value
+    as one folded per pair.  Edge handling stays with each caller: a
+    zero denominator (NULL in both engines) is dropped, scored NULL or
+    ranked for an argmax, and a NaN element propagates NaN."""
+    import numpy as np
+
+    # the result shape is that of the two row selections broadcast
+    # together; taken from empty stand-ins so dim == 0 is shaped too
+    acc = np.zeros(np.broadcast(np.empty(len(a))[ia], np.empty(len(b))[ib]).shape)
+    for d in range(a.shape[1]):
+        acc = acc + a[:, d][ia] * b[:, d][ib]
+    return acc
+
+
+def _fold_norm2(a):
+    """Per-row squared norms of ``a`` under the ``_fold_dot`` rule."""
+    return _fold_dot(a, a)
+
+
+def _fold_dot_all(a, b):
+    """(n, m) dot products of every row of ``a`` with every row of ``b``
+    under the ``_fold_dot`` rule."""
+    return _fold_dot(a, b, (slice(None), None), (None, slice(None)))
+
+
+def _round4_half_away(x):
+    """Round to 4 places half away from zero, as ``F.round`` and
+    DuckDB's ``round`` do (``np.round`` rounds half to even, so 0.44995
+    would differ from the oracle)."""
+    import numpy as np
+
+    return np.sign(x) * np.floor(np.abs(x) * 1e4 + 0.5) / 1e4
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -64,23 +119,16 @@ def cosine_topk(
     import numpy as np
     import pandas as pd
 
-    # r15 (guide §4.2): the crossJoin(broadcast(q)) + cosine-expr form
-    # evaluated |queries| interpreted aggregate-HOF folds per corpus
-    # row.  The query set is tiny and broadcast by this function's
-    # contract, so it rides in the task closure (one bounded collect,
-    # the decontaminate-verify pattern) and scoring runs as one Arrow
-    # pass with the family's bit-parity recipe: dot and both squared
-    # norms accumulate left-to-right in dimension order, one vectorized
-    # add per dimension.  Engine-sensitive semantics preserved exactly:
-    # a zero denominator yields NULL (Spark's x/0.0, ranked LAST by the
-    # DESC window) while a NaN numerator with nonzero denominator stays
-    # NaN (ranked FIRST); NULL or dim-mismatched vectors yield NULL
-    # cosines (the zip_with padding behavior).  Round + window stay in
-    # Spark, unchanged.
-    # r16 (ADVICE r15 / VERDICT r15 item 8): the collect is bounded by
-    # this helper's broadcast contract, but a caller passing a
-    # corpus-sized frame used to OOM the driver silently -- guard with
-    # the CC driver-branch limit(N+1) pattern and raise descriptively.
+    # The query set is tiny and broadcast by this function's contract,
+    # so it rides in the task closure (one bounded collect) and scoring
+    # is one Arrow pass through the ``_fold_dot`` kernel.  Edges follow
+    # the crossJoin + ``cosine`` expression form exactly: a zero
+    # denominator, a NULL vector and a pair of unequal lengths (zip_with
+    # pads the shorter side) score NULL, ranked LAST by the DESC window;
+    # a NaN element with a nonzero denominator stays NaN, ranked FIRST.
+    # Round + window stay in Spark.  The collect is guarded with
+    # limit(N+1) so a corpus-sized query frame fails loudly instead of
+    # OOMing the driver.
     q_rows = (
         queries.select(id_col, vec_col).limit(COSINE_TOPK_MAX_QUERIES + 1).collect()
     )
@@ -93,6 +141,7 @@ def cosine_topk(
             "COSINE_TOPK_MAX_QUERIES deliberately."
         )
     qids = [r[0] for r in q_rows]
+    m = len(q_rows)
 
     def _as_vec(v):
         if v is None:
@@ -103,31 +152,18 @@ def cosine_topk(
             return None
         return a if a.ndim == 1 else None
 
-    # NULL / ragged / non-numeric QUERY vectors score to all-NULL
-    # cosines, exactly the replaced crossJoin+expr form's zip_with
-    # behavior (ADVICE r15: the first Arrow cut crashed on them
-    # instead): a zeroed row has a zero query norm, so every cosine
-    # against it falls in the zero-denominator branch below -> NULL,
-    # ranked last.  A NaN ELEMENT in a valid query still propagates
-    # NaN through the nonzero denominator -> ranked first, as before.
+    # queries grouped by length, each group scored only against corpus
+    # vectors of that length; a NULL / non-numeric query joins no group,
+    # so its column stays all-NULL
     q_vecs = [_as_vec(r[1]) for r in q_rows]
-    qdim = next((int(v.shape[0]) for v in q_vecs if v is not None), 0)
-    qmat = (
-        np.stack(
-            [
-                v if (v is not None and v.shape[0] == qdim) else np.zeros(qdim)
-                for v in q_vecs
-            ]
-        )
-        if q_rows
-        else np.zeros((0, 0))
-    )
-    m = qmat.shape[0]
-    qnorm2 = np.zeros(m)
-    for d in range(qdim):
-        y = qmat[:, d]
-        qnorm2 = qnorm2 + y * y
-    qnorm = np.sqrt(qnorm2)
+    by_len: dict[int, list[int]] = {}
+    for j, v in enumerate(q_vecs):
+        if v is not None:
+            by_len.setdefault(len(v), []).append(j)
+    q_groups = []
+    for qdim, cols in by_len.items():
+        qmat = np.stack([q_vecs[j] for j in cols])
+        q_groups.append((qdim, np.array(cols), qmat, np.sqrt(_fold_norm2(qmat))))
 
     def _score(batches):
         for pdf in batches:
@@ -135,40 +171,29 @@ def cosine_topk(
                 continue
             vecs = pdf[vec_col].to_numpy()
             ids = pdf[id_col].to_numpy()
-            ok = np.array(
-                [v is not None and len(v) == qdim for v in vecs], dtype=bool
-            )
+            lens = np.array([-1 if v is None else len(v) for v in vecs])
             n = len(pdf)
             cos = np.full((n, m), np.nan)
             den_ok = np.zeros((n, m), dtype=bool)
-            if ok.any():
+            for qdim, cols, qmat, qnorm in q_groups:
+                rows = np.nonzero(lens == qdim)[0]
+                if len(rows) == 0:
+                    continue
                 v1 = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
+                    [np.asarray(v, dtype=np.float64) for v in vecs[rows]]
                 )
-                g = v1.shape[0]
-                accd = np.zeros((g, m))
-                acc1 = np.zeros(g)
-                for d in range(qdim):
-                    x = v1[:, d]
-                    accd = accd + x[:, None] * qmat[None, :, d]
-                    acc1 = acc1 + x * x
-                den = np.sqrt(acc1)[:, None] * qnorm[None, :]
+                accd = _fold_dot_all(v1, qmat)
+                den = np.sqrt(_fold_norm2(v1))[:, None] * qnorm[None, :]
                 dok = den != 0.0
-                sc = np.full((g, m), np.nan)
+                sc = np.full(den.shape, np.nan)
                 sc[dok] = accd[dok] / den[dok]
-                cos[ok] = sc
-                den_ok[ok] = dok
-            # NULL iff invalid vector or zero denominator; NaN from a
-            # NaN element with nonzero denominator stays NaN
-            vals = cos.ravel()
-            nullmask = ~den_ok.ravel()
-            # nullable Float64: the mask carries NULL (zero-den /
-            # invalid vector) distinctly from a genuine NaN value --
-            # a plain float64 column would coerce None to NaN and
+                cos[np.ix_(rows, cols)] = sc
+                den_ok[np.ix_(rows, cols)] = dok
+            # nullable Float64: the mask carries NULL (zero denominator,
+            # invalid or unequal-length pair) distinctly from a genuine
+            # NaN -- a plain float64 column would coerce None to NaN and
             # flip the DESC ranking (NaN first, NULL last)
-            col = pd.arrays.FloatingArray(
-                vals, mask=nullmask.copy()
-            )
+            col = pd.arrays.FloatingArray(cos.ravel(), mask=~den_ok.ravel())
             yield pd.DataFrame(
                 {
                     "query_id": np.tile(np.asarray(qids), n),
@@ -253,32 +278,22 @@ def _kmeans_assign_literal(
 
     from pyspark.sql import types as T
 
-    # r15 second pass (guide §4.2): the literal-array formulation above
-    # (kept in the docstring for the algebra) evaluated k interpreted
-    # aggregate-HOF cosine folds PER ROW -- measured as the dominant
-    # cost of the kmeans builder (~1.5 s of every ANN query at sf0.1).
-    # This Arrow pass computes the identical float64 op sequence with
-    # one vectorized add per dimension (the same bit-parity argument as
-    # _bucket_allpairs_fold / the decontaminate verify): dot and both
-    # squared norms accumulate left-to-right in dimension order, the
-    # centroid norms with the same scalar fold the expr ran per row.
-    # Argmax semantics replicated exactly: NaN cosine (zero-norm side)
-    # compares GREATER than any value -> mapped to +inf; ties and
-    # all-NaN rows resolve to the SMALLEST cluster id (centroids sorted
-    # ascending, np.argmax takes the first maximum); a NULL or
-    # dim-mismatched vector yields all-NULL cosines -> smallest cluster
-    # (zip_with padding makes the expr fold NULL there too).
+    # The literal-array form above (kept in the docstring for the
+    # algebra) evaluated k interpreted aggregate-HOF cosine folds PER
+    # ROW; this Arrow pass scores through the ``_fold_dot`` kernel
+    # instead.  Argmax semantics replicated exactly: NaN cosine
+    # (zero-norm side) compares GREATER than any value -> mapped to
+    # +inf; ties and all-NaN rows resolve to the SMALLEST cluster id
+    # (centroids sorted ascending, np.argmax takes the first maximum);
+    # a NULL or dim-mismatched vector yields all-NULL cosines ->
+    # smallest cluster (zip_with padding makes the expr fold NULL too).
     cents_sorted = sorted(cents_rows, key=lambda cv: int(cv[0]))
     cluster_ids = np.array([int(c) for c, _ in cents_sorted], dtype=np.int64)
     cmat = np.stack(
         [np.asarray(v, dtype=np.float64) for _, v in cents_sorted]
     )  # (k, dim)
-    kk, dim = cmat.shape
-    cnorm2 = np.zeros(kk)
-    for d in range(dim):
-        y = cmat[:, d]
-        cnorm2 = cnorm2 + y * y
-    cnorm = np.sqrt(cnorm2)
+    dim = cmat.shape[1]
+    cnorm = np.sqrt(_fold_norm2(cmat))
     out_schema = T.StructType(
         list(corpus.schema.fields) + [T.StructField("cluster", T.IntegerType())]
     )
@@ -296,15 +311,11 @@ def _kmeans_assign_literal(
                 v1 = np.stack(
                     [np.asarray(v, dtype=np.float64) for v in vecs[ok]]
                 )  # (g, dim)
-                g = v1.shape[0]
-                accd = np.zeros((g, kk))
-                acc1 = np.zeros(g)
-                for d in range(dim):
-                    x = v1[:, d]
-                    accd = accd + x[:, None] * cmat[None, :, d]
-                    acc1 = acc1 + x * x
+                vnorm = np.sqrt(_fold_norm2(v1))
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    scores = accd / (np.sqrt(acc1)[:, None] * cnorm[None, :])
+                    scores = _fold_dot_all(v1, cmat) / (
+                        vnorm[:, None] * cnorm[None, :]
+                    )
                 # r16 (ADVICE r15): a blanket NaN -> +inf reproduced the
                 # expr form only when the degeneracy is on the VECTOR
                 # side; a zero-norm CENTROID made every 0/0 win the
@@ -321,7 +332,7 @@ def _kmeans_assign_literal(
                 scores = np.where(np.isnan(scores), np.inf, scores)
                 zc = cnorm == 0.0
                 if zc.any():
-                    bad_vec = ~(np.sqrt(acc1) > 0.0)
+                    bad_vec = ~(vnorm > 0.0)
                     scores[:, zc] = -np.inf
                     scores[bad_vec] = np.inf
                 cl[ok] = cluster_ids[np.argmax(scores, axis=1)]
@@ -816,9 +827,7 @@ def _bucket_allpairs_float(with_vec: DataFrame, threshold: float) -> DataFrame:
                 np.sqrt(np.einsum("ij,ij->i", v1, v1))
                 * np.sqrt(np.einsum("ij,ij->i", v2, v2))
             )
-            # HALF-AWAY-FROM-ZERO to match F.round (same trick as the
-            # per-pair verify; np.round is banker's rounding)
-            cos = np.sign(cos) * np.floor(np.abs(cos) * 1e4 + 0.5) / 1e4
+            cos = _round4_half_away(cos)
             keep = cos >= threshold  # NaN (zero norm) compares False
             frames.append(
                 pd.DataFrame(
@@ -837,30 +846,28 @@ def _bucket_allpairs_float(with_vec: DataFrame, threshold: float) -> DataFrame:
 
 
 def _pair_verify_fold_portable(
-    emb: DataFrame,
+    emb1: DataFrame,
+    emb2: DataFrame,
     id_col: str,
     vec_col: str,
     pairs: DataFrame,
 ) -> DataFrame:
-    """Per-PAIR fold-order verify for the portable family: join the
-    vector table back by id for each (vec_id_1, vec_id_2) pair and
-    accumulate dot/norms with one vectorized add per dimension --
-    bit-identical to the F.aggregate fold / DuckDB list_aggregate.
-    Emits (vec_id_1, vec_id_2, __raw_cos); zero-norm pairs dropped.
-    Scores uncapped candidate sets and the (tiny) spanning-chain pair
-    set; bucket-bounded candidates go through
-    ``_bucket_allpairs_fold``."""
+    """Per-PAIR verify for the oracle-checked cosine scorers: join each
+    (vec_id_1, vec_id_2) pair to its vectors -- vec_id_1 from ``emb1``,
+    vec_id_2 from ``emb2`` -- and score through the ``_fold_dot``
+    kernel.  Emits (vec_id_1, vec_id_2, __raw_cos) unrounded; zero-norm
+    pairs dropped.  Scores uncapped candidate sets, the (tiny)
+    spanning-chain pair set and the decontamination shuffle fallback;
+    bucket-bounded candidates go through ``_bucket_allpairs_fold``."""
     import numpy as np
     import pandas as pd
 
-    vecs = emb.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec"))
-    joined = pairs.join(
-        vecs.select(F.col("__vid").alias("vec_id_1"), F.col("__vec").alias("__v1")),
-        "vec_id_1",
-    ).join(
-        vecs.select(F.col("__vid").alias("vec_id_2"), F.col("__vec").alias("__v2")),
-        "vec_id_2",
-    )
+    def side(emb: DataFrame, n: int) -> DataFrame:
+        return emb.select(
+            F.col(id_col).alias(f"vec_id_{n}"), F.col(vec_col).alias(f"__v{n}")
+        )
+
+    joined = pairs.join(side(emb1, 1), "vec_id_1").join(side(emb2, 2), "vec_id_2")
 
     def _verify(batches):
         for pdf in batches:
@@ -868,22 +875,13 @@ def _pair_verify_fold_portable(
                 continue
             v1 = np.stack(pdf["__v1"].to_numpy()).astype(np.float64)
             v2 = np.stack(pdf["__v2"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            accd = np.zeros(n)
-            acc1 = np.zeros(n)
-            acc2 = np.zeros(n)
-            for d in range(v1.shape[1]):
-                x, y = v1[:, d], v2[:, d]
-                accd = accd + x * y
-                acc1 = acc1 + x * x
-                acc2 = acc2 + y * y
-            den = np.sqrt(acc1) * np.sqrt(acc2)
+            den = np.sqrt(_fold_norm2(v1)) * np.sqrt(_fold_norm2(v2))
             keep = den != 0.0
             yield pd.DataFrame(
                 {
                     "vec_id_1": pdf["vec_id_1"].to_numpy()[keep],
                     "vec_id_2": pdf["vec_id_2"].to_numpy()[keep],
-                    "__raw_cos": accd[keep] / den[keep],
+                    "__raw_cos": _fold_dot(v1, v2)[keep] / den[keep],
                 }
             )
 
@@ -894,15 +892,12 @@ def _pair_verify_fold_portable(
 
 def _bucket_allpairs_fold(with_vec: DataFrame) -> DataFrame:
     """Portable-family twin of ``_bucket_allpairs_float``: all-pairs
-    scoring within each bucket with the SEQUENTIAL per-dimension
-    accumulation (one vectorized add per dimension) that is
-    bit-identical to the F.aggregate fold / DuckDB list_aggregate --
-    see the verify note in ``embedding_near_dupes_lsh_portable``.
-    Emits the UNROUNDED ratio; the engine-sensitive final steps
-    (round HALF_UP + threshold) stay in Spark, exactly like the
-    per-pair verify.  Zero-norm pairs are dropped here (den == 0):
-    their cosine is undefined (NULL in the oracle), so they never
-    appear."""
+    scoring within each bucket through the ``_fold_dot`` kernel, norms
+    folded once per vector.  Emits the UNROUNDED ratio; the
+    engine-sensitive final steps (round HALF_UP + threshold) stay in
+    Spark, exactly like the per-pair verify.  Zero-norm pairs are
+    dropped here (den == 0): their cosine is undefined (NULL in the
+    oracle), so they never appear."""
     import numpy as np
     import pandas as pd
 
@@ -921,27 +916,15 @@ def _bucket_allpairs_fold(with_vec: DataFrame) -> DataFrame:
         pdf = pdf.sort_values("vid")
         vmat = np.stack(pdf["__vec"].to_numpy().tolist()).astype("float64")
         vids = pdf["vid"].to_numpy()
-        g, ndim = vmat.shape
-        # per-vector squared-norm fold in dimension order: the fold for
-        # a pair's norm only ever touches that one vector's elements,
-        # so accumulating it once per VECTOR is the identical float64
-        # op sequence as accumulating it per PAIR
-        nrm2 = np.zeros(g)
-        for d in range(ndim):
-            x = vmat[:, d]
-            nrm2 = nrm2 + x * x
-        i1, i2 = np.triu_indices(g, 1)
-        accd = np.zeros(len(i1))
-        for d in range(ndim):
-            col = vmat[:, d]
-            accd = accd + col[i1] * col[i2]
-        den = np.sqrt(nrm2[i1]) * np.sqrt(nrm2[i2])
+        nrm = np.sqrt(_fold_norm2(vmat))
+        i1, i2 = np.triu_indices(len(vmat), 1)
+        den = nrm[i1] * nrm[i2]
         keep = den != 0.0
         return pd.DataFrame(
             {
                 "vec_id_1": vids[i1[keep]],
                 "vec_id_2": vids[i2[keep]],
-                "__raw_cos": accd[keep] / den[keep],
+                "__raw_cos": _fold_dot(vmat, vmat, i1, i2)[keep] / den[keep],
             }
         )
 
@@ -1001,10 +984,7 @@ def _pair_verify_arrow_float(
                     np.sqrt(np.einsum("ij,ij->i", v1, v1))
                     * np.sqrt(np.einsum("ij,ij->i", v2, v2))
                 )
-                # HALF-AWAY-FROM-ZERO to match F.round / DuckDB
-                # (np.round is banker's half-to-even: 0.44995 would
-                # round differently from the oracle)
-                cos = np.sign(cos) * np.floor(np.abs(cos) * 1e4 + 0.5) / 1e4
+                cos = _round4_half_away(cos)
                 keep = cos >= threshold
                 return pd.DataFrame(
                     {
@@ -1750,13 +1730,10 @@ def embedding_decontaminate_portable(
     r6; a caller that already holds the combined table should count it
     ONCE and pass n_planes/n_tables explicitly, as
     q_semantic_decontaminate does -- the default here costs one count
-    job per split), and the verify is the Arrow vectorized cosine with BIT-exact
-    parity to the expr fold / DuckDB ``list_aggregate`` (sequential
-    per-dimension accumulation; the per-candidate interpreted HOF fold
-    was the portable family's dominant cost -- see the verify note in
-    ``embedding_near_dupes_lsh_portable``, duplicated here because
-    editing that certified function mid-round would trip the blame
-    guard outside a driver window).  No bucket cap: the dedup family's
+    job per split), and the verify scores through the ``_fold_dot``
+    kernel, bit-identical to the expr fold / DuckDB ``list_aggregate``
+    (the per-candidate interpreted HOF fold was the portable family's
+    dominant cost).  No bucket cap: the dedup family's
     spanning-chain cap preserves CONNECTIVITY, but a decontamination
     probe must not silently drop train-eval hits -- larger k is the
     only recall-free pressure valve.  Bucketing stays exact int64, so
@@ -1787,12 +1764,6 @@ def embedding_decontaminate_portable(
         )
         .dropDuplicates(["train_vec_id", "eval_vec_id"])
     )
-    tv = train.select(
-        F.col(id_col).alias("train_vec_id"), F.col(vec_col).alias("__v1")
-    )
-    ev = eval_emb.select(
-        F.col(id_col).alias("eval_vec_id"), F.col(vec_col).alias("__v2")
-    )
     # CARDINALITY BOUND (r15 review): materializing cand driver-side
     # (collect below / broadcast in the fallback-shaped join) means
     # |cand| <= sum over hot buckets of |train in bucket| x |eval in
@@ -1819,28 +1790,30 @@ def embedding_decontaminate_portable(
         # in-plan, that slim list joins back against train (broadcast
         # -- the documented driver bound above), and each train
         # vector crosses the Arrow boundary ONCE with its candidate
-        # ids (~4 MB at sf0.1).  The eval matrix rides in the task
-        # closure (one tiny collect -- a benchmark suite is tiny by
-        # this function's contract).  Scoring stays the same
-        # sequential per-dimension float64 accumulation on the
-        # expanded pair index -- identical values, identical op
-        # order, so bit-parity with the expr fold / DuckDB oracle is
-        # unchanged (pinned by test_embedding_decontaminate_shuffle
-        # _fallback_matches_broadcast, which cross-checks this path
-        # against the untouched shuffle join below).
-        ev_rows = ev.collect()
+        # ids (~4 MB at sf0.1).  The eval matrix and its norms ride in
+        # the task closure (one tiny collect -- a benchmark suite is
+        # tiny by this function's contract).  Each pair is the
+        # ``_fold_dot`` kernel on (train row, eval row) indices, so the
+        # values equal the shuffle fallback's per-pair verify below
+        # (pinned by test_embedding_decontaminate_shuffle_fallback
+        # _matches_broadcast).
+        ev_rows = eval_emb.select(id_col, vec_col).collect()
         eval_ids = np.array([r[0] for r in ev_rows], dtype=np.int64)
         eval_mat = (
             np.stack([np.asarray(r[1], dtype=np.float64) for r in ev_rows])
             if ev_rows
             else np.zeros((0, dim))
         )
+        eval_nrm = np.sqrt(_fold_norm2(eval_mat))
         eval_row = {int(i): j for j, i in enumerate(eval_ids)}
         candg = cand.groupBy("train_vec_id").agg(
             F.collect_list("eval_vec_id").alias("__evids")
         )
         from ..sources.tables import spread_input
 
+        tv = train.select(
+            F.col(id_col).alias("train_vec_id"), F.col(vec_col).alias("__v1")
+        )
         joined = spread_input(tv).join(F.broadcast(candg), "train_vec_id")
 
         def _verify_grouped(batches):
@@ -1863,18 +1836,9 @@ def embedding_decontaminate_portable(
                     if evl
                     else np.zeros(0, dtype=np.int64)
                 )
-                n = len(t_idx)
-                accd = np.zeros(n)
-                acc1 = np.zeros(n)
-                acc2 = np.zeros(n)
-                for d in range(v1k.shape[1]):
-                    x = v1k[t_idx, d]
-                    y = eval_mat[e_idx, d]
-                    accd = accd + x * y
-                    acc1 = acc1 + x * x
-                    acc2 = acc2 + y * y
-                den = np.sqrt(acc1) * np.sqrt(acc2)
+                den = np.sqrt(_fold_norm2(v1k))[t_idx] * eval_nrm[e_idx]
                 keep = den != 0.0
+                accd = _fold_dot(v1k, eval_mat, t_idx, e_idx)
                 yield pd.DataFrame(
                     {
                         "train_vec_id": ids[t_idx][keep],
@@ -1893,44 +1857,21 @@ def embedding_decontaminate_portable(
             .select("train_vec_id", "eval_vec_id", "cosine_sim")
         )
 
-    joined = tv.join(cand, "train_vec_id").join(F.broadcast(ev), "eval_vec_id")
-
-    def _verify(batches):
-        # sequential per-dimension accumulation: bit-identical to the
-        # F.aggregate fold and DuckDB list_aggregate (numpy ufunc adds
-        # don't fuse or reorder); zero-norm pairs dropped, matching the
-        # expr flavor's 0.0/0.0 -> NULL -> filtered semantics
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v1 = np.stack(pdf["__v1"].to_numpy()).astype(np.float64)
-            v2 = np.stack(pdf["__v2"].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            accd = np.zeros(n)
-            acc1 = np.zeros(n)
-            acc2 = np.zeros(n)
-            for d in range(v1.shape[1]):
-                x, y = v1[:, d], v2[:, d]
-                accd = accd + x * y
-                acc1 = acc1 + x * x
-                acc2 = acc2 + y * y
-            den = np.sqrt(acc1) * np.sqrt(acc2)
-            keep = den != 0.0
-            yield pd.DataFrame(
-                {
-                    "train_vec_id": pdf["train_vec_id"].to_numpy()[keep],
-                    "eval_vec_id": pdf["eval_vec_id"].to_numpy()[keep],
-                    "__raw_cos": accd[keep] / den[keep],
-                }
-            )
-
+    pairs = cand.select(
+        F.col("train_vec_id").alias("vec_id_1"),
+        F.col("eval_vec_id").alias("vec_id_2"),
+    )
     return (
-        joined.mapInPandas(
-            _verify, "train_vec_id long, eval_vec_id long, __raw_cos double"
+        _pair_verify_fold_portable(
+            train, F.broadcast(eval_emb), id_col, vec_col, pairs
         )
         .withColumn("cosine_sim", F.round(F.col("__raw_cos"), 4))
         .filter(F.col("cosine_sim") >= threshold)
-        .select("train_vec_id", "eval_vec_id", "cosine_sim")
+        .select(
+            F.col("vec_id_1").alias("train_vec_id"),
+            F.col("vec_id_2").alias("eval_vec_id"),
+            "cosine_sim",
+        )
     )
 
 
@@ -2264,9 +2205,8 @@ def embedding_near_dupes_lsh_portable(
     the algorithm end-to-end.
 
     Buckets come from one exact int64 numpy matmul per Arrow batch
-    (_int_hyperplane_buckets_arrow).  Candidates are scored with a
-    sequential per-dimension accumulation that is bit-identical to the
-    oracle's list_aggregate fold (_pair_verify_fold_portable /
+    (_int_hyperplane_buckets_arrow).  Candidates are scored through the
+    ``_fold_dot`` kernel (_pair_verify_fold_portable /
     _bucket_allpairs_fold); round HALF_UP to 4 places and the threshold
     filter run in Spark.  A pair whose cosine is undefined -- a
     zero-norm vector, or a NULL element -- never appears, as in the
@@ -2283,10 +2223,7 @@ def embedding_near_dupes_lsh_portable(
         # row through ONE bucket exchange and form the C(g,2) pairs
         # inside numpy, instead of joining two vectors onto every
         # candidate pair (~64% of all pairs collide on the measured
-        # sf0.1 worst case).  Per-pair float64 op sequence is the SAME
-        # sequential per-dimension accumulation as the per-pair verify
-        # below -- bit-identical to the DuckDB oracle's fold -- and
-        # round HALF_UP + threshold stay in Spark.
+        # sf0.1 worst case).  Round HALF_UP + threshold stay in Spark.
         # Cross-table multiplicity is deduped AFTER scoring on slim
         # (id, id, double) rows; duplicate rows are value-identical so
         # the result set is unchanged.  Gated on max_bucket_size: the
@@ -2299,13 +2236,13 @@ def embedding_near_dupes_lsh_portable(
             F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
         )
         scored = scored.unionByName(
-            _pair_verify_fold_portable(emb, id_col, vec_col, chain_pairs)
+            _pair_verify_fold_portable(emb, emb, id_col, vec_col, chain_pairs)
         )
         # r15 (guide §2.3): threshold BEFORE the cross-table dedup --
         # every duplicate copy of a pair carries the identical
-        # bit-exact __raw_cos (both scorers run the same sequential
-        # per-dimension fold on the same two vectors), so round +
-        # filter commute with dropDuplicates, and the dedup exchange
+        # __raw_cos (both scorers run the ``_fold_dot`` kernel on the
+        # same two vectors), so round + filter commute with
+        # dropDuplicates, and the dedup exchange
         # shrinks from the full scored candidate stream (~2M rows at
         # sf0.1) to only the pairs that survive the threshold.
         return (
@@ -2327,7 +2264,7 @@ def embedding_near_dupes_lsh_portable(
     # documented worst case), so this verify is the family's dominant
     # cost: ~192 vectorized ops per Arrow batch.
     return (
-        _pair_verify_fold_portable(emb, id_col, vec_col, candidates)
+        _pair_verify_fold_portable(emb, emb, id_col, vec_col, candidates)
         .withColumn("cosine_sim", F.round(F.col("__raw_cos"), 4))
         .filter(F.col("cosine_sim") >= threshold)
         .select("vec_id_1", "vec_id_2", "cosine_sim")

@@ -104,14 +104,15 @@ DRIVER_PRIORITY = [
     "similarity_topk",
     "ann_recall_audit",
     "ann_ivf_lossless_audit",
-    # Tier 2 (11, slots 38-48): the r12-last-green cohort (27 rows;
+    # Tier 2 (8, slots 38-45): the r12-last-green cohort (27 rows;
     # ann_ivfpq_adc_audit and term_pmi_cooccurrence already hold
     # re-stamp slots above), ranked by MEASURED cross-module blame-span
     # width at the r16 head (tools/parity_check.fn_blame_spans, sum of
     # span lines outside the fn's own module): doc_fingerprints 7,
     # doc_hof_stats / fact_join_unbucketed / nation_profit /
     # sorted_neighborhood_dedup 4, remainder 0 (alphabetical).  The
-    # 14 lowest-ranked (intra_doc_dedup, latest_event_per_user,
+    # 17 lowest-ranked (gapfill_interpolate, hourly_gapfill,
+    # html_text_extract, intra_doc_dedup, latest_event_per_user,
     # mad_anomaly_hours, order_first_last_nth, order_window_suite,
     # revenue_concentration, rolling_7d_revenue, shard_manifest,
     # top_spenders_lateral, train_eval_split, training_mix_upsample,
@@ -125,9 +126,14 @@ DRIVER_PRIORITY = [
     "cumulative_unique_users",
     "embedding_pq_audit",
     "freq_items_audit",
-    "gapfill_interpolate",
-    "hourly_gapfill",
-    "html_text_extract",
+    # Re-certifications for the one cosine-fold kernel (3, slots
+    # 46-48): semantic_decontaminate's verify (its shuffle fallback is
+    # now the portable pair verify) is the blame guard's name;
+    # ngram_jaccard_pairs and near_dup_clusters share one builder with
+    # their _fast twins, so their content stamps changed (plans equal).
+    "semantic_decontaminate",
+    "ngram_jaccard_pairs",
+    "near_dup_clusters",
     # Cross-module re-certifications (2, slots 49-50): the portable
     # embedding-LSH family in functions/similarity.py lost its
     # expression bucketer and verify, and its uncapped tail now scores

@@ -451,21 +451,9 @@ __shd AS (
 _SQL_SHINGLES = sql_shingles()
 
 
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-set Jaccard near-dup with min-shingle-hash fingerprint
-    blocking: candidates = docs sharing the minimum md5 over a sampled
-    subset of their word 3-gram shingles (a 1-hash MinHash bucket --
-    collision probability for a pair tracks its shingle Jaccard, so
-    near-dups collide and unrelated docs don't).  One equi-join on the
-    fingerprint, bucket sizes bounded by true dup-cluster sizes -- a
-    real linear blocking strategy, unlike id-adjacency.  md5 keeps the
-    bucket key recomputable by the DuckDB oracle.
-
-    VERDICT r3 item 2: building the FULL shingle array was the measured
-    bottleneck (interpreted HOF, ~size(toks) strings/row; xxhash64 only
-    bought ~12%), so blocking now samples every 4th shingle position
-    (text.shingles_sampled) -- 4x fewer strings built/hashed per doc;
-    the verify stage (token Jaccard) is unchanged."""
+def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, hash_fn) -> DataFrame:
+    """Min-shingle-hash blocked token-Jaccard pairs, fingerprinting each
+    sampled shingle with ``hash_fn`` (``F.md5`` or ``F.xxhash64``)."""
     t = load_tables(spark, sf_dir, ["documents"])
     docs = (
         t["documents"]
@@ -473,7 +461,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             TX.tokens("text").alias("__toks"),
             F.array_min(
-                F.transform(TX.shingles_sampled("text", 3, 4), lambda s: F.md5(s))
+                F.transform(TX.shingles_sampled("text", 3, 4), lambda s: hash_fn(s))
             ).alias("__fp"),
         )
         .filter(F.col("__fp").isNotNull())
@@ -504,6 +492,24 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-set Jaccard near-dup with min-shingle-hash fingerprint
+    blocking: candidates = docs sharing the minimum md5 over a sampled
+    subset of their word 3-gram shingles (a 1-hash MinHash bucket --
+    collision probability for a pair tracks its shingle Jaccard, so
+    near-dups collide and unrelated docs don't).  One equi-join on the
+    fingerprint, bucket sizes bounded by true dup-cluster sizes -- a
+    real linear blocking strategy, unlike id-adjacency.  md5 keeps the
+    bucket key recomputable by the DuckDB oracle.
+
+    VERDICT r3 item 2: building the FULL shingle array was the measured
+    bottleneck (interpreted HOF, ~size(toks) strings/row; xxhash64 only
+    bought ~12%), so blocking now samples every 4th shingle position
+    (text.shingles_sampled) -- 4x fewer strings built/hashed per doc;
+    the verify stage (token Jaccard) is unchanged."""
+    return _ngram_jaccard_pairs(spark, sf_dir, F.md5)
+
+
 def q_ngram_jaccard_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 flavor of the min-shingle-hash blocking (same sampled
     positions as the portable twin).  r3 measurement: swapping the hash
@@ -512,39 +518,7 @@ def q_ngram_jaccard_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling; kept because at 100 TB the JVM-codegen hash also avoids
     the md5 string allocation per shingle.  Rows-only (the algorithm is
     oracle-verified via ngram_jaccard_pairs)."""
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = (
-        t["documents"]
-        .select(
-            "doc_id",
-            TX.tokens("text").alias("__toks"),
-            F.array_min(
-                F.transform(TX.shingles_sampled("text", 3, 4), lambda s: F.xxhash64(s))
-            ).alias("__fp"),
-        )
-        .filter(F.col("__fp").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    slim = docs.select("doc_id", "__fp")
-    cand = (
-        slim.alias("a")
-        .join(slim.alias("b"), "__fp")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2")
-        )
-    )
-    t1 = docs.select(F.col("doc_id").alias("doc_id_1"), F.col("__toks").alias("__toks_1"))
-    t2 = docs.select(F.col("doc_id").alias("doc_id_2"), F.col("__toks").alias("__toks_2"))
-    return (
-        cand.join(t1, "doc_id_1")
-        .join(t2, "doc_id_2")
-        .withColumn(
-            "jaccard", F.round(jaccard_tokens(F.col("__toks_1"), F.col("__toks_2")), 4)
-        )
-        .filter(F.col("jaccard") >= 0.2)
-        .select("doc_id_1", "doc_id_2", "jaccard")
-    )
+    return _ngram_jaccard_pairs(spark, sf_dir, F.xxhash64)
 
 
 # Sampled-position shingles (text.shingles_sampled mirror): positions
@@ -828,37 +802,12 @@ def q_minhash_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id_1", "doc_id_2")
 
 
-def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full corpus-dedup pipeline on the portable pair family:
-    MinHash-LSH pairs -> connected components -> cluster-size
-    histogram.  Oracle: recursive-CTE transitive closure over the same
-    recomputed pairs."""
+def _cluster_size_histogram(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components over near-dup ``pairs`` -> (cluster_size,
+    n_clusters) histogram, ordered by size."""
     from ..functions.similarity import dedup_clusters
 
-    t = load_tables(spark, sf_dir, ["documents"])
-    pairs = minhash_near_dupes_portable(t["documents"], threshold=0.5)
-    clustered = dedup_clusters(t["documents"], pairs)
-    return (
-        clustered.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-        )
-        .orderBy("cluster_size")
-    )
-
-
-def q_near_dup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clusters over the xxhash64 fast pairs (rows-only; scale/bench
-    flavor of near_dup_clusters).  Bucket cap is lossless here: the
-    spanning-chain degradation keeps every duplicate cluster connected,
-    which is all connected components needs."""
-    from ..functions.similarity import dedup_clusters
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    pairs = minhash_near_dupes(t["documents"], threshold=0.5, max_bucket_size=500)
-    clustered = dedup_clusters(t["documents"], pairs)
+    clustered = dedup_clusters(docs, pairs)
     return (
         clustered.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -866,6 +815,26 @@ def q_near_dup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_clusters"))
         .orderBy("cluster_size")
     )
+
+
+def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full corpus-dedup pipeline on the portable pair family:
+    MinHash-LSH pairs -> connected components -> cluster-size
+    histogram.  Oracle: recursive-CTE transitive closure over the same
+    recomputed pairs."""
+    t = load_tables(spark, sf_dir, ["documents"])
+    pairs = minhash_near_dupes_portable(t["documents"], threshold=0.5)
+    return _cluster_size_histogram(t["documents"], pairs)
+
+
+def q_near_dup_clusters_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Clusters over the xxhash64 fast pairs (rows-only; scale/bench
+    flavor of near_dup_clusters).  Bucket cap is lossless here: the
+    spanning-chain degradation keeps every duplicate cluster connected,
+    which is all connected components needs."""
+    t = load_tables(spark, sf_dir, ["documents"])
+    pairs = minhash_near_dupes(t["documents"], threshold=0.5, max_bucket_size=500)
+    return _cluster_size_histogram(t["documents"], pairs)
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1618,29 +1587,32 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every (v1, v2 <= v1+W) pair is complete in v1's bucket), and the
     C(bucket) candidate pairs are formed in numpy inside a grouped
     applyInPandas -- the embedding-LSH family's proven per-bucket
-    grouped-scoring pattern.  Per-pair math is the family's bit-parity
-    fold: dot and both squared norms accumulate left-to-right in
-    dimension order (one vectorized add per dimension -- identical to
-    the F.aggregate fold / DuckDB list_aggregate), HALF-AWAY-FROM-ZERO
-    round to 4, threshold on the rounded value.  Engine edges
-    preserved: zero-denominator pairs score NULL in the expr form and
-    are dropped by the threshold (numpy: den == 0 dropped); a NaN
-    element propagates NaN, which Spark's >= ranks ABOVE the threshold
-    (numpy: NaN with nonzero den kept); NULL / dim-mismatched vectors
-    pair to NULL and drop (numpy: per-length grouping).  Oracle parity
-    re-proven at sf0.001/0.01/0.1."""
+    grouped-scoring pattern.  Per-pair math is the ``_fold_dot``
+    kernel of functions/similarity.py with norms folded once per
+    vector, HALF-AWAY-FROM-ZERO round to 4, threshold on the rounded
+    value.  Engine edges preserved: zero-denominator pairs score NULL
+    in the expr form and are dropped by the threshold (numpy: den == 0
+    dropped); a NaN element propagates NaN, which Spark's >= ranks
+    ABOVE the threshold (numpy: NaN with nonzero den kept); NULL /
+    dim-mismatched vectors, and vectors with a NULL element, pair to
+    NULL and drop (numpy: the ok mask and per-length grouping)."""
     import numpy as np
     import pandas as pd
+
+    from ..functions.similarity import _fold_dot, _fold_norm2, _round4_half_away
 
     t = load_tables(spark, sf_dir, ["embeddings"])
     emb = t["embeddings"]
     w = _NEAR_DUP_WINDOW
-    core = emb.select(
-        "vec_id", "embedding", F.expr(f"vec_id DIV {w}").alias("g")
+    # Arrow hands a NULL element to pandas as NaN, the same as a NaN
+    # element, so a vector with one is made NULL here, before the cut
+    vec = (
+        F.when(F.exists("embedding", lambda x: x.isNull()), F.lit(None))
+        .otherwise(F.col("embedding"))
+        .alias("embedding")
     )
-    look = emb.select(
-        "vec_id", "embedding", (F.expr(f"vec_id DIV {w}") - 1).alias("g")
-    )
+    core = emb.select("vec_id", vec, F.expr(f"vec_id DIV {w}").alias("g"))
+    look = emb.select("vec_id", vec, (F.expr(f"vec_id DIV {w}") - 1).alias("g"))
     both = core.unionByName(look)
 
     empty = pd.DataFrame(
@@ -1681,20 +1653,11 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             if len(i1) == 0:
                 continue
-            v1, v2 = vmat[i1], vmat[i2]
-            npair = len(i1)
-            accd = np.zeros(npair)
-            acc1 = np.zeros(npair)
-            acc2 = np.zeros(npair)
-            for d in range(int(d_eff)):
-                x, y = v1[:, d], v2[:, d]
-                accd = accd + x * y
-                acc1 = acc1 + x * x
-                acc2 = acc2 + y * y
-            den = np.sqrt(acc1) * np.sqrt(acc2)
+            nrm = np.sqrt(_fold_norm2(vmat))
+            den = nrm[i1] * nrm[i2]
             with np.errstate(divide="ignore", invalid="ignore"):
-                cos = accd / den
-            rounded = np.sign(cos) * np.floor(np.abs(cos) * 1e4 + 0.5) / 1e4
+                cos = _fold_dot(vmat, vmat, i1, i2) / den
+            rounded = _round4_half_away(cos)
             # den == 0 -> NULL in the expr form, dropped; NaN with
             # nonzero den -> Spark >= treats NaN as greater, kept
             keep = (den != 0.0) & (np.isnan(cos) | (rounded >= 0.25))

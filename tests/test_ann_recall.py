@@ -360,7 +360,9 @@ def test_cosine_topk_degenerate_query_vectors_match_expr_form(spark):
     them to all-NULL cosines.  Pin the graceful behavior against the
     original expression formulation: NULL, dim-mismatched and zero-norm
     queries emit top-k rows ranked purely by vec_id with NULL
-    cosine_sim; a NaN-element query still ranks NaN first."""
+    cosine_sim; a NaN-element query still ranks NaN first; a query
+    whose length differs from the first query's still scores the
+    corpus vectors of its own length."""
     from pyspark.sql import Window
 
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
@@ -374,6 +376,7 @@ def test_cosine_topk_degenerate_query_vectors_match_expr_form(spark):
             (2, [0.9, 0.1, 0.0, 0.0]),
             (3, [0.0, 1.0, 0.0, 0.0]),
             (4, [0.5, 0.5, 0.0, 0.0]),
+            (5, [0.0, 1.0, 0.5]),
         ],
         "vec_id long, embedding array<double>",
     )
@@ -384,6 +387,7 @@ def test_cosine_topk_degenerate_query_vectors_match_expr_form(spark):
             (12, [1.0, 0.0]),                     # dim mismatch
             (13, [0.0, 0.0, 0.0, 0.0]),           # zero norm
             (14, [float("nan"), 1.0, 0.0, 0.0]),  # NaN element
+            (15, [0.0, 1.0, 1.0]),                # dim of corpus vector 5 only
         ],
         "vec_id long, embedding array<double>",
     )
@@ -426,6 +430,9 @@ def test_cosine_topk_degenerate_query_vectors_match_expr_form(spark):
         per = sorted((k[2], k[1]) for k in got if k[0] == qid)
         assert per == [(1, 1), (2, 2), (3, 3)]
         assert all(got[(qid, v, r)] is None for r, v in per)
+    # a query scores the corpus vectors of its own length, whatever the
+    # length of the first query
+    assert got[(15, 5, 1)] is not None
 
 
 def test_cosine_topk_query_collect_guard(spark, monkeypatch):

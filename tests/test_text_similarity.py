@@ -470,17 +470,19 @@ def test_int_bucketer_rejects_bad_dims(spark):
         _int_hyperplane_buckets_arrow(bad, "vec_id", "embedding", 4, 16, 64).collect()
 
 
-def test_lsh_verify_drops_undefined_cosines(spark):
+def test_lsh_verify_drops_undefined_cosines(spark, tmp_path):
     """A pair whose cosine is undefined never appears, in either LSH
-    family, capped or not: two all-zero vectors share every bucket
-    (all sign bits set) but have a zero norm, and a vector with a NULL
-    element has no cosine at all.  numpy would yield NaN for both, and
-    Spark orders NaN above every double, so an unguarded NaN would pass
-    the threshold filter."""
+    family, capped or not, nor in the windowed embedding_near_dup
+    query: two all-zero vectors share every bucket (all sign bits set)
+    but have a zero norm, and a vector with a NULL element has no
+    cosine at all.  numpy would yield NaN for both, and Spark orders
+    NaN above every double, so an unguarded NaN would pass the
+    threshold filter."""
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
         embedding_near_dupes_lsh,
         embedding_near_dupes_lsh_portable,
     )
+    from spark_streaming_postgres_lab2_spark.queries.ext import q_embedding_near_dup
 
     emb = spark.createDataFrame(
         [
@@ -492,20 +494,74 @@ def test_lsh_verify_drops_undefined_cosines(spark):
         ],
         "vec_id long, embedding array<double>",
     )
+    emb.write.parquet(str(tmp_path / "embeddings.parquet"))
+    outs = [q_embedding_near_dup(spark, str(tmp_path))]
     for cap in (None, 2):
-        for out in (
+        outs += [
             embedding_near_dupes_lsh(
                 emb, threshold=0.4, n_planes=4, n_tables=16, dim=64,
                 max_bucket_size=cap,
             ),
             embedding_near_dupes_lsh_portable(emb, max_bucket_size=cap),
-        ):
-            rows = out.collect()
-            assert not any(math.isnan(r.cosine_sim) for r in rows), rows
-            pairs = {(r.vec_id_1, r.vec_id_2) for r in rows}
-            assert (4, 5) not in pairs  # zero-norm pair
-            assert (1, 2) not in pairs and (2, 3) not in pairs  # NULL element
-            assert (1, 3) in pairs  # the true duplicate
+        ]
+    for out in outs:
+        rows = out.collect()
+        assert all(
+            r.cosine_sim is not None and not math.isnan(r.cosine_sim) for r in rows
+        ), rows
+        pairs = {(r.vec_id_1, r.vec_id_2) for r in rows}
+        assert (4, 5) not in pairs  # zero-norm pair
+        assert (1, 2) not in pairs and (2, 3) not in pairs  # NULL element
+        assert (1, 3) in pairs  # the true duplicate
+
+
+def test_fold_kernel_is_a_left_to_right_fold_in_every_form():
+    """The oracle-parity rule has one owner, ``_fold_dot``: each sum
+    starts at 0.0 and adds one dimension at a time, left to right, as
+    the expression fold and DuckDB's list_aggregate do.  Every form --
+    per-row squared norm, row-wise, index pairs, all-against-all --
+    equals a pure-Python fold bit for bit (zero-norm row and NaN
+    element included), and the pair and all-against-all forms agree
+    exactly, so a scorer may switch forms without moving a cosine."""
+    import numpy as np
+
+    from spark_streaming_postgres_lab2_spark.functions.similarity import (
+        _fold_dot,
+        _fold_dot_all,
+        _fold_norm2,
+        _round4_half_away,
+    )
+
+    rng = np.random.default_rng(16)
+    a = rng.standard_normal((7, 64))
+    b = rng.standard_normal((5, 64)) * 1e3
+    a[2] = 0.0  # zero norm
+    b[3, 10] = np.nan  # NaN element
+
+    def py_dot(x, y):
+        acc = 0.0
+        for u, v in zip(x.tolist(), y.tolist()):
+            acc = acc + u * v
+        return acc
+
+    def bits(x):
+        return [float(v).hex() for v in np.ravel(x)]
+
+    assert bits(_fold_norm2(a)) == bits([py_dot(x, x) for x in a])
+    assert bits(_fold_dot(a[:5], b)) == bits([py_dot(x, y) for x, y in zip(a, b)])
+    full = _fold_dot_all(a, b)
+    assert full.shape == (7, 5)
+    assert bits(full) == bits([[py_dot(x, y) for y in b] for x in a])
+    ia = rng.integers(0, 7, 40)
+    ib = rng.integers(0, 5, 40)
+    assert bits(_fold_dot(a, b, ia, ib)) == bits(full[ia, ib])
+    assert (_fold_norm2(a)[2] == 0.0) and np.isnan(full[:, 3]).all()
+    # dim 0: empty sums, still shaped
+    assert _fold_dot_all(np.zeros((2, 0)), np.zeros((3, 0))).shape == (2, 3)
+
+    # half away from zero, where np.round rounds half to even
+    got = _round4_half_away(np.array([0.12345, -0.12345, 0.00025, 0.123449, np.nan]))
+    assert bits(got) == bits([0.1235, -0.1235, 0.0003, 0.1234, np.nan])
 
 
 def test_snm_dedup_passes_and_threshold(spark, tmp_path):
