@@ -86,7 +86,6 @@ BENCH_QUERIES = [
     "doc_quality",
     "doc_fingerprints",
     "ngram_jaccard_pairs",
-    "ngram_jaccard_pairs_fast",
     "minhash_near_dup_fast",
     "near_dup_clusters_fast",
     "simhash",
@@ -159,7 +158,6 @@ BENCH_QUERIES = [
     "url_domain_filter",
     "html_text_extract",
     "semantic_dedup",
-    "semantic_dedup_fast",
     "url_canonical_dedup",
     "intra_doc_dedup",
     "training_mix_upsample",

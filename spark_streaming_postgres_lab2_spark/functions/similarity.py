@@ -62,8 +62,7 @@ def _fold_dot(a, b, ia=slice(None), ib=slice(None)):
     fold above and of DuckDB's ``list_aggregate(..., 'sum')``, so a
     cosine built from it is bit-identical to both.  A vectorized add
     per dimension does not fuse or reorder the per-element sums;
-    ``np.einsum`` and ``@`` may, so only the float family's
-    rows-only scorers use them.
+    ``np.einsum`` and ``@`` may, so no cosine scorer uses them.
 
     ``ia``/``ib`` pick and shape the rows of each side:
     - index arrays: the pair form, ``a[ia[p]] . b[ib[p]]``;
@@ -678,8 +677,9 @@ def minhash_near_dupes(
 
 # --- embedding-cosine near-dup ----------------------------------------------
 
-# 256-dim planes, truncated to each vector's dimensionality by the
-# bucketers; a vector longer than the planes is rejected, never padded.
+# 256-dim gaussian planes: the source of the integer planes
+# (_int_plane scales them by 2^10, rounds, and truncates them to the
+# family's static dim).
 _HYPERPLANE_DIM = 256
 # 96 planes support up to n_tables * n_planes = 96 (e.g. 16 tables x 6
 # planes).  The first 16 are bit-identical to the r2 constants: _rng's
@@ -688,161 +688,6 @@ _HYPERPLANE_DIM = 256
 _HYPERPLANES = [
     [_rng.gauss(0.0, 1.0) for _ in range(_HYPERPLANE_DIM)] for _ in range(96)
 ]
-
-
-def _hyperplane_buckets_arrow(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    dim: int | None,
-) -> DataFrame:
-    """Slim (vid, bucket) rows via ONE numpy matmul per Arrow batch:
-    (batch x dim) @ (dim x L*k) replaces L*k interpreted aggregate-HOF
-    folds per row.  Higher-order functions evaluate their lambda per
-    array element outside whole-stage codegen, so at L=16, k=6, dim=64
-    an expression bucketer burns ~6k lambda evaluations per row -- the
-    measured dominant cost of the adaptive LSH query (15.6 s at sf0.1,
-    VERDICT r3).  A dense sign-projection is exactly the case the
-    PySpark guide reserves Arrow-batched Python for: BLAS does the 96
-    dots in one vectorized pass, and only (vid, bucket) longs cross
-    back.  Input contract: with static ``dim`` every row must match
-    exactly; with dim=None, MIXED dims are allowed (each row dots
-    against planes truncated to its own length -- rows are grouped by
-    length inside the batch so each group is still one matmul) and
-    only rows longer than the plane table raise.  NULL embeddings raise
-    a descriptive error either way."""
-    import numpy as np
-    import pandas as pd
-
-    n_needed = n_tables * n_planes
-    if n_needed > len(_HYPERPLANES):
-        raise ValueError(
-            f"{n_tables} tables x {n_planes} planes needs {n_needed} planes; "
-            f"only {len(_HYPERPLANES)} available"
-        )
-    planes_full = np.array(
-        [_HYPERPLANES[i] for i in range(n_needed)], dtype=np.float64
-    )  # (L*k, 256); ~50 KB in the task closure
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-    offsets = (np.arange(n_tables, dtype=np.int64) * (1 << n_planes))
-
-    def _buckets(batches):
-        max_dim = planes_full.shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = pdf[vec_col].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            lens = np.array([-1 if v is None else len(v) for v in vecs])
-            if (lens < 0).any():
-                bad = ids[lens < 0][:3].tolist()
-                raise ValueError(
-                    f"NULL embedding cannot be hyperplane-bucketed (ids {bad})"
-                )
-            if dim is not None:
-                if (lens != dim).any():
-                    seen = sorted(set(lens[lens != dim].tolist()))
-                    raise ValueError(f"embedding dims {seen} != static dim {dim}")
-            elif lens.max() > max_dim:
-                raise ValueError(
-                    f"embedding dim {int(lens.max())} exceeds hyperplane dim "
-                    f"{max_dim}; extend _HYPERPLANES"
-                )
-            # group rows by length: each group is one matmul, and a row
-            # dots against planes truncated to its own length
-            for d_eff in np.unique(lens):
-                idx = np.nonzero(lens == d_eff)[0]
-                m = np.stack(vecs[idx]).astype(np.float64)  # (g, d_eff)
-                dots = m @ planes_full[:, :d_eff].T  # (g, L*k)
-                bits = (dots >= 0).astype(np.int64).reshape(
-                    len(idx), n_tables, n_planes
-                )
-                keys = (bits * weights).sum(axis=2) + offsets  # (g, L)
-                yield pd.DataFrame(
-                    {
-                        "vid": np.repeat(ids[idx], n_tables),
-                        "bucket": keys.ravel(),
-                    }
-                )
-
-    # Deliberately NOT spread (r15): the bucketing matmul is one cheap
-    # vectorized numpy op per batch, and interleaved A/B measured the
-    # round-robin exchange costing 1.1-1.2x end-to-end on every
-    # embedding-LSH query (the md5/shingle signature passes, where
-    # per-row work dominates, keep their spread).
-    return emb.select(id_col, vec_col).mapInPandas(
-        _buckets, "vid long, bucket long"
-    )
-
-
-def _bucket_allpairs_float(with_vec: DataFrame, threshold: float) -> DataFrame:
-    """All-pairs exact-cosine verify WITHIN each LSH bucket for the
-    float family -- the guide-§8 restructure of the per-pair verify:
-    the heavy payload (the vector) travels once per BUCKET ROW instead
-    of once per candidate PAIR.  On a non-discriminative corpus (the
-    measured sf0.1 worst case: ~64% of all pairs collide) the old
-    shape joined two 64-float arrays onto ~1.3M candidate rows
-    (~650 MB through two joins + Arrow); this shape ships the ~32k
-    (vid, bucket, vec) rows once and forms the pairs inside numpy.
-
-    Input: (bucket, vid, __vec).  Output: (vec_id_1 < vec_id_2,
-    cosine_sim) -- SAME per-pair math as the per-pair Arrow verify
-    (einsum + half-away-from-zero round + threshold keep), so each
-    pair's value is bit-identical; cross-table multiplicity is deduped
-    by the caller AFTER scoring (deterministic: duplicate rows carry
-    identical values).  Mixed dims follow the per-pair verify: pairs
-    of unequal length are dropped.  Groups are bounded by the caller's
-    ``max_bucket_size`` cap, so per-group memory is O(cap^2) pairs."""
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {
-            "vec_id_1": pd.Series(dtype="int64"),
-            "vec_id_2": pd.Series(dtype="int64"),
-            "cosine_sim": pd.Series(dtype="float64"),
-        }
-    )
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return empty
-        pdf = pdf.sort_values("vid")
-        vecs = pdf["__vec"].to_numpy()
-        vids = pdf["vid"].to_numpy()
-        lens = np.fromiter((len(v) for v in vecs), dtype=np.int64, count=n)
-        frames = []
-        for d_eff in np.unique(lens):
-            sel = np.nonzero(lens == d_eff)[0]
-            g = len(sel)
-            if g < 2:
-                continue
-            vmat = np.stack(vecs[sel].tolist()).astype("float64")
-            i1, i2 = np.triu_indices(g, 1)
-            v1, v2 = vmat[i1], vmat[i2]
-            cos = np.einsum("ij,ij->i", v1, v2) / (
-                np.sqrt(np.einsum("ij,ij->i", v1, v1))
-                * np.sqrt(np.einsum("ij,ij->i", v2, v2))
-            )
-            cos = _round4_half_away(cos)
-            keep = cos >= threshold  # NaN (zero norm) compares False
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_id_1": vids[sel][i1[keep]],
-                        "vec_id_2": vids[sel][i2[keep]],
-                        "cosine_sim": cos[keep],
-                    }
-                )
-            )
-        return pd.concat(frames) if frames else empty
-
-    return with_vec.groupBy("bucket").applyInPandas(
-        score_bucket, "vec_id_1 long, vec_id_2 long, cosine_sim double"
-    )
 
 
 def _pair_verify_fold_portable(
@@ -891,12 +736,15 @@ def _pair_verify_fold_portable(
 
 
 def _bucket_allpairs_fold(with_vec: DataFrame) -> DataFrame:
-    """Portable-family twin of ``_bucket_allpairs_float``: all-pairs
-    scoring within each bucket through the ``_fold_dot`` kernel, norms
-    folded once per vector.  Emits the UNROUNDED ratio; the
-    engine-sensitive final steps (round HALF_UP + threshold) stay in
-    Spark, exactly like the per-pair verify.  Zero-norm pairs are
-    dropped here (den == 0): their cosine is undefined (NULL in the
+    """All-pairs scoring within each LSH bucket through the
+    ``_fold_dot`` kernel, norms folded once per vector.  Each vector
+    travels once per (vid, bucket) row instead of once per candidate
+    pair, and the pairs are formed inside numpy.  Input: (bucket, vid,
+    __vec).  Groups are bounded by the caller's ``max_bucket_size``
+    cap, so per-group memory is O(cap^2) pairs.  Emits the UNROUNDED
+    ratio; the engine-sensitive final steps (round HALF_UP + threshold)
+    stay in Spark, exactly like the per-pair verify.  Zero-norm pairs
+    are dropped here (den == 0): their cosine is undefined (NULL in the
     oracle), so they never appear."""
     import numpy as np
     import pandas as pd
@@ -930,220 +778,6 @@ def _bucket_allpairs_fold(with_vec: DataFrame) -> DataFrame:
 
     return with_vec.groupBy("bucket").applyInPandas(
         score_bucket, "vec_id_1 long, vec_id_2 long, __raw_cos double"
-    )
-
-
-def _pair_verify_arrow_float(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    candidates: DataFrame,
-    threshold: float,
-    dim: int | None,
-) -> DataFrame:
-    """Per-PAIR Arrow cosine verify for the float family: join the
-    vector table back by id for each candidate pair, score via one
-    numpy einsum per Arrow batch, round half-away-from-zero, keep at
-    or above ``threshold``.  Used for uncapped candidate sets and for
-    the (tiny) spanning-chain pairs; the bucket-bounded hot path goes
-    through ``_bucket_allpairs_float`` instead, which ships each
-    vector once per bucket row rather than once per pair."""
-    vecs = emb.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__vec")
-    )
-    joined = (
-        candidates.join(
-            vecs.select(
-                F.col("__vid").alias("vec_id_1"), F.col("__vec").alias("__v1")
-            ),
-            "vec_id_1",
-        )
-        .join(
-            vecs.select(
-                F.col("__vid").alias("vec_id_2"), F.col("__vec").alias("__v2")
-            ),
-            "vec_id_2",
-        )
-        .select("vec_id_1", "vec_id_2", "__v1", "__v2")
-    )
-
-    def _verify(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a1, a2 = pdf["__v1"].to_numpy(), pdf["__v2"].to_numpy()
-            n = len(a1)
-
-            def score(idx):
-                v1 = np.stack(a1[idx].tolist()).astype("float64")
-                v2 = np.stack(a2[idx].tolist()).astype("float64")
-                cos = np.einsum("ij,ij->i", v1, v2) / (
-                    np.sqrt(np.einsum("ij,ij->i", v1, v1))
-                    * np.sqrt(np.einsum("ij,ij->i", v2, v2))
-                )
-                cos = _round4_half_away(cos)
-                keep = cos >= threshold
-                return pd.DataFrame(
-                    {
-                        "vec_id_1": pdf["vec_id_1"].to_numpy()[idx][keep],
-                        "vec_id_2": pdf["vec_id_2"].to_numpy()[idx][keep],
-                        "cosine_sim": cos[keep],
-                    }
-                )
-
-            if dim is not None:
-                # static dim: the bucketer already raise-checked
-                # every row == dim, so stack directly -- no
-                # per-row length scan on the hot path
-                yield score(np.arange(n))
-                continue
-            # dim=None allows mixed dims (r5 review finding):
-            # np.stack over a batch mixing vector lengths raises,
-            # so group rows by length first (same trick as
-            # _hyperplane_buckets_arrow).  Cross-dim pairs are
-            # DROPPED: their cosine is undefined (the oracle's
-            # zip_with null-pads the shorter side and the NULL fails
-            # the threshold filter).
-            l1 = np.fromiter((len(x) for x in a1), dtype=np.int64, count=n)
-            l2 = np.fromiter((len(x) for x in a2), dtype=np.int64, count=n)
-            if l1.min() == l1.max() == l2.min() == l2.max():
-                # uniform-dim fast path: one stack
-                yield score(np.arange(n))
-                continue
-            same = l1 == l2
-            for d in np.unique(l1[same]):
-                idx = np.nonzero(same & (l1 == d))[0]
-                if len(idx):
-                    yield score(idx)
-
-    return joined.mapInPandas(
-        _verify, "vec_id_1 long, vec_id_2 long, cosine_sim double"
-    )
-
-
-def embedding_near_dupes_lsh(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
-    n_planes: int = 8,
-    n_tables: int = 1,
-    max_bucket_size: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-dup at scale: random-hyperplane buckets ->
-    within-bucket self-join -> exact cosine verify.
-
-    ``n_tables`` is the OR-amplification knob: a pair at angle theta
-    collides in one table with p = (1 - theta/pi)^n_planes, and in at
-    least one of L tables with 1 - (1-p)^L.  n_planes trades precision
-    (candidate volume) against per-table recall; n_tables buys recall
-    back at the cost of L bucket rows per vector.  E.g. cosine 0.4
-    (theta ~= 66 deg, p_plane ~= 0.63): one 8-plane table catches ~2.5%
-    of true pairs; 16 tables x 4 planes catch ~94%.
-
-    Shuffle stays slim: only (vid, bucket) rows are exploded L times
-    and self-joined; the float vectors are joined back by id for the
-    surviving candidates only (same survivors-only pattern as
-    minhash_near_dupes).  All L*k sign bits come from one numpy matmul
-    per Arrow batch (_hyperplane_buckets_arrow), which also enforces
-    the dim contract: with a static ``dim`` every row must match it;
-    without, rows longer than the plane table raise.
-    ``max_bucket_size`` degrades degenerate buckets -- e.g. every copy
-    of a mass-duplicated embedding lands in one bucket -- to a spanning
-    chain of adjacent-id pairs (_cap_buckets), keeping the copies
-    connected while the self-join stays linear."""
-    slim = _hyperplane_buckets_arrow(emb, id_col, vec_col, n_planes, n_tables, dim)
-    if max_bucket_size is not None:
-        slim, chain = _cap_buckets(slim, ["bucket"], "vid", max_bucket_size)
-        # Per-BUCKET grouped verify (r15 guide-§8 restructure): the
-        # payload-free bucket self-join + per-pair vector joins shipped
-        # two 64-float arrays per CANDIDATE pair; on the measured
-        # non-discriminative worst case (~64% of all pairs collide at
-        # sf0.1) that is ~1.3M pair rows carrying vectors through two
-        # joins.  Here each (vid, bucket) row carries its vector ONCE
-        # through a single bucket exchange, and the C(g,2) pairs are
-        # formed inside numpy per bucket -- bytes shipped scale with
-        # bucket OCCUPANCY (<= cap, known bounded), never with pair
-        # count.  Per-pair values are bit-identical (same einsum +
-        # half-away round as the per-pair verify); cross-table
-        # multiplicity (~1.3x) is deduped after scoring, where rows are
-        # three slim columns instead of pairs-plus-vectors.  Gated on
-        # max_bucket_size: the cap bounds per-group memory (O(cap^2)
-        # pairs).
-        vecs = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("__vec"))
-        scored = _bucket_allpairs_float(
-            slim.join(vecs, "vid").select("bucket", "vid", "__vec"), threshold
-        )
-        chain_pairs = chain.select(
-            F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
-        )
-        scored = scored.unionByName(
-            _pair_verify_arrow_float(emb, id_col, vec_col, chain_pairs,
-                                     threshold, dim)
-        )
-        return scored.dropDuplicates(["vec_id_1", "vec_id_2"])
-    left = slim.select("bucket", F.col("vid").alias("vec_id_1"))
-    right = slim.select("bucket", F.col("vid").alias("vec_id_2"))
-    candidates = (
-        left.join(right, "bucket")
-        .filter(F.col("vec_id_1") < F.col("vec_id_2"))
-        .select("vec_id_1", "vec_id_2")
-    )
-    if n_tables > 1:
-        # a pair can collide in several tables; dedup the slim id pairs
-        # BEFORE the vector join so each candidate is scored once.
-        # (r5 note: moving this distinct AFTER the cosine filter -- the
-        # restructure that won for simhash banding -- was MEASURED 3x
-        # SLOWER here (4.6 -> 13.5 s warm at sf0.1) despite only 1.3x
-        # candidate multiplicity: the distinct's exchange is also the
-        # barrier that lets the two vector joins run broadcast over a
-        # compact, evenly-partitioned pair set.  Keep the barrier.)
-        candidates = candidates.dropDuplicates(["vec_id_1", "vec_id_2"])
-    # Verify the survivors: join the vector table back by id
-    # (distributed -- the vectors are never a driver structure, so the
-    # shape survives a 100 TB corpus) and score with one numpy einsum
-    # per Arrow batch.
-    return _pair_verify_arrow_float(emb, id_col, vec_col, candidates, threshold, dim)
-
-
-def adaptive_lsh_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    dim: int = 64,
-    max_bucket_size: int = 200,
-) -> DataFrame:
-    """The production LSH at its ADAPTIVE operating point -- the one
-    rule both scale consumers (queries.ext.q_embedding_lsh_near_dup,
-    queries.corpus.q_semantic_dedup_fast) share, so a retuning lands in
-    one place (review finding: the formula had been copy-pasted).
-
-    k = clamp(round(log2(n/128)), 4..6): 500 -> 4, 2k -> 4, 20k -> 6.
-    Target ~128 vectors/bucket -- measured cheaper to verify a somewhat
-    larger candidate set than to run 16 extra projections per row (k=5
-    at sf0.1 benched SLOWER than k=4 despite 2x fewer candidates); the
-    fixed-(k,L) version went quadratic on /tmp/sf1 (313 s).  96 planes
-    cap k*L; max_bucket_size degrades mass-duplication blobs to
-    spanning chains (connectivity preserved, self-join linear).  The
-    count() probe is metadata-only on parquet."""
-    import math
-
-    n = emb.count()
-    k = min(6, max(4, round(math.log2(max(n, 128) / 128))))
-    return embedding_near_dupes_lsh(
-        emb,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        n_planes=k,
-        n_tables=min(16, 96 // k),
-        max_bucket_size=max_bucket_size,
-        dim=dim,
     )
 
 
@@ -2045,8 +1679,8 @@ def simhash_near_dupes_portable(
     )
 
 
-# Integer-quantized hyperplane family: same Gaussian planes as the
-# float path, scaled by 2^10 and rounded to ints.  With quantized
+# Integer-quantized hyperplane family: the _HYPERPLANES gaussian planes,
+# scaled by 2^10 and rounded to ints.  With quantized
 # vectors (floor(v * 2^14) -- exact: float->double is exact and a
 # power-of-two multiply doesn't round), the bucket sign bits come from
 # PURE int64 arithmetic, so any engine that sums the same integers gets
@@ -2068,19 +1702,16 @@ def _int_hyperplane_buckets_arrow(
     n_tables: int,
     dim: int,
 ) -> DataFrame:
-    """Integer-exact Arrow twin of the portable expr bucketer: ONE
-    int64 matmul per batch replaces L*k interpreted aggregate-HOF folds
-    per row (the same Arrow-vs-HOF trade _hyperplane_buckets_arrow
-    already proved for the float family -- measured here: the expr
-    folds cost ~6 s execution + ~2.5 s driver-side Column composition
-    for 2000 vectors at sf0.1).  Bit-parity with the expr path and the
-    DuckDB oracle is EXACT, not approximate: quantization is
-    floor(float64(v) * 2^14) -- a power-of-two multiply is exact in
-    float64, so numpy and Spark floor identically -- and the plane dot
-    is int64 arithmetic with |dot| < 2^33, far from wrap on any
-    engine.  Static dim only (the portable family's contract); NULL or
-    mismatched-dim embeddings raise descriptively like the expr
-    raise_error guard."""
+    """Slim (vid, bucket) rows via ONE int64 numpy matmul per Arrow
+    batch, in place of L*k interpreted aggregate-HOF folds per row
+    (measured: those expression folds cost ~6 s execution + ~2.5 s
+    driver-side Column composition for 2000 vectors at sf0.1).
+    Bit-parity with the DuckDB oracle is EXACT, not approximate:
+    quantization is floor(float64(v) * 2^14) -- a power-of-two multiply
+    is exact in float64, so numpy and Spark floor identically -- and
+    the plane dot is int64 arithmetic with |dot| < 2^33, far from wrap
+    on any engine.  Static dim only (the family's contract); NULL or
+    mismatched-dim embeddings raise a descriptive error."""
     import numpy as np
     import pandas as pd
 
@@ -2125,18 +1756,18 @@ def _int_hyperplane_buckets_arrow(
 
 
 def adaptive_portable_kl(n: int) -> tuple[int, int]:
-    """Integer-threshold twin of ``adaptive_lsh_pairs``' k-rule for the
-    PORTABLE family: k grows with corpus size so expected bucket
-    occupancy stays bounded, but the rule is pure integer comparisons
-    (no float log2), so a DuckDB oracle replays it from ``count(*)`` in
-    a CTE and the driver-verified semantic_dedup query can run the
-    adaptive plan (VERDICT r5 item 2 -- the fixed (k=4,L=16) operating
-    point measured quadratic-in-candidates at sf1: 124 s vs ~6 s).
+    """The adaptive LSH operating point (k planes per table, L tables)
+    for a corpus of ``n`` vectors: k grows with corpus size so expected
+    bucket occupancy stays near 128 vectors, measured cheaper than
+    running 16 more projections per row to verify fewer candidates.
+    The fixed (k=4, L=16) point went quadratic in candidates at sf1
+    (124 s vs ~6 s).  The rule is pure integer comparisons (no float
+    log2), so the DuckDB oracle replays it from ``count(*)`` in a CTE.
 
-    Thresholds are the integer boundaries of the float rule
-    ``round(log2(n/128))``: 128*2^4.5 = 2896.3 -> k=5 from 2897,
-    128*2^5.5 = 5792.6 -> k=6 from 5793 (capped at 6, like production).
-    L stays 16 -- within the 96-plane budget for every reachable k."""
+    Thresholds are the integer boundaries of ``round(log2(n/128))``
+    clamped to 4..6: 128*2^4.5 = 2896.3 -> k=5 from 2897,
+    128*2^5.5 = 5792.6 -> k=6 from 5793.  L stays 16 -- within the
+    96-plane budget for every reachable k."""
     k = 4 + sum(1 for t in PORTABLE_K_THRESHOLDS if n >= t)
     return k, 16
 
@@ -2160,11 +1791,12 @@ def adaptive_lsh_pairs_portable(
     threshold: float = 0.4,
     dim: int = 64,
 ) -> DataFrame:
-    """The portable LSH at the ADAPTIVE operating point -- the
-    oracle-checkable twin of ``adaptive_lsh_pairs``.  k from
-    ``adaptive_portable_kl`` (integer rule, replayed by the oracle from
-    count(*)), deterministic ``PORTABLE_ADAPTIVE_CAP`` bucket cap
-    (vid-ordered spanning chains, replayed by a SQL window).  The
+    """Embedding-LSH near-dup pairs at the ADAPTIVE operating point.
+    k from ``adaptive_portable_kl`` (integer rule, replayed by the
+    oracle from count(*)), deterministic ``PORTABLE_ADAPTIVE_CAP``
+    bucket cap (vid-ordered spanning chains, replayed by a SQL window:
+    mass-duplication blobs keep their connectivity while the self-join
+    stays linear).  The
     ``count()`` probe is metadata-only on parquet and both engines see
     the same n, so both pick the same plan."""
     n = emb.count()
@@ -2191,39 +1823,45 @@ def embedding_near_dupes_lsh_portable(
     dim: int = 64,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Engine-agnostic twin of embedding_near_dupes_lsh: random-
-    hyperplane buckets -> bucket self-join -> exact-cosine verify, with
-    the bucketing done in exact integer arithmetic (quantized vectors x
-    integer-quantized planes) so a DuckDB oracle can recompute the
-    ENTIRE algorithm -- candidate generation included -- and
-    hash-compare the result (the embedding analog of
-    minhash_near_dupes_portable).  Same plan shape as the float path:
-    slim (vid, bucket) explode, payload-free self-join, survivors-only
-    vector join.  Quantization moves each plane boundary by O(2^-10)
-    in angle -- a different (equally random) LSH family, not a recall
-    loss.  Use the float/adaptive path at scale; use this one to verify
-    the algorithm end-to-end.
+    """Embedding-cosine near-dup: random-hyperplane buckets -> bucket
+    self-join -> exact-cosine verify, with the bucketing done in exact
+    integer arithmetic (quantized vectors x integer-quantized planes)
+    so a DuckDB oracle can recompute the ENTIRE algorithm -- candidate
+    generation included -- and hash-compare the result (the embedding
+    analog of minhash_near_dupes_portable).  Quantization moves each
+    plane boundary by O(2^-10) in angle -- a different (equally
+    random) LSH family, not a recall loss.  ``adaptive_lsh_pairs_portable``
+    picks (k, L) and the bucket cap from the corpus size; call it at
+    scale.
+
+    ``n_tables`` is the OR-amplification knob: a pair at angle theta
+    collides in one table with p = (1 - theta/pi)^n_planes, and in at
+    least one of L tables with 1 - (1-p)^L; e.g. at cosine 0.4, 16
+    tables x 4 planes catch ~94% of true pairs.
 
     Buckets come from one exact int64 numpy matmul per Arrow batch
     (_int_hyperplane_buckets_arrow).  Candidates are scored through the
     ``_fold_dot`` kernel (_pair_verify_fold_portable /
     _bucket_allpairs_fold); round HALF_UP to 4 places and the threshold
     filter run in Spark.  A pair whose cosine is undefined -- a
-    zero-norm vector, or a NULL element -- never appears, as in the
-    oracle, where the NULL cosine fails the threshold."""
+    zero-norm vector, or a NULL element -- never appears.  The oracle
+    agrees on zero norms, not on NULL elements: DuckDB's
+    ``list_aggregate`` skips them, so it buckets and scores such a
+    vector over its other elements.  The fixtures hold no such
+    vector."""
     slim = _int_hyperplane_buckets_arrow(emb, id_col, vec_col, n_planes, n_tables, dim)
     if max_bucket_size is not None:
         # deterministic (vid-ordered) cap: the chain pairs are exact
         # SQL-window arithmetic, so the DuckDB oracle replays them
         # (sql_emb_lsh_adaptive_pair_ctes) -- capping does NOT cost
-        # oracle-checkability, unlike the float family's cap.
+        # oracle-checkability.
         slim, chain = _cap_buckets(slim, ["bucket"], "vid", max_bucket_size)
-        # Per-BUCKET grouped verify (r15 guide-§8 restructure, same as
-        # the float family): ship each vector once per (vid, bucket)
-        # row through ONE bucket exchange and form the C(g,2) pairs
-        # inside numpy, instead of joining two vectors onto every
-        # candidate pair (~64% of all pairs collide on the measured
-        # sf0.1 worst case).  Round HALF_UP + threshold stay in Spark.
+        # Per-BUCKET grouped verify (r15 guide-§8 restructure): ship
+        # each vector once per (vid, bucket) row through ONE bucket
+        # exchange and form the C(g,2) pairs inside numpy, instead of
+        # joining two vectors onto every candidate pair (~64% of all
+        # pairs collide on the measured sf0.1 worst case).  Round
+        # HALF_UP + threshold stay in Spark.
         # Cross-table multiplicity is deduped AFTER scoring on slim
         # (id, id, double) rows; duplicate rows are value-identical so
         # the result set is unchanged.  Gated on max_bucket_size: the

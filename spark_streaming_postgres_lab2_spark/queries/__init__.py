@@ -56,7 +56,8 @@ DRIVER_PRIORITY = [
     # src_stamps) -- the IVF-PQ Arrow restructure, the first-grain
     # overlap count + point-session grain tune, the repeated-subtree
     # cuts, the scale-gated LM cut, the asof bounds collect, and the
-    # bucketed offset-window near-dup (25x -> 2x payload).  A
+    # bucketed offset-window near-dup (25x -> 2x payload; it now also
+    # returns a NaN cosine as NaN, not NULL, as its oracle does).  A
     # changed implementation re-certifies in-window before anything
     # merely stale does (the quality_classifier_filter rule).
     "ann_ivfpq_adc_audit",
@@ -131,6 +132,8 @@ DRIVER_PRIORITY = [
     # now the portable pair verify) is the blame guard's name;
     # ngram_jaccard_pairs and near_dup_clusters share one builder with
     # their _fast twins, so their content stamps changed (plans equal).
+    # ngram_jaccard_pairs changed again when its xxhash64 twin was
+    # deleted: the md5 builder is now the query body (plan equal).
     "semantic_decontaminate",
     "ngram_jaccard_pairs",
     "near_dup_clusters",
@@ -139,6 +142,9 @@ DRIVER_PRIORITY = [
     # expression bucketer and verify, and its uncapped tail now scores
     # through _pair_verify_fold_portable.  These are the two queries
     # whose blame spans reach the edited lines (the blame guard's list).
+    # They reach the family's docstrings again after the float-plane
+    # embedding-LSH family was deleted (semantic_dedup's accounting
+    # docstring changed with it; plans equal).
     "embedding_lsh_near_dup_portable",
     "semantic_dedup",
 ]

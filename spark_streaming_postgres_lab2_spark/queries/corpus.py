@@ -511,9 +511,6 @@ def specs() -> list[QuerySpec]:
         QuerySpec("semantic_dedup", q_semantic_dedup, _semantic_dedup_oracle(),
                   "SemDeDup-style embedding dedup: LSH pairs -> CC -> "
                   "keep-one, kept id-set hash pinned"),
-        QuerySpec("semantic_dedup_fast", q_semantic_dedup_fast, None,
-                  "semantic dedup over the adaptive production LSH "
-                  "(scale flavor, rows-only)"),
         QuerySpec("incremental_dedup", q_incremental_dedup,
                   _incremental_dedup_oracle(),
                   "ingest-time exact+near dedup of a new batch against "
@@ -1010,11 +1007,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def semantic_dedup_accounting(emb: DataFrame, pairs: DataFrame) -> DataFrame:
-    """The dedup-decision half of semantic_dedup, over ANY near-dup
-    pair generator: connected components -> keep-one (minimum vec_id)
-    -> per-label kept/dropped counts + md5 over the kept id set.
-    q_semantic_dedup feeds it the oracle-checkable portable LSH;
-    q_semantic_dedup_fast feeds it the adaptive production LSH.
+    """The dedup-decision half of semantic_dedup, over its LSH pairs:
+    connected components -> keep-one (minimum vec_id) -> per-label
+    kept/dropped counts + md5 over the kept id set.
 
     r15 restructure (guide §2.4): previously this went through
     dedup_clusters (corpus LEFT JOIN components) and then joined the
@@ -1053,24 +1048,6 @@ def semantic_dedup_accounting(emb: DataFrame, pairs: DataFrame) -> DataFrame:
         )
         .orderBy("label")
     )
-
-
-def q_semantic_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale flavor of semantic_dedup (rows-only, the *_fast twin
-    pattern): the SAME accounting over pairs from the ADAPTIVE
-    production LSH -- k grows with corpus size so expected bucket
-    occupancy stays bounded, and max_bucket_size degrades degenerate
-    buckets to spanning chains (connectivity preserved for CC, the
-    self-join stays linear).  The fixed-(4,16) portable flavor is the
-    verifiability vehicle; on near-random corpora it goes quadratic in
-    candidates as n grows (measured 124 s at sf1 vs 6.5 s for this
-    flavor), exactly the incident the adaptive rule was built for
-    (see q_embedding_lsh_near_dup)."""
-    from ..functions.similarity import adaptive_lsh_pairs
-
-    t = load_tables(spark, sf_dir, ["embeddings"])
-    emb = t["embeddings"]
-    return semantic_dedup_accounting(emb, adaptive_lsh_pairs(emb, threshold=0.4))
 
 
 def _semantic_dedup_oracle() -> str:

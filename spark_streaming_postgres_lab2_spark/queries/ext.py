@@ -29,7 +29,6 @@ from ..functions.similarity import (
     _int_plane,
     cosine,
     cosine_topk,
-    embedding_near_dupes_lsh,
     embedding_near_dupes_lsh_portable,
     ivf_topk,
     jaccard_tokens,
@@ -451,9 +450,21 @@ __shd AS (
 _SQL_SHINGLES = sql_shingles()
 
 
-def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, hash_fn) -> DataFrame:
-    """Min-shingle-hash blocked token-Jaccard pairs, fingerprinting each
-    sampled shingle with ``hash_fn`` (``F.md5`` or ``F.xxhash64``)."""
+def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-set Jaccard near-dup with min-shingle-hash fingerprint
+    blocking: candidates = docs sharing the minimum md5 over a sampled
+    subset of their word 3-gram shingles (a 1-hash MinHash bucket --
+    collision probability for a pair tracks its shingle Jaccard, so
+    near-dups collide and unrelated docs don't).  One equi-join on the
+    fingerprint, bucket sizes bounded by true dup-cluster sizes -- a
+    real linear blocking strategy, unlike id-adjacency.  md5 keeps the
+    bucket key recomputable by the DuckDB oracle.
+
+    VERDICT r3 item 2: building the FULL shingle array was the measured
+    bottleneck (interpreted HOF, ~size(toks) strings/row; xxhash64 only
+    bought ~12%), so blocking now samples every 4th shingle position
+    (text.shingles_sampled) -- 4x fewer strings built/hashed per doc;
+    the verify stage (token Jaccard) is unchanged."""
     t = load_tables(spark, sf_dir, ["documents"])
     docs = (
         t["documents"]
@@ -461,7 +472,7 @@ def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, hash_fn) -> DataFrame
             "doc_id",
             TX.tokens("text").alias("__toks"),
             F.array_min(
-                F.transform(TX.shingles_sampled("text", 3, 4), lambda s: hash_fn(s))
+                F.transform(TX.shingles_sampled("text", 3, 4), lambda s: F.md5(s))
             ).alias("__fp"),
         )
         .filter(F.col("__fp").isNotNull())
@@ -490,35 +501,6 @@ def _ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, hash_fn) -> DataFrame
         .filter(F.col("jaccard") >= 0.2)
         .select("doc_id_1", "doc_id_2", "jaccard")
     )
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-set Jaccard near-dup with min-shingle-hash fingerprint
-    blocking: candidates = docs sharing the minimum md5 over a sampled
-    subset of their word 3-gram shingles (a 1-hash MinHash bucket --
-    collision probability for a pair tracks its shingle Jaccard, so
-    near-dups collide and unrelated docs don't).  One equi-join on the
-    fingerprint, bucket sizes bounded by true dup-cluster sizes -- a
-    real linear blocking strategy, unlike id-adjacency.  md5 keeps the
-    bucket key recomputable by the DuckDB oracle.
-
-    VERDICT r3 item 2: building the FULL shingle array was the measured
-    bottleneck (interpreted HOF, ~size(toks) strings/row; xxhash64 only
-    bought ~12%), so blocking now samples every 4th shingle position
-    (text.shingles_sampled) -- 4x fewer strings built/hashed per doc;
-    the verify stage (token Jaccard) is unchanged."""
-    return _ngram_jaccard_pairs(spark, sf_dir, F.md5)
-
-
-def q_ngram_jaccard_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """xxhash64 flavor of the min-shingle-hash blocking (same sampled
-    positions as the portable twin).  r3 measurement: swapping the hash
-    alone bought only ~12% -- the cost was the interpreted shingle-
-    array construction, fixed for both twins by every-4th-position
-    sampling; kept because at 100 TB the JVM-codegen hash also avoids
-    the md5 string allocation per shingle.  Rows-only (the algorithm is
-    oracle-verified via ngram_jaccard_pairs)."""
-    return _ngram_jaccard_pairs(spark, sf_dir, F.xxhash64)
 
 
 # Sampled-position shingles (text.shingles_sampled mirror): positions
@@ -1593,7 +1575,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     value.  Engine edges preserved: zero-denominator pairs score NULL
     in the expr form and are dropped by the threshold (numpy: den == 0
     dropped); a NaN element propagates NaN, which Spark's >= ranks
-    ABOVE the threshold (numpy: NaN with nonzero den kept); NULL /
+    ABOVE the threshold (numpy: NaN with nonzero den kept, as NaN); NULL /
     dim-mismatched vectors, and vectors with a NULL element, pair to
     NULL and drop (numpy: the ok mask and per-length grouping)."""
     import numpy as np
@@ -1661,12 +1643,17 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # den == 0 -> NULL in the expr form, dropped; NaN with
             # nonzero den -> Spark >= treats NaN as greater, kept
             keep = (den != 0.0) & (np.isnan(cos) | (rounded >= 0.25))
+            # nullable Float64 with an all-False mask: a plain float64
+            # column reaches Spark with its NaN turned into NULL
+            kept = rounded[keep]
             frames.append(
                 pd.DataFrame(
                     {
                         "vec_id_1": svid[i1[keep]],
                         "vec_id_2": svid[i2[keep]],
-                        "cosine_sim": rounded[keep],
+                        "cosine_sim": pd.arrays.FloatingArray(
+                            kept, mask=np.zeros(len(kept), dtype=bool)
+                        ),
                     }
                 )
             )
@@ -1699,27 +1686,20 @@ def q_embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR-amplified multi-table LSH (one 8-plane table caught ~0 of the
     58 true pairs at sf0.01 -- VERDICT r2 weak-evidence item).  Recall
     vs the exact pairwise truth is pinned in
-    tests/test_text_similarity.py (>=0.75 at sf0.01; measured 0.92).
+    tests/test_text_similarity.py.
 
-    Parameters adapt to corpus size -- the fixed-(k,L) version went
-    quadratic on /tmp/sf1 (313 s: 20k vectors over 16 buckets/table,
-    x10 exact copies of every embedding concentrating the buckets):
-    n_planes = clamp(round(log2(n/128)), 4..6) keeps expected bucket size
-    bounded as n grows (96 planes cap k*L), and max_bucket_size=200
-    degrades mass-duplication blobs to spanning chains (connectivity
-    preserved, quadratic self-join avoided -- the same policy as the
-    capped MinHash family, SCALING.md r2 incident).  Static dim=64
-    (TESTDATA.md embedding shape) truncates plane literals at
-    plan-build time.  The count() probe is metadata-only on parquet."""
-    from ..functions.similarity import adaptive_lsh_pairs
+    Parameters adapt to corpus size (similarity.adaptive_portable_kl)
+    -- the fixed-(k,L) version went quadratic on /tmp/sf1 (313 s: 20k
+    vectors over 16 buckets/table, x10 exact copies of every embedding
+    concentrating the buckets) -- and the bucket cap degrades
+    mass-duplication blobs to spanning chains (connectivity preserved,
+    quadratic self-join avoided -- the same policy as the capped
+    MinHash family, SCALING.md r2 incident).  The count() probe is
+    metadata-only on parquet."""
+    from ..functions.similarity import adaptive_lsh_pairs_portable
 
     t = load_tables(spark, sf_dir, ["embeddings"])
-    # parameter rule + rationale live in similarity.adaptive_lsh_pairs
-    # (shared with q_semantic_dedup_fast).  r4: bucket projection is
-    # one numpy matmul per Arrow batch (bucket_impl='arrow' default):
-    # 16.3 s -> ~6 s at sf0.1; the remainder is candidate dedup + the
-    # survivors-only verify join.
-    return adaptive_lsh_pairs(t["embeddings"], threshold=0.4).orderBy(
+    return adaptive_lsh_pairs_portable(t["embeddings"], threshold=0.4).orderBy(
         "vec_id_1", "vec_id_2"
     )
 
@@ -3227,8 +3207,9 @@ def specs() -> list[QuerySpec]:
         QuerySpec("embedding_near_dup", q_embedding_near_dup, ORACLE_EMBEDDING_NEAR_DUP,
                   "embedding-cosine near-dup, bounded candidates"),
         QuerySpec("embedding_lsh_near_dup", q_embedding_lsh_near_dup, None,
-                  "random-hyperplane LSH near-dup (adaptive scale flavor; "
-                  "algorithm oracle-verified via the _portable twin)"),
+                  "int-quantized hyperplane LSH near-dup at the adaptive "
+                  "operating point (rows-only; the family is oracle-checked "
+                  "via embedding_lsh_near_dup_portable and semantic_dedup)"),
         QuerySpec("embedding_lsh_near_dup_portable", q_embedding_lsh_near_dup_portable,
                   ORACLE_EMB_LSH_PORTABLE,
                   "int-quantized hyperplane LSH, full algorithm oracle-recomputed"),
@@ -3256,8 +3237,6 @@ def specs() -> list[QuerySpec]:
         QuerySpec("multimodal_frames", q_multimodal_frames,
                   ORACLE_MULTIMODAL_FRAMES,
                   "byte-stride frame sampling over real BMPs, layout oracle"),
-        QuerySpec("ngram_jaccard_pairs_fast", q_ngram_jaccard_pairs_fast, None,
-                  "xxhash64 min-shingle blocking (scale flavor; rows-only)"),
         QuerySpec("multimodal_resize_real", q_multimodal_resize_real,
                   ORACLE_MULTIMODAL_RESIZE,
                   "real NN-downsample over the BMP codec, "

@@ -168,21 +168,6 @@ def test_semantic_dedup_accounting_invariants(spark, sf_dir):
     assert {r.label: r.kept_ids_hash for r in rows} == again
 
 
-def test_semantic_dedup_fast_invariants(spark, sf_dir):
-    """The adaptive-LSH scale twin obeys the same accounting algebra as
-    the portable flavor and actually drops duplicates on the fixtures."""
-    from spark_streaming_postgres_lab2_spark.queries.corpus import (
-        q_semantic_dedup_fast,
-    )
-    from spark_streaming_postgres_lab2_spark.sources.tables import load_tables
-
-    rows = q_semantic_dedup_fast(spark, sf_dir).collect()
-    n_emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"].count()
-    assert all(r.kept_vecs + r.dropped_vecs == r.n_vecs for r in rows)
-    assert sum(r.n_vecs for r in rows) == n_emb
-    assert sum(r.dropped_vecs for r in rows) > 0
-
-
 def test_training_mix_upsample_rates(spark, sf_dir):
     """Whole-rate languages replicate exactly; fractional rates land
     within 5 binomial standard deviations of the target; unknown

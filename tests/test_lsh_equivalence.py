@@ -94,20 +94,16 @@ def test_simhash_fast_equals_portable(spark):
 
 
 def test_ngram_fast_equals_portable_on_planted_exact_dups(spark):
-    """VERDICT r12 item 5: pin ngram_jaccard_pairs_fast (xxhash64
-    min-shingle blocking, rows-only) to its oracled portable twin.
-    EXACT-copy planting makes the blocking deterministic for BOTH hash
-    families: identical texts share the whole sampled-shingle set, so
-    their min-hash fingerprints collide under ANY hash function, while
-    disjoint-3-gram noise shares no shingle string (a min-fp collision
-    would need a raw 128/64-bit hash collision) and the token-Jaccard
-    verify (< 0.2) rejects anything that slipped.  Both twins must
-    emit the IDENTICAL verified pair set, every pair at jaccard 1.0."""
+    """Pin ngram_jaccard_pairs (md5 min-shingle blocking) on planted
+    EXACT copies.  Exact-copy planting makes the blocking
+    deterministic: identical texts share the whole sampled-shingle set,
+    so their min-hash fingerprints collide, while disjoint-3-gram noise
+    shares no shingle string (a min-fp collision would need a raw
+    128-bit hash collision) and the token-Jaccard verify (< 0.2)
+    rejects anything that slipped.  The query must emit exactly the
+    planted pair set, every pair at jaccard 1.0."""
     import spark_streaming_postgres_lab2_spark.queries.ext as ext
-    from spark_streaming_postgres_lab2_spark.queries.ext import (
-        q_ngram_jaccard_pairs,
-        q_ngram_jaccard_pairs_fast,
-    )
+    from spark_streaming_postgres_lab2_spark.queries.ext import q_ngram_jaccard_pairs
 
     rng = random.Random(99)
     vocab = [f"w{i:04d}" for i in range(5000)]
@@ -126,21 +122,14 @@ def test_ngram_fast_equals_portable_on_planted_exact_dups(spark):
     orig = ext.load_tables
     try:
         ext.load_tables = lambda _s, _d, _t: {"documents": docs}
-        fast = {(r.doc_id_1, r.doc_id_2): r.jaccard
-                for r in q_ngram_jaccard_pairs_fast(spark, "u").collect()}
-        portable = {(r.doc_id_1, r.doc_id_2): r.jaccard
-                    for r in q_ngram_jaccard_pairs(spark, "u").collect()}
+        got = {(r.doc_id_1, r.doc_id_2): r.jaccard
+               for r in q_ngram_jaccard_pairs(spark, "u").collect()}
     finally:
         ext.load_tables = orig
-    assert set(fast) == expected, (
-        f"fast missing: {expected - set(fast)} extra: {set(fast) - expected}"
+    assert set(got) == expected, (
+        f"missing: {expected - set(got)} extra: {set(got) - expected}"
     )
-    assert fast == portable, (
-        f"fast-only: {sorted(set(fast) - set(portable))[:5]} "
-        f"portable-only: {sorted(set(portable) - set(fast))[:5]}"
-    )
-    assert all(j == 1.0 for j in fast.values())
-
+    assert all(j == 1.0 for j in got.values())
 
 def test_simhash_signature_partition_fast_equals_portable(spark):
     """VERDICT r12 item 5: pin q_simhash (the signature-only rows-only

@@ -344,7 +344,7 @@ def test_embedding_lsh_recall_vs_exact(spark):
     import pandas as pd
 
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
-        embedding_near_dupes_lsh,
+        embedding_near_dupes_lsh_portable,
     )
 
     pdf = pd.read_parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -361,7 +361,7 @@ def test_embedding_lsh_recall_vs_exact(spark):
     assert truth, "fixture must contain at least one cosine>=0.4 pair"
 
     emb = load_tables(spark, "/root/testdata/sf0.01", ["embeddings"])["embeddings"]
-    out = embedding_near_dupes_lsh(
+    out = embedding_near_dupes_lsh_portable(
         emb, threshold=0.4, n_planes=4, n_tables=16
     ).collect()
     got = {(r.vec_id_1, r.vec_id_2) for r in out}
@@ -377,7 +377,7 @@ def test_embedding_lsh_finds_planted_near_dups(spark):
     import random
 
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
-        embedding_near_dupes_lsh,
+        embedding_near_dupes_lsh_portable,
     )
 
     rng = random.Random(7)
@@ -391,42 +391,12 @@ def test_embedding_lsh_finds_planted_near_dups(spark):
     for j in range(100, 120):
         rows.append((j, [rng.gauss(0.0, 1.0) for _ in range(32)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = embedding_near_dupes_lsh(
-        emb, threshold=0.9, n_planes=4, n_tables=16
+    out = embedding_near_dupes_lsh_portable(
+        emb, threshold=0.9, n_planes=4, n_tables=16, dim=32
     ).collect()
     got = {(r.vec_id_1, r.vec_id_2) for r in out}
     expected = {(b * 10, b * 10 + 1) for b in range(5)}
     assert expected <= got, f"missed planted pairs: {expected - got}"
-
-
-def test_arrow_buckets_mixed_dims_and_nulls(spark):
-    """The float-family bucketer's input contract: dim=None accepts
-    mixed dims (per-row plane truncation),
-    NULL embeddings raise a descriptive error, and a static-dim
-    mismatch names the offending dims."""
-    import pytest
-
-    from spark_streaming_postgres_lab2_spark.functions.similarity import (
-        _hyperplane_buckets_arrow,
-    )
-
-    mixed = spark.createDataFrame(
-        [(1, [1.0] * 8), (2, [1.0] * 16), (3, [-1.0] * 8)],
-        "vec_id long, embedding array<double>",
-    )
-    out = _hyperplane_buckets_arrow(mixed, "vec_id", "embedding", 4, 2, None)
-    rows = out.collect()
-    assert len(rows) == 3 * 2  # every row bucketed in both tables
-    assert {r.vid for r in rows} == {1, 2, 3}
-
-    withnull = spark.createDataFrame(
-        [(1, [1.0] * 8), (2, None)], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="NULL embedding"):
-        _hyperplane_buckets_arrow(withnull, "vec_id", "embedding", 4, 2, None).collect()
-
-    with pytest.raises(Exception, match="static dim"):
-        _hyperplane_buckets_arrow(mixed, "vec_id", "embedding", 4, 2, 8).collect()
 
 
 def test_portable_lsh_queries_match_oracle_rows(spark, sf_dir):
@@ -456,7 +426,8 @@ def test_portable_lsh_queries_match_oracle_rows(spark, sf_dir):
 
 def test_int_bucketer_rejects_bad_dims(spark):
     """The portable bucketer enforces the family's static-dim contract:
-    mismatched dims raise naming the offending sizes."""
+    mismatched dims raise naming the offending sizes, and a NULL
+    embedding raises naming its id."""
     import pytest
 
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
@@ -469,9 +440,17 @@ def test_int_bucketer_rejects_bad_dims(spark):
     with pytest.raises(Exception, match="static dim"):
         _int_hyperplane_buckets_arrow(bad, "vec_id", "embedding", 4, 16, 64).collect()
 
+    withnull = spark.createDataFrame(
+        [(1, [1.0] * 64), (2, None)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match=r"NULL embedding .*\[2\]"):
+        _int_hyperplane_buckets_arrow(
+            withnull, "vec_id", "embedding", 4, 16, 64
+        ).collect()
+
 
 def test_lsh_verify_drops_undefined_cosines(spark, tmp_path):
-    """A pair whose cosine is undefined never appears, in either LSH
+    """A pair whose cosine is undefined never appears in the LSH
     family, capped or not, nor in the windowed embedding_near_dup
     query: two all-zero vectors share every bucket (all sign bits set)
     but have a zero norm, and a vector with a NULL element has no
@@ -479,7 +458,6 @@ def test_lsh_verify_drops_undefined_cosines(spark, tmp_path):
     NaN above every double, so an unguarded NaN would pass the
     threshold filter."""
     from spark_streaming_postgres_lab2_spark.functions.similarity import (
-        embedding_near_dupes_lsh,
         embedding_near_dupes_lsh_portable,
     )
     from spark_streaming_postgres_lab2_spark.queries.ext import q_embedding_near_dup
@@ -496,14 +474,10 @@ def test_lsh_verify_drops_undefined_cosines(spark, tmp_path):
     )
     emb.write.parquet(str(tmp_path / "embeddings.parquet"))
     outs = [q_embedding_near_dup(spark, str(tmp_path))]
-    for cap in (None, 2):
-        outs += [
-            embedding_near_dupes_lsh(
-                emb, threshold=0.4, n_planes=4, n_tables=16, dim=64,
-                max_bucket_size=cap,
-            ),
-            embedding_near_dupes_lsh_portable(emb, max_bucket_size=cap),
-        ]
+    outs += [
+        embedding_near_dupes_lsh_portable(emb, max_bucket_size=cap)
+        for cap in (None, 2)
+    ]
     for out in outs:
         rows = out.collect()
         assert all(
@@ -513,6 +487,42 @@ def test_lsh_verify_drops_undefined_cosines(spark, tmp_path):
         assert (4, 5) not in pairs  # zero-norm pair
         assert (1, 2) not in pairs and (2, 3) not in pairs  # NULL element
         assert (1, 3) in pairs  # the true duplicate
+
+
+def test_embedding_near_dup_emits_nan_cosine_like_the_oracle(spark, sf_dir, tmp_path):
+    """A NaN element propagates NaN in both engines, and Spark's >=
+    ranks NaN above the threshold, so embedding_near_dup keeps the pair
+    -- with cosine_sim NaN, as the DuckDB oracle reports it, not NULL."""
+    import os
+    import sys
+
+    import duckdb
+
+    from spark_streaming_postgres_lab2_spark.queries.ext import (
+        ORACLE_EMBEDDING_NEAR_DUP,
+        q_embedding_near_dup,
+    )
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from parity_check import FIXTURE_TABLES, canon, register_fixture_views
+
+    spark.createDataFrame(
+        [(1, [0.5] * 63 + [float("nan")]), (2, [0.5] * 64), (3, [0.5] * 64)],
+        "vec_id long, embedding array<double>",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    for t in FIXTURE_TABLES:
+        if t != "embeddings":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    con = duckdb.connect()
+    register_fixture_views(con, str(tmp_path))
+    want = con.sql(ORACLE_EMBEDDING_NEAR_DUP)
+    cols = want.columns
+    out = q_embedding_near_dup(spark, str(tmp_path))
+    assert out.columns == cols
+    got = out.collect()
+    # canon renders NaN as 'nan' and NULL as 'NULL', so NaN == NaN here
+    assert canon(got, cols) == canon(want.fetchall(), cols)
+    assert {(r.vec_id_1, r.vec_id_2) for r in got} == {(1, 2), (1, 3), (2, 3)}
 
 
 def test_fold_kernel_is_a_left_to_right_fold_in_every_form():
