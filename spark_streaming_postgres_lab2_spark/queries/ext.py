@@ -27,6 +27,7 @@ from ..functions.similarity import (
     PORTABLE_ADAPTIVE_CAP,
     PORTABLE_K_THRESHOLDS,
     _int_plane,
+    adaptive_lsh_pairs_portable,
     cosine,
     cosine_topk,
     embedding_near_dupes_lsh_portable,
@@ -1696,8 +1697,6 @@ def q_embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic self-join avoided -- the same policy as the capped
     MinHash family, SCALING.md r2 incident).  The count() probe is
     metadata-only on parquet."""
-    from ..functions.similarity import adaptive_lsh_pairs_portable
-
     t = load_tables(spark, sf_dir, ["embeddings"])
     return adaptive_lsh_pairs_portable(t["embeddings"], threshold=0.4).orderBy(
         "vec_id_1", "vec_id_2"

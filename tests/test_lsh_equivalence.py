@@ -131,6 +131,7 @@ def test_ngram_fast_equals_portable_on_planted_exact_dups(spark):
     )
     assert all(j == 1.0 for j in got.values())
 
+
 def test_simhash_signature_partition_fast_equals_portable(spark):
     """VERDICT r12 item 5: pin q_simhash (the signature-only rows-only
     query, backed by xxhash64 ``simhash64``) to the oracled family's
