@@ -13,11 +13,12 @@ Design notes for 100 TB:
   float implementation is non-deterministic across engines AND across
   runs (the per-vertex sum of contributions is float addition, whose
   result depends on partial-aggregation order).  Here ranks are
-  BIGINT micro-units (``scale`` = 1e12 total mass) and every step is
+  BIGINT micro-units (``PAGERANK_SCALE`` = 1e12 total mass) and every step is
   integer division / multiplication / sum -- order-independent, so a
   DuckDB oracle can replay the algorithm bit-for-bit, and two cluster
   runs of different parallelism agree exactly.  Overflow headroom:
-  total mass <= scale, so ``damping_num * sum`` <= 85e12 << 2^63.
+  total mass <= PAGERANK_SCALE, so ``PAGERANK_DAMPING_NUM * sum``
+  <= 85e12 << 2^63.
 - **Per-round cost is one join + one groupBy**, both hash-partitioned
   on the vertex id; the static edge side is joined once with its
   out-degree and cached, so each round shuffles only the slim
@@ -38,31 +39,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PAGERANK_SCALE = 1_000_000_000_000  # total rank mass, in integer units
+# damping factor 0.85 as an exact integer ratio; queries/graph's DuckDB
+# oracle replays the recurrence from these same constants
+PAGERANK_DAMPING_NUM = 85
+PAGERANK_DAMPING_DEN = 100
 
 
 def pagerank_fixed_point(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 5,
-    scale: int = PAGERANK_SCALE,
-    damping_num: int = 85,
-    damping_den: int = 100,
+    nodes: DataFrame, edges: DataFrame, iters: int = 5
 ) -> DataFrame:
-    """Exact integer-arithmetic PageRank.
+    """Exact integer-arithmetic PageRank over (id) nodes and (src, dst)
+    edges, with D = PAGERANK_DAMPING_NUM / PAGERANK_DAMPING_DEN:
 
-    rank_0(v)   = scale DIV n
+    rank_0(v)   = PAGERANK_SCALE DIV n
     contrib(u)  = rank(u) DIV outdeg(u)          (per out-edge)
-    rank_k+1(v) = ((damping_den - damping_num) * (scale DIV n)) DIV damping_den
-                  + (damping_num * SUM contrib(u->v)) DIV damping_den
+    rank_k+1(v) = ((DEN - NUM) * (PAGERANK_SCALE DIV n)) DIV DEN
+                  + (NUM * SUM contrib(u->v)) DIV DEN
 
     Every operation is BIGINT, so the result is independent of
     aggregation order and engine.  Dangling vertices (outdeg 0) leak
     their damped mass -- the standard simplification; both the Spark
     path and any SQL oracle replaying these recurrences agree exactly.
-    Returns (id, rank_fp) for every node, rank_fp in ``scale`` units.
+    Returns (id, rank_fp) for every node, rank_fp in PAGERANK_SCALE
+    units.
     """
     # r16 (guide §2.4): n is ONE bounded scalar -- counting it once and
     # folding it into the integer recurrence as a literal removes the
@@ -74,22 +73,26 @@ def pagerank_fixed_point(
     n = int(nodes.count())
     if n == 0:
         return nodes.select(
-            F.col(id_col).alias(id_col),
+            F.col("id").alias("id"),
             F.lit(0).cast("bigint").alias("rank_fp"),
         )
-    base = scale // n  # rank_0 and the teleport base, exact BIGINT
-    teleport = ((damping_den - damping_num) * base) // damping_den
+    base = PAGERANK_SCALE // n  # rank_0 and the teleport base, exact BIGINT
+    teleport = (
+        (PAGERANK_DAMPING_DEN - PAGERANK_DAMPING_NUM) * base
+    ) // PAGERANK_DAMPING_DEN
 
     # static edge side: out-degree joined once, reused every round
-    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).cast("bigint").alias("__outdeg"))
+    outdeg = edges.groupBy("src").agg(
+        F.count(F.lit(1)).cast("bigint").alias("__outdeg")
+    )
     esrc = (
-        edges.join(outdeg, src)
-        .select(F.col(src).alias("__src"), F.col(dst).alias("__dst"), "__outdeg")
+        edges.join(outdeg, "src")
+        .select(F.col("src").alias("__src"), F.col("dst").alias("__dst"), "__outdeg")
         .localCheckpoint(eager=False)
     )
 
     ranks = nodes.select(
-        F.col(id_col).alias("__id"),
+        F.col("id").alias("__id"),
         F.lit(base).cast("bigint").alias("__rank"),
     )
 
@@ -101,14 +104,14 @@ def pagerank_fixed_point(
             .agg(F.sum("__c").alias("__s"))
         )
         ranks = (
-            nodes.join(summed, F.col(id_col) == F.col("__dst"), "left")
+            nodes.join(summed, F.col("id") == F.col("__dst"), "left")
             .select(
-                F.col(id_col).alias("__id"),
+                F.col("id").alias("__id"),
                 (
                     F.lit(teleport).cast("bigint")
                     + F.expr(
-                        f"({damping_num} * coalesce(__s, CAST(0 AS BIGINT)))"
-                        f" div {damping_den}"
+                        f"({PAGERANK_DAMPING_NUM} * coalesce(__s, CAST(0 AS BIGINT)))"
+                        f" div {PAGERANK_DAMPING_DEN}"
                     )
                 ).cast("bigint").alias("__rank"),
             )
@@ -120,7 +123,7 @@ def pagerank_fixed_point(
         if it < iters - 1:
             ranks = ranks.localCheckpoint(eager=False)
 
-    return ranks.select(F.col("__id").alias(id_col), F.col("__rank").alias("rank_fp"))
+    return ranks.select(F.col("__id").alias("id"), F.col("__rank").alias("rank_fp"))
 
 
 def bfs_hops(
@@ -128,24 +131,21 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     depth: int,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """Multi-source BFS shortest-hop labels over a DIRECTED edge list,
-    bounded at ``depth``.  Returns (id, hop) for EVERY node: hop 0 for
-    seeds, k for first reach at round k, -1 for nodes unreached within
-    the bound.
+    """Multi-source BFS shortest-hop labels over a DIRECTED (src, dst)
+    edge list from (id) seeds, bounded at ``depth``.  Returns (id, hop)
+    for EVERY node: hop 0 for seeds, k for first reach at round k, -1
+    for nodes unreached within the bound.
 
     Per round: one hash join frontier->edges (slim id stream), a
     distinct, and a left-anti join against the visited set; lineage is
     cut per round (the pagerank localCheckpoint discipline), so the
     plan stays a fixed ``depth``-stage pipeline at any data size.
     Frontiers are vertex-bounded -- paths are never enumerated."""
-    e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
+    e = edges.select(F.col("src").alias("__src"), F.col("dst").alias("__dst"))
     e = e.localCheckpoint(eager=False)
     visited = seeds.select(
-        F.col(id_col).alias("__id"), F.lit(0).cast("int").alias("hop")
+        F.col("id").alias("__id"), F.lit(0).cast("int").alias("hop")
     )
     frontier = visited.select("__id")
     for k in range(1, depth + 1):
@@ -169,19 +169,18 @@ def bfs_hops(
         visited = visited.unionByName(new)
         frontier = new.select("__id")
     return (
-        nodes.select(F.col(id_col).alias("__n_id"))
+        nodes.select(F.col("id").alias("__n_id"))
         .join(visited, F.col("__n_id") == F.col("__id"), "left")
         .select(
-            F.col("__n_id").alias(id_col),
+            F.col("__n_id").alias("id"),
             F.coalesce("hop", F.lit(-1)).cast("int").alias("hop"),
         )
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-vertex triangle counts over an UNDIRECTED simple graph.
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Per-vertex triangle counts over an UNDIRECTED simple (src, dst)
+    graph.
 
     Input may contain self-loops and duplicate / reversed duplicates;
     they are canonicalized away first.  Orientation: keep each edge as
@@ -196,8 +195,8 @@ def triangle_count(
     # times per orientation (r16, guide §2.4).  Slim (a, b) rows only.
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()

@@ -56,22 +56,23 @@ FEATURE_SCHEMA = (
 )
 
 
-def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Deterministic fake media table from documents: UTF-8 bytes of the
-    text as the opaque payload + typed metadata.  Stands in for an
-    image/audio corpus so the downstream plumbing is real and testable."""
-    content = F.encode(F.col(text_col), "UTF-8")
+def synthesize_media(docs: DataFrame) -> DataFrame:
+    """Deterministic fake media table from (doc_id, text) documents:
+    UTF-8 bytes of the text as the opaque payload + typed metadata.
+    Stands in for an image/audio corpus so the downstream plumbing is
+    real and testable."""
+    content = F.encode(F.col("text"), "UTF-8")
     return docs.select(
-        F.col(id_col).alias("media_id"),
-        (F.when(F.col(id_col) % 3 == 0, "image")
-         .when(F.col(id_col) % 3 == 1, "audio")
+        F.col("doc_id").alias("media_id"),
+        (F.when(F.col("doc_id") % 3 == 0, "image")
+         .when(F.col("doc_id") % 3 == 1, "audio")
          .otherwise("video")).alias("media_type"),
         content.alias("content"),
         F.struct(
             F.lit("raw").alias("format"),
             F.lit(64).alias("width"),
             F.lit(64).alias("height"),
-            F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
+            F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
         ).alias("meta"),
     )
 
@@ -206,8 +207,8 @@ def decode_real(media: DataFrame, codec: str = "bmp") -> DataFrame:
     return media.mapInPandas(_decode, schema=DECODE_SCHEMA)
 
 
-def synthesize_bmp_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic genuine BMP files keyed on the id column:
+def synthesize_bmp_media(ids: DataFrame) -> DataFrame:
+    """Deterministic genuine BMP files keyed on the doc_id column:
     width = 4 + id%5, height = 3 + id%4, pixel(x,y,c) =
     (id*31 + y*17 + x*7 + c) % 256.  The formula is arithmetic on the
     id, so a DuckDB oracle can recompute width/height/mean without a
@@ -216,49 +217,15 @@ def synthesize_bmp_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
-            for i in pdf[id_col]:
+            for i in pdf["doc_id"]:
                 i = int(i)
                 w, h = 4 + i % 5, 3 + i % 4
                 payloads.append(
                     encode_bmp24(w, h, lambda x, y, c, i=i: (i * 31 + y * 17 + x * 7 + c) % 256)
                 )
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": payloads})
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "content": payloads})
 
     return ids.mapInPandas(_encode, schema="media_id long, content binary")
-
-
-def resize_stub(media: DataFrame, target_bytes: int = 256) -> DataFrame:
-    """'Resize' stand-in: deterministic byte-level down/up-sampling of
-    the payload to ``target_bytes`` (stride sampling, zero padding).
-    A real implementation would decode -> PIL.resize -> re-encode inside
-    the same mapInPandas body; the Spark-side contract (binary in,
-    binary out, metadata updated) is identical."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def shrink(b: bytes | None) -> bytes | None:
-                if b is None:
-                    return None  # missing media stays missing
-                if not b:
-                    return b"\x00" * target_bytes
-                if len(b) >= target_bytes:
-                    stride = len(b) / target_bytes
-                    return bytes(b[int(i * stride)] for i in range(target_bytes))
-                return b + b"\x00" * (target_bytes - len(b))
-
-            resized = pdf["content"].map(shrink)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "content": resized,
-                    "n_bytes": resized.map(lambda b: len(b) if b is not None else None),
-                }
-            )
-
-    return media.mapInPandas(
-        _resize, schema="media_id long, media_type string, content binary, n_bytes long"
-    )
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -382,14 +349,14 @@ def _wav_sample(media_id: int, i: int) -> int:
     return (media_id * 131 + i * 37) % 2048 - 1024
 
 
-def synthesize_wav_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_wav_media(ids: DataFrame) -> DataFrame:
     """(media_id, payload) with genuine WAV bytes per id."""
     import pandas as pd
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"media_id": [], "payload": []}
-            for mid in pdf[id_col]:
+            for mid in pdf["doc_id"]:
                 mid = int(mid)
                 rate, n = _wav_params(mid)
                 out["media_id"].append(mid)
@@ -601,7 +568,7 @@ def decode_png_gray8(b: bytes) -> "tuple[int, int, bytes] | None":
     return width, height, bytes(out)
 
 
-def synthesize_png_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_png_media(ids: DataFrame) -> DataFrame:
     """(media_id, payload) with genuine PNG bytes: width = 4 + id%5,
     height = 3 + id%4, pixel(x, y) = (id*53 + y*19 + x*11) % 256 --
     arithmetic on the id, so SQL oracles recompute decoded stats."""
@@ -609,7 +576,7 @@ def synthesize_png_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"media_id": [], "payload": []}
-            for mid in pdf[id_col]:
+            for mid in pdf["doc_id"]:
                 mid = int(mid)
                 w, h = 4 + mid % 5, 3 + mid % 4
                 out["media_id"].append(mid)
@@ -692,7 +659,7 @@ def decode_video(b: bytes) -> "list[bytes] | None":
     return frames
 
 
-def synthesize_video_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synthesize_video_media(ids: DataFrame) -> DataFrame:
     """(media_id, payload) with a genuine VID0 container of BMP frames:
     n_frames = 3 + id%4, frame dims w = 4 + id%3 / h = 3 + id%3,
     pixel(x, y, c) of frame f = (id*31 + f*101 + y*17 + x*7 + c) % 256."""
@@ -700,7 +667,7 @@ def synthesize_video_media(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"media_id": [], "payload": []}
-            for mid in pdf[id_col]:
+            for mid in pdf["doc_id"]:
                 mid = int(mid)
                 n_frames = 3 + mid % 4
                 w, h = 4 + mid % 3, 3 + mid % 3

@@ -19,10 +19,11 @@ from pyspark.sql import functions as F
 SESSION_GAP_US = 1_800_000_000  # 30 minutes, in microseconds
 
 
-def with_session_ids(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
+def with_session_ids(events: DataFrame) -> DataFrame:
     """Add ``__new`` (1 at each session start) and ``__sid`` (per-user
     session ordinal) to an events frame with ``user_id``, ``ts``,
-    ``event_id`` columns.  One window pass partitioned by user --
+    ``event_id`` columns; a gap over ``SESSION_GAP_US`` starts a new
+    session.  One window pass partitioned by user --
     partition size is bounded by per-user activity, never corpus
     size."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -30,7 +31,7 @@ def with_session_ids(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFra
         "__new",
         F.when(
             F.lag("ts").over(w).isNull()
-            | (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)) > gap_us),
+            | (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)) > SESSION_GAP_US),
             1,
         ).otherwise(0),
     )

@@ -109,8 +109,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast the query set, score every
     corpus vector once, keep k per query with a deterministic
@@ -129,7 +127,9 @@ def cosine_topk(
     # limit(N+1) so a corpus-sized query frame fails loudly instead of
     # OOMing the driver.
     q_rows = (
-        queries.select(id_col, vec_col).limit(COSINE_TOPK_MAX_QUERIES + 1).collect()
+        queries.select("vec_id", "embedding")
+        .limit(COSINE_TOPK_MAX_QUERIES + 1)
+        .collect()
     )
     if len(q_rows) > COSINE_TOPK_MAX_QUERIES:
         raise ValueError(
@@ -168,8 +168,8 @@ def cosine_topk(
         for pdf in batches:
             if len(pdf) == 0 or m == 0:
                 continue
-            vecs = pdf[vec_col].to_numpy()
-            ids = pdf[id_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             lens = np.array([-1 if v is None else len(v) for v in vecs])
             n = len(pdf)
             cos = np.full((n, m), np.nan)
@@ -196,27 +196,27 @@ def cosine_topk(
             yield pd.DataFrame(
                 {
                     "query_id": np.tile(np.asarray(qids), n),
-                    id_col: np.repeat(ids, m),
+                    "vec_id": np.repeat(ids, m),
                     "__cos": col,
                 }
             )
 
     # id field types derived from the input schemas (ADVICE r15: they
     # were hardcoded long, silently mis-typing non-long id columns)
-    corpus_id_t = corpus.schema[id_col].dataType.simpleString()
-    query_id_t = queries.schema[id_col].dataType.simpleString()
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        _score, f"query_id {query_id_t}, {id_col} {corpus_id_t}, __cos double"
-    ).filter(F.col(id_col) != F.col("query_id"))
+    corpus_id_t = corpus.schema["vec_id"].dataType.simpleString()
+    query_id_t = queries.schema["vec_id"].dataType.simpleString()
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
+        _score, f"query_id {query_id_t}, vec_id {corpus_id_t}, __cos double"
+    ).filter(F.col("vec_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
+        F.col("__cos").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(F.col("__cos"), 4).alias("cosine_sim"),
             "rank",
         )
@@ -226,15 +226,13 @@ def cosine_topk(
 # --- IVF-style approximate nearest neighbour --------------------------------
 
 
-def ivf_centroids(
-    corpus: DataFrame, cluster_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
+def ivf_centroids(corpus: DataFrame, cluster_col: str = "label") -> DataFrame:
     """Coarse centroids: element-wise mean per cluster.  Implemented as
     explode -> (cluster, position) avg -> re-assemble; shuffles once on
     (cluster, pos)."""
     exploded = corpus.select(
         F.col(cluster_col).alias("cluster"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.posexplode(F.col("embedding")).alias("pos", "val"),
     )
     return (
         exploded.groupBy("cluster", "pos")
@@ -255,8 +253,6 @@ def ivf_centroids(
 def _kmeans_assign_literal(
     corpus: DataFrame,
     cents_rows: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Max-cosine centroid assignment with the k centroids embedded as
     LITERALS: the per-vector argmax becomes array_max over a row-local
@@ -301,7 +297,7 @@ def _kmeans_assign_literal(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = pdf[vec_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
             ok = np.array(
                 [v is not None and len(v) == dim for v in vecs], dtype=bool
             )
@@ -346,8 +342,6 @@ def kmeans_lite(
     corpus: DataFrame,
     k: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic Lloyd iterations for IVF coarse quantization.
 
@@ -367,8 +361,8 @@ def kmeans_lite(
     n_cand = max(8 * k, 32)
     cand_rows = (
         corpus.select(
-            F.xxhash64(F.col(id_col).cast("string")).alias("__seed_h"),
-            F.col(vec_col).alias("__v"),
+            F.xxhash64(F.col("vec_id").cast("string")).alias("__seed_h"),
+            F.col("embedding").alias("__v"),
         )
         .orderBy("__seed_h")
         .limit(n_cand)
@@ -399,15 +393,15 @@ def kmeans_lite(
     # raw corpus as a pure projection: the Lloyd loop now plans with
     # ZERO exchanges on the corpus side.
     cents_rows = [(i, [float(x) for x in vecs[c]]) for i, c in enumerate(chosen)]
-    assigned = _kmeans_assign_literal(corpus, cents_rows, id_col, vec_col)
+    assigned = _kmeans_assign_literal(corpus, cents_rows)
     for _ in range(iters - 1):
         cents_rows = [
             (r["cluster"], list(r["centroid"]))
-            for r in ivf_centroids(assigned, "cluster", vec_col).collect()
+            for r in ivf_centroids(assigned, "cluster").collect()
         ]
         if not cents_rows:
             break
-        assigned = _kmeans_assign_literal(corpus, cents_rows, id_col, vec_col)
+        assigned = _kmeans_assign_literal(corpus, cents_rows)
     return assigned.localCheckpoint(eager=False)
 
 
@@ -416,15 +410,15 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cluster_col: str = "label",
 ) -> DataFrame:
     """ANN: route each query to its ``nprobe`` nearest centroids, then
     exact-score only vectors in those clusters.  The cluster equi-join
     replaces the cross join -- the scale path."""
-    cents = ivf_centroids(corpus, cluster_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
+    cents = ivf_centroids(corpus, cluster_col)
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
+    )
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("__ccos").desc(), F.col("cluster").asc()
     )
@@ -438,16 +432,18 @@ def ivf_topk(
     scored = (
         corpus.withColumnRenamed(cluster_col, "cluster")
         .join(F.broadcast(probes), "cluster")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__cos", cosine(F.col(vec_col), F.col("__qvec")))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("__cos", cosine(F.col("embedding"), F.col("__qvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("__cos").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("__cos").desc(), F.col("vec_id").asc()
+    )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(F.col("__cos"), 4).alias("cosine_sim"),
             "rank",
         )
@@ -515,18 +511,25 @@ def dequantize_vectors(
 # --- MinHash + LSH near-dup --------------------------------------------------
 
 # Fixed affine re-hash constants (universal hashing): one expensive
-# xxhash64 pass per shingle, then num_hashes cheap (a*h + b) re-hashes.
-# Deterministic across runs/sessions.
+# xxhash64 pass per shingle, then _MINHASH_HASHES cheap (a*h + b)
+# re-hashes.  Deterministic across runs/sessions.
 import random as _random
 
 _rng = _random.Random(42)
 _MINHASH_A = [(_rng.getrandbits(63) | 1) for _ in range(128)]  # odd multipliers
 _MINHASH_B = [_rng.getrandbits(63) for _ in range(128)]
 
+# Word shingle length of both MinHash families (queries/ext.sql_shingles
+# builds the oracle's shingles from it).
+_SHINGLE_N = 3
+# The xxhash64 family's signature: 32 re-hashes in 8 bands of 4 rows.
+_MINHASH_HASHES = 32
+_MINHASH_BANDS = 8
 
-def shingle_hashes(text_col: Column | str, shingle_n: int = 3) -> Column:
+
+def shingle_hashes(text_col: Column | str) -> Column:
     """One xxhash64 per shingle -- the single string-hashing pass."""
-    return F.transform(shingles(text_col, shingle_n), lambda s: F.xxhash64(s))
+    return F.transform(shingles(text_col, _SHINGLE_N), lambda s: F.xxhash64(s))
 
 
 def jaccard_tokens(a: Column, b: Column) -> Column:
@@ -541,8 +544,6 @@ def minhash_near_dupes(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 32,
-    num_bands: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -563,12 +564,7 @@ def minhash_near_dupes(
     connected-components dedup, candidate count stays linear; only
     pair-level completeness inside the blob is given up.
     """
-    if num_hashes % num_bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by num_bands "
-            f"({num_bands}); otherwise signature hashes are silently unused"
-        )
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = _MINHASH_HASHES // _MINHASH_BANDS
     # Materialize the single shingle-hash pass, then the signature --
     # two narrow projections, no recomputation of the string hashing.
     # localCheckpoint cuts the lineage so the banding branch and the
@@ -583,11 +579,11 @@ def minhash_near_dupes(
         tokens(text_col).alias("__toks"),
         shingle_hashes(text_col).alias("__sh"),
     ).localCheckpoint(eager=False)
-    # Signature via explode + grouped MIN aggregation instead of
-    # num_hashes interpreted array traversals per row: the affine
+    # Signature via explode + grouped MIN aggregation instead of one
+    # interpreted array traversal per hash per row: the affine
     # re-hashes are codegen'd JVM arithmetic and the mins combine
-    # map-side, so the doc_id shuffle carries only num_hashes longs per
-    # doc.  Same plan lesson as SimHash (NOTES.md): per-element HOF
+    # map-side, so the doc_id shuffle carries only _MINHASH_HASHES
+    # longs per doc.  Same plan lesson as SimHash (NOTES.md): per-element HOF
     # allocation swamps the saved shuffle by >10x.  Values are
     # identical to the array formulation (same wrapping multiply).
     # Empty/whitespace docs produce no shingles (text.shingles returns
@@ -605,13 +601,13 @@ def minhash_near_dupes(
                     F.col("__h") * F.lit(_MINHASH_A[i]).cast("long")
                     + F.lit(_MINHASH_B[i]).cast("long")
                 ).alias(f"__m{i}")
-                for i in range(num_hashes)
+                for i in range(_MINHASH_HASHES)
             ]
         )
         # r15 (guide §2.4): the band self-join below plans its two
         # sides as independent subtrees, so without this lineage cut
         # the signature aggregation ran TWICE per query.  The
-        # checkpointed rows are slim (id + num_hashes longs).
+        # checkpointed rows are slim (id + _MINHASH_HASHES longs).
         .localCheckpoint(eager=False)
     )
     # Band WITHOUT payload columns: only (doc_id, band, band_hash) goes
@@ -631,7 +627,7 @@ def minhash_near_dupes(
                             ]
                         ).alias("band_hash"),
                     )
-                    for b in range(num_bands)
+                    for b in range(_MINHASH_BANDS)
                 ]
             )
         ).alias("__bk"),
@@ -691,11 +687,7 @@ _HYPERPLANES = [
 
 
 def _pair_verify_fold_portable(
-    emb1: DataFrame,
-    emb2: DataFrame,
-    id_col: str,
-    vec_col: str,
-    pairs: DataFrame,
+    emb1: DataFrame, emb2: DataFrame, pairs: DataFrame
 ) -> DataFrame:
     """Per-PAIR verify for the oracle-checked cosine scorers: join each
     (vec_id_1, vec_id_2) pair to its vectors -- vec_id_1 from ``emb1``,
@@ -709,7 +701,8 @@ def _pair_verify_fold_portable(
 
     def side(emb: DataFrame, n: int) -> DataFrame:
         return emb.select(
-            F.col(id_col).alias(f"vec_id_{n}"), F.col(vec_col).alias(f"__v{n}")
+            F.col("vec_id").alias(f"vec_id_{n}"),
+            F.col("embedding").alias(f"__v{n}"),
         )
 
     joined = pairs.join(side(emb1, 1), "vec_id_1").join(side(emb2, 2), "vec_id_2")
@@ -783,12 +776,15 @@ def _bucket_allpairs_fold(with_vec: DataFrame) -> DataFrame:
 
 # --- near-dup clustering (connected components) ------------------------------
 
+# Round bound of the distributed path; it converges in O(log^2 n)
+# rounds, so hitting it takes a diameter of ~2^sqrt(30).
+_CC_MAX_ITERS = 30
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "doc_id_1",
     dst: str = "doc_id_2",
-    max_iters: int = 30,
     driver_threshold: int = 500_000,
 ) -> DataFrame:
     """Connected components over an undirected edge list.
@@ -813,7 +809,7 @@ def connected_components(
     clean = edges.select(src, dst).dropna().localCheckpoint(eager=True)
     pairs = [(r[0], r[1]) for r in clean.limit(driver_threshold + 1).collect()]
     if len(pairs) > driver_threshold:
-        return _connected_components_distributed(clean, src, dst, max_iters)
+        return _connected_components_distributed(clean, src, dst)
 
     parent: dict = {}
 
@@ -848,10 +844,7 @@ def connected_components(
 
 
 def _connected_components_distributed(
-    edges: DataFrame,
-    src: str = "doc_id_1",
-    dst: str = "doc_id_2",
-    max_iters: int = 30,
+    edges: DataFrame, src: str, dst: str
 ) -> DataFrame:
     """Distributed CC via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond").
@@ -862,9 +855,8 @@ def _connected_components_distributed(
     union of stars rooted at each component's minimum id in
     O(log^2 n) rounds REGARDLESS of graph diameter -- the previous
     min-label propagation needed diameter rounds, so a path-shaped
-    component longer than max_iters silently split.  Warns if
-    max_iters is still hit (needs ~2^sqrt(max_iters) diameter to
-    trigger now)."""
+    component longer than the round bound silently split.  Warns if
+    ``_CC_MAX_ITERS`` is still hit."""
 
     def sym(e: DataFrame) -> DataFrame:
         # both orientations, self-loops dropped
@@ -895,7 +887,7 @@ def _connected_components_distributed(
     first = raw.filter(F.col("a") != F.col("b")).localCheckpoint(eager=False)
     e = canon(first).localCheckpoint(eager=True)
     converged = False
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         s = sym(e)
         # large-star: m(u) = min(neighbors + self); (v, m) for v > u
         mins = s.groupBy("a").agg(F.min("b").alias("__mn"))
@@ -938,8 +930,9 @@ def _connected_components_distributed(
         import logging
 
         logging.getLogger(__name__).warning(
-            "connected_components hit max_iters=%d before convergence; "
-            "components with diameter > max_iters are split", max_iters,
+            "connected_components hit its %d-round bound before "
+            "convergence; components of larger diameter are split",
+            _CC_MAX_ITERS,
         )
     return labels
 
@@ -970,7 +963,7 @@ def dedup_clusters(
 # --- SimHash -----------------------------------------------------------------
 
 
-def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per document via explode + PACKED bit-vote
     aggregation.
 
@@ -997,9 +990,9 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     from ..sources.tables import spread_input
 
     tok_hashes = spread_input(docs).select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.explode(
-            F.slice(F.array_distinct(tokens(text_col)), 1, 60000)
+            F.slice(F.array_distinct(tokens("text")), 1, 60000)
         ).alias("__tok"),
     ).withColumn("__h", F.xxhash64("__tok"))
 
@@ -1081,20 +1074,21 @@ def _cap_buckets(
     return small, chain
 
 
+# SimHash banding: 4 slices of 16 bits.
+_SIMHASH_BANDS = 4
+
+
 def simhash_near_dupes(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 8,
-    num_bands: int = 4,
     max_bucket_size: int | None = 500,
 ) -> DataFrame:
     """SimHash near-dup detection: band the 64-bit fingerprint into
-    ``num_bands`` equal slices, bucket-join on (band, slice value),
+    ``_SIMHASH_BANDS`` equal slices, bucket-join on (band, slice value),
     then verify candidates by exact Hamming distance.
 
     Recall note: a clean band is guaranteed only when the Hamming
-    distance is below ``num_bands`` (pigeonhole); beyond that the
+    distance is below ``_SIMHASH_BANDS`` (pigeonhole); beyond that the
     banding is probabilistic, which is the standard SimHash-LSH
     trade-off.  Scale: one fingerprint shuffle + one bucket join --
     never O(n^2) *provided buckets stay bounded*.  On degenerate
@@ -1105,11 +1099,11 @@ def simhash_near_dupes(
     _cap_buckets), so mega-duplicate clusters stay connected while
     candidate count stays linear.  Set ``None`` for exact banding.
     """
-    bits = 64 // num_bands
+    bits = 64 // _SIMHASH_BANDS
     mask = (1 << bits) - 1
-    fp = simhash64(docs, id_col, text_col).localCheckpoint(eager=False)
+    fp = simhash64(docs).localCheckpoint(eager=False)
     # the fingerprint RIDES ALONG in the banded rows (8 bytes on a
-    # (docs x num_bands)-row shuffle -- negligible), so the bucket
+    # (docs x _SIMHASH_BANDS)-row shuffle -- negligible), so the bucket
     # self-join verifies candidates inline instead of joining back to
     # the fingerprint table twice, and the hamming filter runs BEFORE
     # the pair-dedup shuffle -- the dedup then only sees pairs that
@@ -1127,7 +1121,7 @@ def simhash_near_dupes(
                         .bitwiseAND(F.lit(mask).cast("long"))
                         .alias("val"),
                     )
-                    for b in range(num_bands)
+                    for b in range(_SIMHASH_BANDS)
                 ]
             )
         ).alias("__bk"),
@@ -1186,6 +1180,11 @@ def simhash_near_dupes(
 # a_i, h' < 2^31, so every product fits in 63 bits -- no wrap, no
 # engine-dependent rounding, bit-identical in DuckDB.
 _MH_PRIME = 2147483647
+# The portable family's signature: 12 permutations in 4 bands of 3
+# rows.  The DuckDB builders (queries/ext.sql_hs_sigs,
+# sql_mh_band_key) read these, so the oracle cannot drift from them.
+_PORTABLE_MH_HASHES = 12
+_PORTABLE_MH_BANDS = 4
 
 
 def _mh_ab(i: int) -> tuple[int, int]:
@@ -1209,14 +1208,7 @@ def _mh_hashes(shingle_arr: Column) -> Column:
     )
 
 
-def _portable_shingle_bands(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    num_bands: int,
-    shingle_n: int,
-) -> tuple[DataFrame, DataFrame]:
+def _portable_shingle_bands(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared front half of the portable MinHash family: distinct
     shingles per doc (checkpointed -- reused by banding AND verify)
     plus exploded (doc_id, band, band_key) rows.
@@ -1227,9 +1219,7 @@ def _portable_shingle_bands(
     shuffle; the affine-permutation form is ~4x cheaper at sf0.1 and
     needs no shuffle at all -- signatures are doc-local array math).
     band_key = md5 of the band's '|'-joined signature slice."""
-    if num_hashes % num_bands != 0:
-        raise ValueError("num_hashes must divide evenly into num_bands")
-    rows = num_hashes // num_bands
+    rows = _PORTABLE_MH_HASHES // _PORTABLE_MH_BANDS
     # spread_input (r15, guide §2.5): one small parquet file = one scan
     # split, so shingling + the per-shingle md5 pass -- the family's
     # dominant per-row compute -- otherwise runs single-task.
@@ -1237,8 +1227,8 @@ def _portable_shingle_bands(
 
     base = (
         spread_input(docs).select(
-            F.col(id_col).alias("doc_id"),
-            F.array_distinct(shingles(text_col, shingle_n)).alias("__sh"),
+            F.col("doc_id"),
+            F.array_distinct(shingles("text", _SHINGLE_N)).alias("__sh"),
         )
         .filter(F.size("__sh") > 0)
         .localCheckpoint(eager=False)
@@ -1253,7 +1243,7 @@ def _portable_shingle_bands(
             )
         ).alias(f"__m{i}")
 
-    mins = hs.select("doc_id", *[perm_min(i) for i in range(num_hashes)])
+    mins = hs.select("doc_id", *[perm_min(i) for i in range(_PORTABLE_MH_HASHES)])
     bands = mins.select(
         "doc_id",
         F.explode(
@@ -1271,7 +1261,7 @@ def _portable_shingle_bands(
                             )
                         ).alias("band_key"),
                     )
-                    for b in range(num_bands)
+                    for b in range(_PORTABLE_MH_BANDS)
                 ]
             )
         ).alias("__b"),
@@ -1282,12 +1272,7 @@ def _portable_shingle_bands(
 def minhash_decontaminate(
     train: DataFrame,
     eval_set: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 12,
-    num_bands: int = 4,
     threshold: float = 0.4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Training/eval decontamination: which TRAIN documents near-match
     an EVAL document.  The asymmetric shape is the point -- the eval
@@ -1300,12 +1285,8 @@ def minhash_decontaminate(
     shingle base, so the full train corpus is never exchanged.  At
     100 TB this is the only tractable shape: cost is one scan of train
     times a constant, independent of train's pair count."""
-    base_t, bands_t = _portable_shingle_bands(
-        train, id_col, text_col, num_hashes, num_bands, shingle_n
-    )
-    base_e, bands_e = _portable_shingle_bands(
-        eval_set, id_col, text_col, num_hashes, num_bands, shingle_n
-    )
+    base_t, bands_t = _portable_shingle_bands(train)
+    base_e, bands_e = _portable_shingle_bands(eval_set)
     cand = (
         bands_t.alias("t")
         .join(
@@ -1339,12 +1320,9 @@ def minhash_decontaminate(
 def embedding_decontaminate_portable(
     train: DataFrame,
     eval_emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     n_planes: int | None = None,
     n_tables: int = 16,
-    dim: int = 64,
     broadcast_candidates: bool = True,
 ) -> DataFrame:
     """Embedding-space decontamination probe -- the asymmetric
@@ -1381,12 +1359,8 @@ def embedding_decontaminate_portable(
         n_planes, n_tables = adaptive_portable_kl(
             train.count() + eval_emb.count()
         )
-    tb = _int_hyperplane_buckets_arrow(
-        train, id_col, vec_col, n_planes, n_tables, dim
-    )
-    eb = _int_hyperplane_buckets_arrow(
-        eval_emb, id_col, vec_col, n_planes, n_tables, dim
-    )
+    tb = _int_hyperplane_buckets_arrow(train, n_planes, n_tables, _PORTABLE_DIM)
+    eb = _int_hyperplane_buckets_arrow(eval_emb, n_planes, n_tables, _PORTABLE_DIM)
     cand = (
         tb.join(
             F.broadcast(eb.select("bucket", F.col("vid").alias("__evid"))),
@@ -1431,12 +1405,12 @@ def embedding_decontaminate_portable(
         # values equal the shuffle fallback's per-pair verify below
         # (pinned by test_embedding_decontaminate_shuffle_fallback
         # _matches_broadcast).
-        ev_rows = eval_emb.select(id_col, vec_col).collect()
+        ev_rows = eval_emb.select("vec_id", "embedding").collect()
         eval_ids = np.array([r[0] for r in ev_rows], dtype=np.int64)
         eval_mat = (
             np.stack([np.asarray(r[1], dtype=np.float64) for r in ev_rows])
             if ev_rows
-            else np.zeros((0, dim))
+            else np.zeros((0, _PORTABLE_DIM))
         )
         eval_nrm = np.sqrt(_fold_norm2(eval_mat))
         eval_row = {int(i): j for j, i in enumerate(eval_ids)}
@@ -1446,7 +1420,8 @@ def embedding_decontaminate_portable(
         from ..sources.tables import spread_input
 
         tv = train.select(
-            F.col(id_col).alias("train_vec_id"), F.col(vec_col).alias("__v1")
+            F.col("vec_id").alias("train_vec_id"),
+            F.col("embedding").alias("__v1"),
         )
         joined = spread_input(tv).join(F.broadcast(candg), "train_vec_id")
 
@@ -1497,7 +1472,7 @@ def embedding_decontaminate_portable(
     )
     return (
         _pair_verify_fold_portable(
-            train, F.broadcast(eval_emb), id_col, vec_col, pairs
+            train, F.broadcast(eval_emb), pairs
         )
         .withColumn("cosine_sim", F.round(F.col("__raw_cos"), 4))
         .filter(F.col("cosine_sim") >= threshold)
@@ -1511,21 +1486,14 @@ def embedding_decontaminate_portable(
 
 def minhash_near_dupes_portable(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 12,
-    num_bands: int = 4,
     threshold: float = 0.4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs with a portable hash family: one
     md5-prefix int per shingle, k exact affine permutations mod 2^31-1
     (see _portable_shingle_bands).  Same plan shape as
     minhash_near_dupes: doc-local signature arrays, payload-free band
     shuffle, exact-Jaccard verify over shingle sets."""
-    base, bands = _portable_shingle_bands(
-        docs, id_col, text_col, num_hashes, num_bands, shingle_n
-    )
+    base, bands = _portable_shingle_bands(docs)
     # r15 (guide §2.4): the self-join's two sides plan as independent
     # subtrees, so without this lineage cut the md5 signature+banding
     # pipeline ran TWICE per query.  Banded rows are three slim columns.
@@ -1550,9 +1518,7 @@ def minhash_near_dupes_portable(
     )
 
 
-def simhash_portable(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_portable(docs: DataFrame) -> DataFrame:
     """64-bit SimHash as two 32-bit halves (sim_lo, sim_hi) built from
     md5 nibbles: bit j of token t = bit (j%4) of hex digit j//4 of
     md5(t).  Majority bit-vote per position over DISTINCT tokens, same
@@ -1565,9 +1531,9 @@ def simhash_portable(
     from ..sources.tables import spread_input
 
     toks = spread_input(docs).select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.explode(
-            F.array_distinct(F.filter(tokens(text_col), lambda t: t != ""))
+            F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))
         ).alias("__t"),
     ).withColumn("__md5", F.md5("__t"))
     nib_cols = [
@@ -1625,14 +1591,12 @@ def simhash_portable(
 
 def simhash_near_dupes_portable(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 4,
 ) -> DataFrame:
     """SimHash near-dup pairs over the portable fingerprint: 4 bands of
     16 bits (integer divide/modulo -- portable), bucket join, Hamming
     verify via bit_count(xor) on each 32-bit half."""
-    fp = simhash_portable(docs, id_col, text_col).localCheckpoint(eager=False)
+    fp = simhash_portable(docs).localCheckpoint(eager=False)
     band_vals = [
         (F.col("sim_lo") % 65536).cast("long"),
         F.floor(F.col("sim_lo") / 65536).cast("long"),
@@ -1688,6 +1652,10 @@ def simhash_near_dupes_portable(
 # |qv| < 2^14, |plane int| < 2^13 (4.5 sigma), 64 terms => |dot| < 2^33.
 _INT_PLANE_SCALE = 1 << 10
 _QUANT_SCALE = 1 << 14
+# Plane truncation: the leading _PORTABLE_DIM elements of each vector
+# are bucketed (the embeddings fixture's width).  The DuckDB bucket
+# builders (queries/ext.sql_emb_*) read it too.
+_PORTABLE_DIM = 64
 
 
 def _int_plane(idx: int, dim: int) -> list[int]:
@@ -1695,12 +1663,7 @@ def _int_plane(idx: int, dim: int) -> list[int]:
 
 
 def _int_hyperplane_buckets_arrow(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    dim: int,
+    emb: DataFrame, n_planes: int, n_tables: int, dim: int
 ) -> DataFrame:
     """Slim (vid, bucket) rows via ONE int64 numpy matmul per Arrow
     batch, in place of L*k interpreted aggregate-HOF folds per row
@@ -1725,8 +1688,8 @@ def _int_hyperplane_buckets_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = pdf[vec_col].to_numpy()
-            ids = pdf[id_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             lens = np.array([-1 if v is None else len(v) for v in vecs])
             if (lens < 0).any():
                 bad = ids[lens < 0][:3].tolist()
@@ -1750,7 +1713,7 @@ def _int_hyperplane_buckets_arrow(
     # round-robin exchange costing 1.1-1.2x end-to-end on every
     # embedding-LSH query (the md5/shingle signature passes, where
     # per-row work dominates, keep their spread).
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         _buckets, "vid long, bucket long"
     )
 
@@ -1786,10 +1749,8 @@ PORTABLE_ADAPTIVE_CAP = 200
 
 def adaptive_lsh_pairs_portable(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
-    dim: int = 64,
+    dim: int = _PORTABLE_DIM,
 ) -> DataFrame:
     """Embedding-LSH near-dup pairs at the ADAPTIVE operating point.
     k from ``adaptive_portable_kl`` (integer rule, replayed by the
@@ -1803,8 +1764,6 @@ def adaptive_lsh_pairs_portable(
     k, tables = adaptive_portable_kl(n)
     return embedding_near_dupes_lsh_portable(
         emb,
-        id_col=id_col,
-        vec_col=vec_col,
         threshold=threshold,
         n_planes=k,
         n_tables=tables,
@@ -1815,12 +1774,10 @@ def adaptive_lsh_pairs_portable(
 
 def embedding_near_dupes_lsh_portable(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     n_planes: int = 4,
     n_tables: int = 16,
-    dim: int = 64,
+    dim: int = _PORTABLE_DIM,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup: random-hyperplane buckets -> bucket
@@ -1849,7 +1806,7 @@ def embedding_near_dupes_lsh_portable(
     ``list_aggregate`` skips them, so it buckets and scores such a
     vector over its other elements.  The fixtures hold no such
     vector."""
-    slim = _int_hyperplane_buckets_arrow(emb, id_col, vec_col, n_planes, n_tables, dim)
+    slim = _int_hyperplane_buckets_arrow(emb, n_planes, n_tables, dim)
     if max_bucket_size is not None:
         # deterministic (vid-ordered) cap: the chain pairs are exact
         # SQL-window arithmetic, so the DuckDB oracle replays them
@@ -1866,7 +1823,9 @@ def embedding_near_dupes_lsh_portable(
         # (id, id, double) rows; duplicate rows are value-identical so
         # the result set is unchanged.  Gated on max_bucket_size: the
         # cap bounds per-group memory (O(cap^2) pairs).
-        vkey = emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("__vec"))
+        vkey = emb.select(
+            F.col("vec_id").alias("vid"), F.col("embedding").alias("__vec")
+        )
         scored = _bucket_allpairs_fold(
             slim.join(vkey, "vid").select("bucket", "vid", "__vec")
         )
@@ -1874,7 +1833,7 @@ def embedding_near_dupes_lsh_portable(
             F.col("vid_1").alias("vec_id_1"), F.col("vid_2").alias("vec_id_2")
         )
         scored = scored.unionByName(
-            _pair_verify_fold_portable(emb, emb, id_col, vec_col, chain_pairs)
+            _pair_verify_fold_portable(emb, emb, chain_pairs)
         )
         # r15 (guide §2.3): threshold BEFORE the cross-table dedup --
         # every duplicate copy of a pair carries the identical
@@ -1902,7 +1861,7 @@ def embedding_near_dupes_lsh_portable(
     # documented worst case), so this verify is the family's dominant
     # cost: ~192 vectorized ops per Arrow batch.
     return (
-        _pair_verify_fold_portable(emb, emb, id_col, vec_col, candidates)
+        _pair_verify_fold_portable(emb, emb, candidates)
         .withColumn("cosine_sim", F.round(F.col("__raw_cos"), 4))
         .filter(F.col("cosine_sim") >= threshold)
         .select("vec_id_1", "vec_id_2", "cosine_sim")

@@ -53,14 +53,15 @@ def punct_count(col: Column | str) -> Column:
     return F.length(c) - F.length(F.regexp_replace(c, PUNCT_CLASS, ""))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword quality features per document."""
-    n_tok = token_count(text_col)
+def quality_features(df: DataFrame) -> DataFrame:
+    """Length / punctuation / stopword quality features per document of
+    the ``text`` column."""
+    n_tok = token_count("text")
     return (
         df.withColumn("n_tokens", n_tok)
-        .withColumn("n_chars_computed", F.length(F.col(text_col)))
-        .withColumn("punct_chars", punct_count(text_col))
-        .withColumn("stop_hits", stopword_hits(text_col, "en"))
+        .withColumn("n_chars_computed", F.length(F.col("text")))
+        .withColumn("punct_chars", punct_count("text"))
+        .withColumn("stop_hits", stopword_hits("text", "en"))
         .withColumn(
             "stop_ratio",
             F.round(F.col("stop_hits").cast("double") / F.col("n_tokens"), 4),
@@ -85,13 +86,17 @@ def language_scores(col: Column | str) -> dict[str, Column]:
     }
 
 
-def language_guess(col: Column | str, min_hits: int = 2) -> Column:
+# Both language-ID flavors answer 'unknown' below this many hits.
+_LANG_MIN_HITS = 2
+
+
+def language_guess(col: Column | str) -> Column:
     """Argmax language over stopword scores, deterministic tie-break by
     language-key order; 'unknown' when the best score is below
-    ``min_hits``."""
+    ``_LANG_MIN_HITS``."""
     scores = language_scores(col)
     best = F.greatest(*scores.values())
-    expr = F.when(best < min_hits, F.lit("unknown"))
+    expr = F.when(best < _LANG_MIN_HITS, F.lit("unknown"))
     for lang in STOPWORDS:  # first language reaching the max wins
         expr = expr.when(scores[lang] == best, F.lit(lang))
     return expr.otherwise(F.lit("unknown"))
@@ -134,7 +139,7 @@ def char_trigrams(col: Column | str) -> Column:
     )
 
 
-def language_guess_ngram(col: Column | str, min_hits: int = 2) -> Column:
+def language_guess_ngram(col: Column | str) -> Column:
     """Argmax language over char-trigram profile hits (n-gram heuristic
     language ID)."""
     grams = char_trigrams(col)
@@ -143,7 +148,7 @@ def language_guess_ngram(col: Column | str, min_hits: int = 2) -> Column:
         for lang, profile in CHAR_TRIGRAM_PROFILES.items()
     }
     best = F.greatest(*scores.values())
-    expr = F.when(best < min_hits, F.lit("unknown"))
+    expr = F.when(best < _LANG_MIN_HITS, F.lit("unknown"))
     for lang in CHAR_TRIGRAM_PROFILES:
         expr = expr.when(scores[lang] == best, F.lit(lang))
     return expr.otherwise(F.lit("unknown"))
@@ -250,18 +255,16 @@ def shingles_sampled(col: Column | str, n: int = 3, step: int = 4) -> Column:
 _RFP_C = (-7046029254386353131, -4417276706812531889, 1609587929392839161)
 
 
-def rolling_fingerprint_portable(col: Column | str, n: int = 3) -> Column:
+def rolling_fingerprint_portable(col: Column | str) -> Column:
     """Engine-agnostic rolling document fingerprint: per-token 60-bit
     hash (first 15 hex chars of md5, via ``conv`` -- exact in any
-    engine), combined over ``n``-token windows with wrapping 64-bit
+    engine), combined over 3-token windows with wrapping 64-bit
     multiply-add (Spark non-ANSI long arithmetic IS mod-2^64 two's
     complement; a DuckDB oracle emulates it with HUGEINT products
     ``% 2^64`` and a signed conversion).  fingerprint = signed min over
     window hashes; NULL for empty/whitespace-only docs.  Windows past
-    the end (docs shorter than ``n`` tokens) zero-pad, so every
-    non-empty doc gets exactly max(1, n_tokens-n+1) windows."""
-    if n != 3:
-        raise ValueError("portable rolling fingerprint is pinned to n=3 windows")
+    the end (docs shorter than 3 tokens) zero-pad, so every
+    non-empty doc gets exactly max(1, n_tokens-2) windows."""
     toks = F.coalesce(
         F.filter(tokens(col), lambda t: t != ""), F.array().cast("array<string>")
     )
@@ -286,5 +289,5 @@ def rolling_fingerprint_portable(col: Column | str, n: int = 3) -> Column:
         th3,
         lambda ab, c: ab + F.coalesce(c, F.lit(0).cast("long")) * c3,
     )
-    wins = F.slice(wins, 1, F.greatest(sz - (n - 1), F.lit(1)))
+    wins = F.slice(wins, 1, F.greatest(sz - 2, F.lit(1)))
     return F.when(sz == 0, F.lit(None).cast("long")).otherwise(F.array_min(wins))

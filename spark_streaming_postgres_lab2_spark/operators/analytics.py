@@ -8,7 +8,7 @@ partial aggregation, hash aggregate, and AQE-coalesced shuffles.
 
 All functions take the *enriched* events frame (operators/enrich.py
 output schema) and return DataFrames; ``register_analytics_views``
-exposes them as named temp views for SQL users.
+exposes the three event views as named temp views for SQL users.
 """
 
 from __future__ import annotations
@@ -109,11 +109,7 @@ def verification_counts(valid: DataFrame, dead_letter: DataFrame) -> DataFrame:
     return a.unionByName(b).select("table_name", "row_count")
 
 
-def register_analytics_views(
-    spark: SparkSession, events: DataFrame, metrics: DataFrame | None = None
-) -> None:
+def register_analytics_views(spark: SparkSession, events: DataFrame) -> None:
     hourly_event_summary(events).createOrReplaceTempView("v_hourly_event_summary")
     user_sessions(events).createOrReplaceTempView("v_user_sessions")
     category_performance(events).createOrReplaceTempView("v_category_performance")
-    if metrics is not None:
-        data_quality_summary(metrics).createOrReplaceTempView("v_data_quality_summary")

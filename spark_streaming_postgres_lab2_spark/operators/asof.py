@@ -61,13 +61,12 @@ def asof_join_pandas(
     left_ts: str,
     right_ts: str,
     right_values: List[str],
-    tolerance_us: int | None = None,
 ) -> DataFrame:
     """Two-table as-of join: for each left row, the latest right row
-    with ``right_ts <= left_ts`` in the same ``key`` group (optionally
-    within ``tolerance_us`` microseconds).  Implemented as a cogrouped
-    ``applyInPandas`` running ``pandas.merge_asof`` per key -- both
-    sides shuffle once on ``key`` and merge Arrow-batched."""
+    with ``right_ts <= left_ts`` in the same ``key`` group.
+    Implemented as a cogrouped ``applyInPandas`` running
+    ``pandas.merge_asof`` per key -- both sides shuffle once on ``key``
+    and merge Arrow-batched."""
     l_cols = list(left.columns)
     overlap = [c for c in right_values if c in l_cols]
     if overlap:
@@ -104,15 +103,7 @@ def asof_join_pandas(
         rf = rf.sort_values(right_ts)[[right_ts] + right_values]
         if right_ts != left_ts:
             rf = rf.rename(columns={right_ts: left_ts})
-        kwargs = {}
-        if tolerance_us is not None:
-            # tolerance dtype must match the 'on' column: Timedelta for
-            # datetimes, plain int for integer timestamps
-            if pd.api.types.is_datetime64_any_dtype(lf[left_ts]):
-                kwargs["tolerance"] = pd.Timedelta(microseconds=tolerance_us)
-            else:
-                kwargs["tolerance"] = int(tolerance_us)
-        merged = pd.merge_asof(lf, rf, on=left_ts, direction="backward", **kwargs)
+        merged = pd.merge_asof(lf, rf, on=left_ts, direction="backward")
         if len(lf_null):
             merged = pd.concat([merged[out_cols], lf_null[out_cols]])
         return merged[out_cols]

@@ -42,10 +42,10 @@ def dedup_keep_first(
     )
 
 
-def dedup_counts(df: DataFrame, key: str = "event_id") -> DataFrame:
+def dedup_counts(df: DataFrame) -> DataFrame:
     """Deterministic per-group dedup accounting: how many physical rows
     vs distinct keys per event_type (used by the oracle-checked query)."""
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("total_rows"),
-        F.countDistinct(F.col(key)).alias("unique_events"),
+        F.countDistinct(F.col("event_id")).alias("unique_events"),
     )

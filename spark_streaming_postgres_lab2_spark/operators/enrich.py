@@ -56,8 +56,8 @@ def clean_strings(df: DataFrame) -> DataFrame:
     return out
 
 
-def add_time_parts(df: DataFrame, ts_col: str = "event_time") -> DataFrame:
-    ts = F.col(ts_col)
+def add_time_parts(df: DataFrame) -> DataFrame:
+    ts = F.col("event_time")
     return (
         df.withColumn("event_year", F.year(ts))
         .withColumn("event_month", F.month(ts))
@@ -87,16 +87,15 @@ def apply_defaults(df: DataFrame) -> DataFrame:
     return out
 
 
-def add_late_arrival_flag(
-    df: DataFrame,
-    ts_col: str = "event_time",
-    threshold: str = "5 minutes",
-    now: Column | None = None,
-) -> DataFrame:
+# an event older than this at processing time is flagged late
+_LATE_THRESHOLD = "5 minutes"
+
+
+def add_late_arrival_flag(df: DataFrame, now: Column | None = None) -> DataFrame:
     now = F.current_timestamp() if now is None else now
     return df.withColumn(
         "is_late_arrival",
-        F.col(ts_col) < (now - F.expr(f"INTERVAL {threshold}")),
+        F.col("event_time") < (now - F.expr(f"INTERVAL {_LATE_THRESHOLD}")),
     )
 
 
@@ -106,18 +105,14 @@ def add_lineage(df: DataFrame, processed_at: Column | None = None) -> DataFrame:
     )
 
 
-def transform_and_enrich(
-    df: DataFrame,
-    late_threshold: str = "5 minutes",
-    now: Column | None = None,
-) -> DataFrame:
+def transform_and_enrich(df: DataFrame, now: Column | None = None) -> DataFrame:
     """Full reference enrichment chain over a validated v2 event frame."""
     out = df.withColumn("event_time", F.to_timestamp(F.col("event_time")))
     out = clean_strings(out)
     out = add_lineage(out, processed_at=now)
     out = add_time_parts(out)
     out = add_total_amount(out)
-    out = add_late_arrival_flag(out, threshold=late_threshold, now=now)
+    out = add_late_arrival_flag(out, now=now)
     out = apply_defaults(out)
     return out
 

@@ -18,9 +18,7 @@ def upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
     return untouched.unionByName(updates.select(*target.columns))
 
 
-def upsert_parquet(
-    spark, path: str, updates: DataFrame, keys: list[str], staging_suffix: str = "__staging"
-) -> None:
+def upsert_parquet(spark, path: str, updates: DataFrame, keys: list[str]) -> None:
     """Upsert into a parquet directory via write-then-swap.
 
     Limitations (by design of plain parquet dirs): the two-rename swap
@@ -47,7 +45,7 @@ def upsert_parquet(
 
     target = spark.read.parquet(path)
     merged = upsert(target, updates, keys)
-    staging = path + staging_suffix
+    staging = path + "__staging"
     merged.write.mode("overwrite").parquet(staging)
     backup = path + "__old"
     shutil.rmtree(backup, ignore_errors=True)

@@ -41,112 +41,75 @@ class QuerySpec:
 # Everything past slot 50 is still verified every round by the local
 # replica (tools/parity_check.py; committed as PARITY_r{N}.json).
 DRIVER_PRIORITY = [
-    # ================= round 16 window =================
-    # Tier 0 (slots 1-5): the five r15-born operators -- the ONLY
-    # oracles with no driver CORRECTNESS row at all (locally green in
-    # PARITY_r15).  quality_consensus_report ALSO re-stamps this round
-    # (scale-gated lineage cut), so its slot does double duty.
-    "doremi_domain_weights",
-    "tokenizer_fertility_audit",
-    "dedup_cluster_profile",
-    "rrf_hybrid_search",
-    "quality_consensus_report",
-    # Round 16 OPTIMIZATION re-stamps (slots 6-12): every query whose
-    # content stamp flipped this round (verified against PARITY_r15's
-    # src_stamps) -- the IVF-PQ Arrow restructure, the first-grain
-    # overlap count + point-session grain tune, the repeated-subtree
-    # cuts, the scale-gated LM cut, the asof bounds collect, and the
-    # bucketed offset-window near-dup (25x -> 2x payload; it now also
-    # returns a NaN cosine as NaN, not NULL, as its oracle does).  A
-    # changed implementation re-certifies in-window before anything
-    # merely stale does (the quality_classifier_filter rule).
-    "ann_ivfpq_adc_audit",
-    "asof_quotes",
-    "boilerplate_dedup",
-    "embedding_near_dup",
-    "lm_surprisal_filter",
-    "session_overlap_pairs",
-    "term_pmi_cooccurrence",
-    # Tier 1 (19, slots 13-31): the COMPLETE r11-last-green cohort --
-    # after the r15 window re-certified the optimization re-stamps,
-    # these are the stalest driver evidence (last green 5 rounds ago).
-    # Greening all of them advances the minimum last-green round to
-    # r12.  All have blame-span 0 at the r16 head; alphabetical.
-    "bpe_merge_candidates",
-    "corpus_filter_chain",
-    "customers_without_orders",
-    "nation_pairs",
-    "order_count_distribution",
-    "order_priority",
-    "pii_redaction",
-    "quality_percentile_filter",
-    "regional_revenue",
-    "snapshot_diff",
-    "source_quota_sample",
-    "top_customers",
-    "top_parts_per_brand",
-    "tpch_q1",
-    "tpch_q6",
-    "user_activity",
-    "value_percentiles",
-    "value_stats",
-    "zipf_top_terms",
-    # Round 16 cross-module re-certifications (6, slots 32-37): the
-    # blame guard's list -- queries whose certified plans route through
-    # functions/graph.py (pagerank / bfs / triangle restructures) or
-    # functions/similarity.py (cosine_topk guard + degenerate-query
-    # handling, kmeans zero-norm-centroid ranking) edited this round.
-    # Cross-module helpers are outside the content stamp, but the
-    # line-span blame tier still (correctly) demands an in-window
-    # re-certification for post-certification edits.
-    "pagerank_links",
-    "bfs_reachability",
-    "triangle_counts",
-    "similarity_topk",
-    "ann_recall_audit",
+    # ================= current window =================
+    # Re-certifications (34, slots 1-34): every oracle-bearing query
+    # whose blame spans reach a function edited when the library's
+    # keyword options that no caller set became module constants or
+    # literal column names (plans equal; see plans/r20).  The four
+    # marked (stamp) also changed content stamp since their last
+    # driver-green round.
+    # functions/similarity.py (14)
     "ann_ivf_lossless_audit",
-    # Tier 2 (8, slots 38-45): the r12-last-green cohort (27 rows;
-    # ann_ivfpq_adc_audit and term_pmi_cooccurrence already hold
-    # re-stamp slots above), ranked by MEASURED cross-module blame-span
-    # width at the r16 head (tools/parity_check.fn_blame_spans, sum of
-    # span lines outside the fn's own module): doc_fingerprints 7,
-    # doc_hof_stats / fact_join_unbucketed / nation_profit /
-    # sorted_neighborhood_dedup 4, remainder 0 (alphabetical).  The
-    # 17 lowest-ranked (gapfill_interpolate, hourly_gapfill,
-    # html_text_extract, intra_doc_dedup, latest_event_per_user,
-    # mad_anomaly_hours, order_first_last_nth, order_window_suite,
-    # revenue_concentration, rolling_7d_revenue, shard_manifest,
-    # top_spenders_lateral, train_eval_split, training_mix_upsample,
-    # url_canonical_dedup, user_event_paths, value_histogram) rotate in
-    # r17 with the r13 cohort.
-    "doc_fingerprints",
-    "doc_hof_stats",
-    "fact_join_unbucketed",
-    "nation_profit",
-    "sorted_neighborhood_dedup",
-    "cumulative_unique_users",
-    "embedding_pq_audit",
-    "freq_items_audit",
-    # Re-certifications for the one cosine-fold kernel (3, slots
-    # 46-48): semantic_decontaminate's verify (its shuffle fallback is
-    # now the portable pair verify) is the blame guard's name;
-    # ngram_jaccard_pairs and near_dup_clusters share one builder with
-    # their _fast twins, so their content stamps changed (plans equal).
-    # ngram_jaccard_pairs changed again when its xxhash64 twin was
-    # deleted: the md5 builder is now the query body (plan equal).
+    "ann_recall_audit",
+    "canonical_docs",
+    "decontaminate",
+    "dedup_cluster_profile",
+    "embedding_lsh_near_dup_portable",  # stamp
+    "embedding_near_dup",  # stamp
+    "incremental_dedup",
+    "minhash_near_dup",
+    "near_dup_clusters",  # stamp
     "semantic_decontaminate",
+    "semantic_dedup",  # stamp
+    "similarity_topk",
+    "simhash_near_dup",
+    # functions/graph.py (3)
+    "bfs_reachability",
+    "pagerank_links",
+    "triangle_counts",
+    # functions/multimodal.py (9)
+    "audio_decode",
+    "audio_frame_energy",
+    "multimodal_decode",
+    "multimodal_features",
+    "multimodal_frames",
+    "multimodal_meta",
+    "multimodal_resize_real",
+    "png_decode",
+    "video_frame_stats",
+    # functions/text.py (3)
+    "doc_language",
+    "doc_quality",
+    "doc_rolling_fingerprint",
+    # functions/sessions.py (4)
+    "session_concurrency",
+    "session_overlap_pairs",
+    "session_path_mining",
+    "sessionization",
+    # operators/asof.py (1)
+    "asof_quotes",
+    # Stalest driver evidence (16, slots 35-50): the whole r12
+    # last-green cohort (12), then the r13 cohort's ngram_jaccard_pairs
+    # (its stamp changed twice since) and the first three of the rest
+    # of that cohort, alphabetically.  The 35 names of the previous
+    # window not listed here were all driver-green in r16 and have not
+    # changed since; they rotate out.
+    "mad_anomaly_hours",
+    "order_first_last_nth",
+    "order_window_suite",
+    "revenue_concentration",
+    "rolling_7d_revenue",
+    "shard_manifest",
+    "top_spenders_lateral",
+    "train_eval_split",
+    "training_mix_upsample",
+    "url_canonical_dedup",
+    "user_event_paths",
+    "value_histogram",
     "ngram_jaccard_pairs",
-    "near_dup_clusters",
-    # Cross-module re-certifications (2, slots 49-50): the portable
-    # embedding-LSH family in functions/similarity.py lost its
-    # expression bucketer and verify, and its uncapped tail now scores
-    # through _pair_verify_fold_portable.  These are the two queries
-    # whose blame spans reach the edited lines (the blame guard's list).
-    # They reach the family's docstrings again after the float-plane
-    # embedding-LSH family was deleted (semantic_dedup's accounting
-    # docstring changed with it; plans equal).
-    "embedding_lsh_near_dup_portable",
-    "semantic_dedup",
+    "approx_distinct_audit",
+    "approx_quantiles_audit",
+    "doc_regex_extract",
 ]
 
 

@@ -819,19 +819,20 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decon_oracle() -> str:
-    from .ext import _SQL_SHINGLES, sql_hs_sigs
+    from ..functions.similarity import _PORTABLE_MH_BANDS
+    from .ext import _SQL_SHINGLES, sql_hs_sigs, sql_mh_band_key
 
     ev = ", ".join(f"'{s}'" for s in _EVAL_SOURCES)
     return (
         "WITH "
         + _SQL_SHINGLES
         + ",\n"
-        + sql_hs_sigs(12)
+        + sql_hs_sigs()
         + f""",
 __bands AS (
   SELECT doc_id, b.v AS band,
-         md5(CAST(sig[CAST(b.v * 3 + 1 AS INTEGER)] AS VARCHAR) || '|' || CAST(sig[CAST(b.v * 3 + 2 AS INTEGER)] AS VARCHAR) || '|' || CAST(sig[CAST(b.v * 3 + 3 AS INTEGER)] AS VARCHAR)) AS band_key
-  FROM __sigs, range(0, 4) b(v)
+         {sql_mh_band_key()} AS band_key
+  FROM __sigs, range(0, {_PORTABLE_MH_BANDS}) b(v)
 ),
 __ev AS (SELECT doc_id FROM documents WHERE source IN ({ev})),
 __cand AS (
@@ -1204,7 +1205,8 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_dedup_oracle() -> str:
-    from .ext import sql_hs_sigs, sql_shingles
+    from ..functions.similarity import _PORTABLE_MH_BANDS
+    from .ext import sql_hs_sigs, sql_mh_band_key, sql_shingles
 
     return (
         f"""WITH __newb AS (
@@ -1225,12 +1227,12 @@ __corpus AS (
 """
         + sql_shingles("__corpus").strip().lstrip()
         + ",\n"
-        + sql_hs_sigs(12)
+        + sql_hs_sigs()
         + f""",
 __bands AS (
   SELECT doc_id, b.v AS band,
-         md5(CAST(sig[CAST(b.v * 3 + 1 AS INTEGER)] AS VARCHAR) || '|' || CAST(sig[CAST(b.v * 3 + 2 AS INTEGER)] AS VARCHAR) || '|' || CAST(sig[CAST(b.v * 3 + 3 AS INTEGER)] AS VARCHAR)) AS band_key
-  FROM __sigs, range(0, 4) b(v)
+         {sql_mh_band_key()} AS band_key
+  FROM __sigs, range(0, {_PORTABLE_MH_BANDS}) b(v)
 ),
 __cand AS (
   SELECT DISTINCT n.doc_id AS new_id, h.doc_id AS hist_id

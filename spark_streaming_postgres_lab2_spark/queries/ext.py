@@ -24,6 +24,10 @@ from ..functions.multimodal import (
     synthesize_media,
 )
 from ..functions.similarity import (
+    _PORTABLE_DIM,
+    _PORTABLE_MH_BANDS,
+    _PORTABLE_MH_HASHES,
+    _SHINGLE_N,
     PORTABLE_ADAPTIVE_CAP,
     PORTABLE_K_THRESHOLDS,
     _int_plane,
@@ -422,14 +426,15 @@ FROM cleaned
 """
 
 
-# Shingle CTEs shared by the fingerprint-blocking and minhash oracles:
-# tokens -> distinct word 3-grams (empty/whitespace docs yield an empty
+# Shingle CTEs shared by the portable minhash oracles: tokens ->
+# distinct word _SHINGLE_N-grams (empty/whitespace docs yield an empty
 # list, like text.shingles after the empty-doc fix)
 def sql_shingles(src: str = "documents") -> str:
     """The ``__tk``/``__shd`` shingle CTEs over any (doc_id, text)
     relation -- parametrized (r6) so cross-corpus operators
     (incremental_dedup's history-union-new corpus) compose the SAME
     shingle definition instead of copying it."""
+    n = _SHINGLE_N
     return f"""
 __tk AS (
   SELECT doc_id, list_filter(string_split(text, ' '), t -> t <> '') AS tk
@@ -439,9 +444,9 @@ __shd AS (
   SELECT doc_id,
          list_distinct(
            CASE WHEN len(tk) = 0 THEN CAST([] AS VARCHAR[])
-                WHEN len(tk) < 3 THEN [array_to_string(tk, ' ')]
-                ELSE list_transform(range(1, len(tk) - 1),
-                                    i -> array_to_string(tk[i:i+2], ' '))
+                WHEN len(tk) < {n} THEN [array_to_string(tk, ' ')]
+                ELSE list_transform(range(1, len(tk) - {n - 2}),
+                                    i -> array_to_string(tk[i:i+{n - 1}], ' '))
            END) AS sh
   FROM __tk
 )
@@ -607,7 +612,7 @@ FROM __th
 # join, exact verify) matches the Spark plan expression-for-expression.
 
 
-def sql_hs_sigs(num_hashes: int = 12) -> str:
+def sql_hs_sigs() -> str:
     """The `__hs`/`__sigs` CTE fragment (expects a `__shd(doc_id, sh)`
     CTE upstream): one md5-prefix int per shingle mod P, MinHash
     signature via the affine permutations of similarity._mh_ab --
@@ -619,7 +624,7 @@ def sql_hs_sigs(num_hashes: int = 12) -> str:
         "list_min(list_transform(h.hs, x -> ({a} * x + {b}) % 2147483647))".format(
             a=_mh_ab(i)[0], b=_mh_ab(i)[1]
         )
-        for i in range(num_hashes)
+        for i in range(_PORTABLE_MH_HASHES)
     )
     return f"""__hs AS (
   SELECT doc_id,
@@ -632,7 +637,17 @@ __sigs AS (
 )"""
 
 
-def _sql_minhash_pairs(threshold: float, num_hashes: int = 12, num_bands: int = 4) -> str:
+def sql_mh_band_key() -> str:
+    """md5 of band ``b.v``'s '|'-joined signature slice -- the
+    band_key of similarity._portable_shingle_bands."""
+    rows = _PORTABLE_MH_HASHES // _PORTABLE_MH_BANDS
+    return "md5(" + " || '|' || ".join(
+        f"CAST(sig[CAST(b.v * {rows} + {r + 1} AS INTEGER)] AS VARCHAR)"
+        for r in range(rows)
+    ) + ")"
+
+
+def _sql_minhash_pairs(threshold: float) -> str:
     """CTE chain (after _SQL_SHINGLES) producing verified near-dup
     pairs (doc_id_1, doc_id_2, jaccard) -- the DuckDB recomputation of
     minhash_near_dupes_portable: one md5-prefix int per shingle mod
@@ -640,16 +655,11 @@ def _sql_minhash_pairs(threshold: float, num_hashes: int = 12, num_bands: int = 
     mod P with the SAME MINSTD-power coefficients as similarity._mh_ab
     (emitted as literals below) -- all BIGINT arithmetic below 2^63,
     so both engines agree bit-for-bit."""
-    rows = num_hashes // num_bands
-    band_key = " || '|' || ".join(
-        f"CAST(sig[CAST(b.v * {rows} + {r + 1} AS INTEGER)] AS VARCHAR)"
-        for r in range(rows)
-    )
     return f"""
-{sql_hs_sigs(num_hashes)},
+{sql_hs_sigs()},
 __bands AS (
-  SELECT doc_id, b.v AS band, md5({band_key}) AS band_key
-  FROM __sigs, range(0, {num_bands}) b(v)
+  SELECT doc_id, b.v AS band, {sql_mh_band_key()} AS band_key
+  FROM __sigs, range(0, {_PORTABLE_MH_BANDS}) b(v)
 ),
 __cand AS (
   SELECT DISTINCT a.doc_id AS doc_id_1, b2.doc_id AS doc_id_2
@@ -838,7 +848,7 @@ def q_simhash_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 SimHash near-dup (the scale/bench flavor; rows-only --
     the algorithm itself is oracle-verified via simhash_near_dup).
     hamming <= 4: just past the pigeonhole-guaranteed recall bound
-    (num_bands=4 finds every pair under 4 bit errors); the fixture
+    (its 4 bands find every pair under 4 bit errors); the fixture
     corpus is a small-vocabulary word soup, so looser thresholds
     degenerate into quadratic pair counts."""
     from ..functions.similarity import simhash_near_dupes
@@ -1703,6 +1713,13 @@ def q_embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# embedding_lsh_near_dup_portable's fixed operating point, read by the
+# query and by its oracle builder.
+_EMB_LSH_THRESHOLD = 0.4
+_EMB_LSH_K = 4
+_EMB_LSH_L = 16
+
+
 def q_embedding_lsh_near_dup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-quantized hyperplane LSH near-dup -- the oracle-checkable
     twin of embedding_lsh_near_dup (VERDICT r3 item 1).  Bucketing is
@@ -1713,13 +1730,14 @@ def q_embedding_lsh_near_dup_portable(spark: SparkSession, sf_dir: str) -> DataF
     operating point the adaptive path picks at this corpus size."""
     t = load_tables(spark, sf_dir, ["embeddings"])
     return embedding_near_dupes_lsh_portable(
-        t["embeddings"], threshold=0.4, n_planes=4, n_tables=16, dim=64
+        t["embeddings"],
+        threshold=_EMB_LSH_THRESHOLD,
+        n_planes=_EMB_LSH_K,
+        n_tables=_EMB_LSH_L,
     ).orderBy("vec_id_1", "vec_id_2")
 
 
-def sql_emb_lsh_pair_ctes(
-    threshold: float = 0.4, n_planes: int = 4, n_tables: int = 16, dim: int = 64
-) -> str:
+def sql_emb_lsh_pair_ctes() -> str:
     """DuckDB recomputation of embedding_near_dupes_lsh_portable as a
     composable CTE chain ending in ``__vpairs`` (vec_id_1, vec_id_2,
     cosine_sim) -- the embedding analog of _sql_minhash_pairs, composed
@@ -1728,11 +1746,13 @@ def sql_emb_lsh_pair_ctes(
     keys match Spark's bit-for-bit (int math has no engine-dependent
     rounding); candidate join + exact cosine verify mirror the Spark
     plan expression-for-expression."""
+    n_planes, threshold = _EMB_LSH_K, _EMB_LSH_THRESHOLD
     bucket_exprs = []
-    for t in range(n_tables):
+    for t in range(_EMB_LSH_L):
         bits = []
         for j in range(n_planes):
-            arr = "[" + ",".join(str(p) for p in _int_plane(t * n_planes + j, dim)) + "]"
+            plane = _int_plane(t * n_planes + j, _PORTABLE_DIM)
+            arr = "[" + ",".join(str(p) for p in plane) + "]"
             bits.append(
                 "(CASE WHEN list_aggregate(list_transform(list_zip(qv, "
                 + arr
@@ -1782,7 +1802,7 @@ ORACLE_EMB_LSH_PORTABLE = (
 )
 
 
-def sql_emb_adaptive_bucket_ctes(dim: int = 64) -> str:
+def sql_emb_adaptive_bucket_ctes() -> str:
     """The cap-free adaptive bucketing PREFIX (``__planes`` .. ``__b``)
     shared by ``sql_emb_lsh_adaptive_pair_ctes`` (which appends the
     cap + self-join-pair suffix) and ``corpus._sem_decon_oracle``
@@ -1793,7 +1813,7 @@ def sql_emb_adaptive_bucket_ctes(dim: int = 64) -> str:
     ``PORTABLE_K_THRESHOLDS`` comment guards against)."""
     planes = ", ".join(
         f"({i}, ["
-        + ",".join(str(p) for p in _int_plane(i, dim))
+        + ",".join(str(p) for p in _int_plane(i, _PORTABLE_DIM))
         + "])"
         for i in range(96)
     )
@@ -1822,9 +1842,7 @@ __b AS (
 )"""
 
 
-def sql_emb_lsh_adaptive_pair_ctes(
-    threshold: float = 0.4, dim: int = 64, cap: int = PORTABLE_ADAPTIVE_CAP
-) -> str:
+def sql_emb_lsh_adaptive_pair_ctes(threshold: float = 0.4) -> str:
     """DuckDB recomputation of ``adaptive_lsh_pairs_portable`` as a CTE
     chain ending in ``__vpairs`` -- the ADAPTIVE sibling of
     ``sql_emb_lsh_pair_ctes`` (VERDICT r5 item 2).  Two things the fixed
@@ -1852,7 +1870,8 @@ def sql_emb_lsh_adaptive_pair_ctes(
         "sqrt(list_aggregate(list_transform({e}.embedding, "
         "x -> CAST(x AS DOUBLE) * x), 'sum'))"
     )
-    return f"""{sql_emb_adaptive_bucket_ctes(dim)},
+    cap = PORTABLE_ADAPTIVE_CAP
+    return f"""{sql_emb_adaptive_bucket_ctes()},
 __bann AS (
   SELECT vec_id, bucket,
          count(*) OVER (PARTITION BY bucket) AS n_in_bucket,

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.graph import (
+    PAGERANK_DAMPING_DEN,
+    PAGERANK_DAMPING_NUM,
     PAGERANK_SCALE,
     bfs_hops,
     pagerank_fixed_point,
@@ -121,6 +123,7 @@ def q_pagerank_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pagerank_oracle() -> str:
     scale = PAGERANK_SCALE
+    num, den = PAGERANK_DAMPING_NUM, PAGERANK_DAMPING_DEN
     ctes = [
         _EDGES_SQL.strip().rstrip(),
         "outdeg AS (SELECT src, CAST(count(*) AS BIGINT) AS odeg"
@@ -131,8 +134,8 @@ def _pagerank_oracle() -> str:
         ctes.append(
             f"""r{k} AS (
   SELECT nodes.id,
-         CAST((15 * (SELECT {scale} // n FROM nn)) // 100
-              + (85 * COALESCE(s.s, 0)) // 100 AS BIGINT) AS r
+         CAST(({den - num} * (SELECT {scale} // n FROM nn)) // {den}
+              + ({num} * COALESCE(s.s, 0)) // {den} AS BIGINT) AS r
   FROM nodes LEFT JOIN (
     SELECT e.dst AS id, SUM(p.r // o.odeg) AS s
     FROM edges e

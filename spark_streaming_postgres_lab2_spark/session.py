@@ -9,6 +9,8 @@ stream is planned at the core count in ``StreamingPipeline.start``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from .config import SparkConfig
@@ -40,6 +42,13 @@ def build_session(cfg: SparkConfig | None = None) -> SparkSession:
         .config(
             "spark.sql.join.preferSortMergeJoin",
             str(cfg.prefer_sort_merge_join).lower(),
+        )
+        # Python workers unpickle UDF closures that reference package
+        # functions by module, so they must import the package from any
+        # working directory: put the package's parent on their path
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
     )
     if cfg.driver_memory:

@@ -113,16 +113,14 @@ def _update_anomaly(
 
 
 def zscore_anomaly_stream(
-    stream: DataFrame,
-    time_col: str = "event_time",
-    bucket_seconds: int = BUCKET_SECONDS,
+    stream: DataFrame, bucket_seconds: int = BUCKET_SECONDS
 ) -> DataFrame:
-    """Stateful streaming anomaly flags (update mode).  Bucketing runs
-    JVM-side so only slim (event_type, bucket_id) rows reach the
-    grouped-state shuffle."""
+    """Stateful streaming anomaly flags (update mode) over
+    ``event_time`` buckets.  Bucketing runs JVM-side so only slim
+    (event_type, bucket_id) rows reach the grouped-state shuffle."""
     proj = stream.select(
         "event_type",
-        F.expr(f"unix_micros({time_col}) div {bucket_seconds * 1_000_000}").alias(
+        F.expr(f"unix_micros(event_time) div {bucket_seconds * 1_000_000}").alias(
             "bucket_id"
         ),
     )
@@ -147,11 +145,9 @@ TREND_IDLE_TIMEOUT_MS = 60_000  # evict keys idle this long
 
 
 def trending_stream(
-    stream: DataFrame,
-    key_col: str = "event_type",
-    idle_timeout_ms: int | None = TREND_IDLE_TIMEOUT_MS,
+    stream: DataFrame, idle_timeout_ms: int | None = TREND_IDLE_TIMEOUT_MS
 ) -> DataFrame:
-    """Per-key exponentially-decayed activity score (update mode):
+    """Per-event_type exponentially-decayed activity score (update mode):
     score <- score * TREND_DECAY + batch_count for every batch the key
     APPEARS in.  The stateful API never invokes absent keys, so a
     silent key cannot decay in place -- with ``idle_timeout_ms`` set
@@ -194,7 +190,7 @@ def trending_stream(
         else GroupStateTimeout.NoTimeout
     )
     return (
-        stream.select(F.col(key_col).alias("event_type"))
+        stream.select("event_type")
         .groupBy("event_type")
         .applyInPandasWithState(
             update,

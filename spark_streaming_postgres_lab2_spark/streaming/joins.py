@@ -10,32 +10,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .windows import _WATERMARK_DELAY
+
 
 def purchases_with_recent_views(
-    events: DataFrame,
-    ts_col: str = "event_time",
-    lookback: str = "1 hour",
-    watermark_delay: str = "10 minutes",
+    events: DataFrame, lookback: str = "1 hour"
 ) -> DataFrame:
     """Split one enriched event stream into purchases and views and
-    interval-join them: each purchase pairs with the same user's views
-    in the preceding ``lookback``."""
+    interval-join them on ``event_time``: each purchase pairs with the
+    same user's views in the preceding ``lookback``."""
     views = (
         events.filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user_id"),
-            F.col(ts_col).alias("view_time"),
+            F.col("event_time").alias("view_time"),
         )
-        .withWatermark("view_time", watermark_delay)
+        .withWatermark("view_time", _WATERMARK_DELAY)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select(
             "user_id",
-            F.col(ts_col).alias("purchase_time"),
+            F.col("event_time").alias("purchase_time"),
             "total_amount",
         )
-        .withWatermark("purchase_time", watermark_delay)
+        .withWatermark("purchase_time", _WATERMARK_DELAY)
     )
     return purchases.join(
         views,

@@ -73,8 +73,9 @@ class SinkConfig:
     metrics_path: str
 
 
-def write_partitioned_events(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Batch-layout twin of the sink: events partitioned by date parts,
+def write_partitioned_events(df: DataFrame, path: str) -> None:
+    """Batch-layout twin of the sink: overwrites ``path`` with the
+    events partitioned by date parts,
     so time-ranged analytics (A4/A7) prune whole directories instead of
     scanning history -- the Spark-side replacement for the reference's
     (event_time, event_type) B-tree indexes (postgres_setup.sql:43-52).
@@ -91,7 +92,7 @@ def write_partitioned_events(df: DataFrame, path: str, mode: str = "overwrite") 
     ]
     (
         df.sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("event_year", "event_month", "event_day")
         .parquet(path)
     )

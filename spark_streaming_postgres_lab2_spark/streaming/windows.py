@@ -10,23 +10,23 @@ analytics views (SURVEY §2.4 A4/A5 notes).
   lag/cumsum, queries/core.q_sessionization).
 
 Both are watermark-bounded so state is evicted and the operators run
-indefinitely at constant memory per key-window."""
+indefinitely at constant memory per key-window.  Both read the
+``event_time`` column."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# how late an event may arrive before its window's state is evicted
+_WATERMARK_DELAY = "10 minutes"
 
-def windowed_event_counts(
-    stream: DataFrame,
-    ts_col: str = "event_time",
-    window_duration: str = "1 hour",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
+
+def windowed_event_counts(stream: DataFrame) -> DataFrame:
+    """Hourly tumbling windows per event_type."""
     return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), window_duration), F.col("event_type"))
+        stream.withWatermark("event_time", _WATERMARK_DELAY)
+        .groupBy(F.window(F.col("event_time"), "1 hour"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("event_count"),
             F.approx_count_distinct("user_id").alias("approx_unique_users"),
@@ -43,15 +43,11 @@ def windowed_event_counts(
     )
 
 
-def session_window_rollup(
-    stream: DataFrame,
-    ts_col: str = "event_time",
-    gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
+def session_window_rollup(stream: DataFrame) -> DataFrame:
+    """Per-user sessions closed by a 30-minute gap."""
     return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col("user_id"))
+        stream.withWatermark("event_time", _WATERMARK_DELAY)
+        .groupBy(F.session_window(F.col("event_time"), "30 minutes"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("event_count"),
             F.count(F.when(F.col("event_type") == "purchase", 1)).alias("purchase_count"),

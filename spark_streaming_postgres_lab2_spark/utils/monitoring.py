@@ -32,17 +32,18 @@ class Alert:
 
 
 class PipelineMonitor:
+    # alert when a batch's validity drops below this share, or when one
+    # error type reaches this share of a batch's rows
+    min_validity_rate = 0.95
+    error_concentration_threshold = 0.10
+
     def __init__(
         self,
-        min_validity_rate: float = 0.95,
         max_latency_seconds: float = 10.0,
-        error_concentration_threshold: float = 0.10,
         escalation_breaches: int = 3,
         window_size: int = 100,
     ):
-        self.min_validity_rate = min_validity_rate
         self.max_latency_seconds = max_latency_seconds
-        self.error_concentration_threshold = error_concentration_threshold
         self.escalation_breaches = escalation_breaches
         self.window: deque[BatchQualityMetrics] = deque(maxlen=window_size)
         self.alerts: list[Alert] = []

@@ -486,9 +486,7 @@ def test_kmeans_assign_literal_zero_norm_centroid_ranks_last(spark):
 
     got = {
         r.vec_id: r.cluster
-        for r in _kmeans_assign_literal(
-            corpus, cents, "vec_id", "embedding"
-        ).collect()
+        for r in _kmeans_assign_literal(corpus, cents).collect()
     }
 
     cents_df = spark.createDataFrame(

@@ -906,3 +906,19 @@ def test_blame_exemption_matches_exact_repo_relative_path():
     )
     assert not _is_blame_exempt(str(REPO / "session.py"))
     assert not _is_blame_exempt("/somewhere/else/session.py")
+
+
+def test_tools_resolve_their_own_checkout(tmp_path, monkeypatch):
+    """Each tool puts ITS checkout first on sys.path, so a copy run from
+    another checkout (a parent copy for an A/B, a benchmark run in a
+    fresh directory) imports that checkout's package and queries."""
+    import runpy
+
+    tools = tmp_path / "tools"
+    tools.mkdir()
+    for name in ("parity_check.py", "plan_report.py", "scaling_report.py"):
+        copy = tools / name
+        copy.write_text((REPO / "tools" / name).read_text())
+        monkeypatch.setattr(sys, "path", list(sys.path))
+        runpy.run_path(str(copy), run_name="tool_copy")
+        assert sys.path[0] == str(tmp_path), name

@@ -193,6 +193,41 @@ def test_build_session_leaves_a_live_session_as_it_is(spark):
         spark.conf.set("spark.sql.shuffle.partitions", "4")
 
 
+def test_python_workers_import_the_package_from_any_directory(tmp_path):
+    """A pandas-UDF scorer run from outside the checkout, with no
+    PYTHONPATH: the Python workers still import the package, because
+    build_session hands them its parent directory."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from spark_streaming_postgres_lab2_spark.functions.similarity import cosine_topk
+from spark_streaming_postgres_lab2_spark.session import build_session
+
+spark = build_session()
+vecs = spark.createDataFrame(
+    [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
+    "vec_id long, embedding array<float>",
+)
+rows = cosine_topk(vecs, vecs.filter("vec_id = 3"), k=3).collect()
+print(sorted((r["vec_id"], r["cosine_sim"]) for r in rows))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "1"
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    # the query vector itself is not its own neighbour
+    assert r.stdout.strip().splitlines()[-1] == "[(1, 0.7071), (2, 0.7071)]"
+
+
 def test_run_pipeline_flags_default_to_stream_env(monkeypatch):
     """Unset CLI flags must not override the STREAM_* environment."""
     from types import SimpleNamespace
@@ -226,19 +261,6 @@ def test_jdbc_url_shape():
     cfg = DatabaseConfig()
     assert cfg.jdbc_url.startswith("jdbc:postgresql://")
     assert cfg.jdbc_properties()["batchsize"] == "5000"
-
-
-def test_resize_stub_shapes(spark, media):
-    from spark_streaming_postgres_lab2_spark.functions.multimodal import resize_stub
-
-    out = resize_stub(media, target_bytes=128).collect()
-    assert len(out) == 50
-    assert all(len(r["content"]) == 128 and r["n_bytes"] == 128 for r in out)
-    # deterministic
-    again = resize_stub(media, target_bytes=128).collect()
-    assert {r["media_id"]: bytes(r["content"]) for r in out} == {
-        r["media_id"]: bytes(r["content"]) for r in again
-    }
 
 
 def test_wav_codec_round_trip_and_rejects_malformed():

@@ -70,7 +70,7 @@ def test_simhash_near_dup_hamming_bound_and_order(spark):
     out = simhash_near_dupes(docs, max_hamming=8).collect()
     pairs = {(r.doc_id_1, r.doc_id_2): r.hamming for r in out}
     # identical docs: hamming 0, guaranteed found (pigeonhole: any pair
-    # under num_bands=4 bit errors has a clean band)
+    # under 4 bit errors has a clean band in the 4 bands)
     assert pairs.get((3, 4)) == 0
     # short docs flip many bits on a one-word swap, so (1, 2) is NOT
     # guaranteed; every reported pair must respect order + threshold

@@ -438,15 +438,13 @@ def test_int_bucketer_rejects_bad_dims(spark):
         [(1, [1.0] * 64), (2, [1.0] * 8)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(Exception, match="static dim"):
-        _int_hyperplane_buckets_arrow(bad, "vec_id", "embedding", 4, 16, 64).collect()
+        _int_hyperplane_buckets_arrow(bad, 4, 16, 64).collect()
 
     withnull = spark.createDataFrame(
         [(1, [1.0] * 64), (2, None)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(Exception, match=r"NULL embedding .*\[2\]"):
-        _int_hyperplane_buckets_arrow(
-            withnull, "vec_id", "embedding", 4, 16, 64
-        ).collect()
+        _int_hyperplane_buckets_arrow(withnull, 4, 16, 64).collect()
 
 
 def test_lsh_verify_drops_undefined_cosines(spark, tmp_path):
